@@ -47,6 +47,8 @@ object Cli {
       noEmptyFile: Boolean = false,
       avoidDecimal: Boolean = false,
       preferVarbinary: Boolean = false,
+      /** --sequential-fetching: parsed and recorded, changes nothing —
+        * Spark's JDBC reader has no double-buffered fetch to turn off */
       sequentialFetching: Boolean = false,
       /** partitioned (parallel) JDBC read: N concurrent result-set cursors
         * over disjoint ranges of this numeric column — the beyond-reference
@@ -323,7 +325,9 @@ object Cli {
       |  --batch-size-memory BYTES, --row-groups-per-file N, --file-size-threshold BYTES,
       |  --column-compression-default CODEC, --column-compression-level-default N,
       |  --parquet-column-encoding COL:ENC, --column-length-limit N, --suffix-length N,
-      |  --no-empty-file, --avoid-decimal, --prefer-varbinary, --sequential-fetching,
+      |  --no-empty-file, --avoid-decimal, --prefer-varbinary,
+      |  --sequential-fetching (accepted so reference command lines parse; a
+      |    no-op: Spark's JDBC reader has no double-buffered fetch to turn off),
       |  --no-physical-fidelity (skip FLBA/TIME parquet annotations; keeps
       |    output Spark-readable — annotated TIME columns need a TIME-aware
       |    reader like DuckDB),

@@ -16,16 +16,24 @@ import scala.jdk.CollectionConverters._
   *    compressed byte threshold (`--file-size-threshold`)
   *  - `--no-empty-file`: an empty result yields no file at all; otherwise a
   *    schema-only file (parquet_writer.rs:117-121,156-158)
-  *  - default compression zstd (main.rs:159-161); row group ≈ one batch
+  *  - default compression zstd (main.rs:159-161); every row group holds at
+  *    most one batch (`parquet.block.row.count.limit` = batch rows)
   *  - `-` streams a single parquet to stdout (parquet_writer.rs:192-230)
   *
   * Scale posture: Spark tasks write part files in parallel into a staging
   * directory (atomic-commit protocol replaces the reference's
-  * tempfile+persist crash safety); the post-pass only RENAMES files — it
-  * never moves bytes — except for the optional single-file mode, which is
-  * inherently a one-writer operation (`coalesce(1)`), exactly like the
-  * reference's single-process writer. On a cluster you'd leave splitting on
-  * and skip single-file mode; the semantics knobs are what parity requires.
+  * tempfile+persist crash safety). The post-pass runs on the driver with
+  * no Spark job: a final file made of one part that needs no fidelity
+  * retype is RENAMED; any other final file (a split bin of several parts,
+  * or a file needing FLBA/TIME fidelity) is written once by
+  * [[PhysicalFormat.assemble]], which appends the parts' row groups as raw
+  * column chunks and re-encodes only BINARY → FLBA(n) columns. Output files
+  * therefore keep the parts' row groups, codec, level, writer version,
+  * dictionary choices, page indexes and footer key-value metadata. The
+  * non-split single-file mode writes through one task (`coalesce(1)`),
+  * like the reference's single-process writer. On a cluster you'd leave
+  * splitting on and skip single-file mode; the semantics knobs are what
+  * parity requires.
   */
 object ParquetSink {
 
@@ -135,6 +143,8 @@ object ParquetSink {
         .option("compression", opts.compression)
         // PARQUET_2_0 writer parity by default (reference parquet_writer.rs:45-47)
         .option("parquet.writer.version", opts.writerVersion)
+        // one fetch batch == at most one row group, whatever its bytes
+        .option("parquet.block.row.count.limit", opts.batchRows.toString)
       opts.compressionLevel.foreach(l =>
         out = out.option("parquet.compression.codec.zstd.level", l.toString))
       opts.columnDictionary.foreach { case (c, on) =>
@@ -169,13 +179,14 @@ object ParquetSink {
         p.getFileName.toString.endsWith(".parquet"))
       .toSeq.sortBy(_.getFileName.toString)
 
-    // cheap emptiness probe against the WRITTEN files (footer-only read,
-    // not a re-execution of the source plan) — and only when the answer
-    // matters: noEmptyFile is the sole consumer, so the default path skips
-    // the extra Spark job entirely
+    // cheap emptiness probe against the WRITTEN files: their footers' row
+    // counts, not a re-execution of the source plan
     if (opts.noEmptyFile) {
-      val nonEmpty = parts.nonEmpty &&
-        df.sparkSession.read.parquet(stagingDir).head(1).nonEmpty
+      val nonEmpty = parts.exists { p =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          PhysicalFormat.inputFile(p))
+        try r.getRecordCount > 0 finally r.close()
+      }
       if (!nonEmpty) {
         deleteRecursively(staging)
         return Seq.empty
@@ -187,30 +198,44 @@ object ParquetSink {
       else if (opts.rowGroupsPerFile > 0) parts.map(Seq(_))
       else Seq(parts)
 
-    // physical-format fidelity pass (FLBA(n) / TIME annotations — see
-    // [[PhysicalFormat]]): applied per FINAL file, after merge, before the
-    // destination rename — so a crash mid-rewrite never leaves a
-    // half-faithful file at the destination path
-    def fidelity(p: Path): Path = {
-      if (opts.physicalFidelity)
-        PhysicalFormat.rewrite(p, df.schema, opts.compression,
-          opts.compressionLevel, opts.writerVersion, opts.columnDictionary)
-      p
+    // one pass per FINAL file, after the parallel write and before the
+    // destination rename — so a crash mid-pass never leaves a half-written
+    // file at the destination path: the bin's parts are appended row group
+    // by row group under the fidelity footer (FLBA(n) / TIME annotations —
+    // see [[PhysicalFormat]]); a lone part needing no retype is renamed
+    val retype = opts.physicalFidelity && PhysicalFormat.needed(df.schema)
+    val encoding = PhysicalFormat.Encoding(opts.compression, opts.compressionLevel,
+      opts.writerVersion, opts.columnDictionary)
+    def finalFile(bin: Seq[Path], n: Int): Path = {
+      val inputs =
+        if (bin.nonEmpty) bin
+        else { // a zero-row result's schema-only file (parquet_writer.rs:117-121)
+          val dir = staging.resolve("empty").toString
+          configured(df.limit(0).coalesce(1).write).parquet(dir)
+          Seq(firstPart(dir))
+        }
+      if (inputs.size == 1 && !retype) inputs.head
+      else {
+        val out = staging.resolve(s"final-$n.parquet")
+        PhysicalFormat.assemble(inputs, out,
+          if (retype) PhysicalFormat.targetType(_, df.schema) else identity, encoding)
+        out
+      }
     }
     val outputs: Seq[Path] =
       if (outPath == "-") {
-        val merged = fidelity(mergeBin(df, binned.head, staging, opts))
+        val merged = finalFile(binned.head, 1)
         Files.copy(merged, System.out)
         System.out.flush()
         Seq.empty
       } else if (binned.size <= 1) {
-        val merged = fidelity(mergeBin(df, binned.headOption.getOrElse(Seq.empty), staging, opts))
+        val merged = finalFile(binned.headOption.getOrElse(Seq.empty), 1)
         val dest = Paths.get(outPath)
         if (dest.getParent != null) Files.createDirectories(dest.getParent)
         Seq(move(merged, dest))
       } else {
         binned.zipWithIndex.map { case (bin, i) =>
-          val merged = fidelity(mergeBin(df, bin, staging, opts))
+          val merged = finalFile(bin, i + 1)
           val dest = Paths.get(suffixedPath(outPath, i + 1, opts.suffixLength))
           if (dest.getParent != null) Files.createDirectories(dest.getParent)
           move(merged, dest)
@@ -248,25 +273,6 @@ object ParquetSink {
     if (current.nonEmpty) bins += current
     bins.result()
   }
-
-  /** A bin of 1 part is renamed as-is (no byte movement); >1 parts are
-    * rewritten into one file via a single-partition Spark job. An empty bin
-    * (zero-row result) writes a schema-only file. */
-  private def mergeBin(df: DataFrame, bin: Seq[Path], staging: Path, opts: Options): Path =
-    bin match {
-      case Seq(single) => single
-      case Seq() =>
-        val dir = staging.resolve("empty").toString
-        df.limit(0).coalesce(1).write.mode("overwrite")
-          .option("compression", opts.compression).parquet(dir)
-        firstPart(dir)
-      case many =>
-        val dir = staging.resolve(s"merge-${many.head.getFileName}").toString
-        df.sparkSession.read.parquet(many.map(_.toString): _*)
-          .coalesce(1).write.mode("overwrite")
-          .option("compression", opts.compression).parquet(dir)
-        firstPart(dir)
-    }
 
   private def firstPart(dir: String): Path =
     Files.list(Paths.get(dir)).iterator().asScala

@@ -1,14 +1,14 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.TimeUnit
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.column.{ColumnDescriptor, ParquetProperties}
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader, ParquetWriter}
-import org.apache.parquet.io.api.Binary
+import org.apache.parquet.hadoop.{CodecFactory, ColumnChunkPageWriteStore, ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, LocalOutputFile, SeekableInputStream}
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.spark.sql.types.StructType
@@ -29,14 +29,17 @@ import scala.jdk.CollectionConverters._
   *    so the values travel as ints tagged `graft.time.unit`; the annotation
   *    makes the FILE self-describing for non-graft readers.
   *
-  * Mechanics: a driver-side streaming re-encode of the finished output file
-  * with parquet-mr's Group API — read each record, re-emit under the target
-  * MessageType, atomic same-directory rename. This runs once per FINAL
-  * output file on the CLI sink path (one file, or the split series), which
-  * is exactly the reference's own execution shape: its writer is a
-  * single-process stream too. The distributed write that produced the file
-  * stays Spark-native; only files whose schema carries a fidelity tag pay
-  * the extra pass, and the pass moves bytes once, never shuffles.
+  * Mechanics: [[assemble]] writes one file from N Spark-written files under
+  * a target MessageType, row group by row group, at the column-chunk level.
+  * A column whose physical type stays (every TIME annotate or strip, every
+  * untagged column) is copied as its raw compressed chunk — pages,
+  * dictionary, statistics, column and offset index — so only the footer
+  * changes. Only a BINARY → FLBA(n) column is decoded and re-encoded, one
+  * chunk at a time. The output keeps the inputs' row groups exactly (one
+  * per fetch batch, like the reference's writer), their codec, encodings
+  * and footer key-value metadata. The sink runs it once per FINAL output
+  * file, merging a split bin's parts in the same pass; graft's own read
+  * paths run it to strip TIME annotations ([[readSparkCompatible]]).
   */
 object PhysicalFormat {
 
@@ -46,89 +49,210 @@ object PhysicalFormat {
       f.metadata.contains(TypeMapping.FixedLenKey) ||
         f.metadata.contains(TypeMapping.TimeUnitKey))
 
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Writer settings for the chunks [[assemble]] re-encodes; raw-copied
+    * chunks keep whatever their input file had. */
+  final case class Encoding(
+      compression: String = "zstd",
+      compressionLevel: Option[Int] = None,
+      writerVersion: String = "v2",
+      columnDictionary: Map[String, Boolean] = Map.empty)
+
   /** Rewrite `file` in place so tagged columns carry the faithful physical
-    * type / logical annotation. No-op when [[needed]] is false.
-    *
-    * Preserved from the Spark-written file: values, compression codec +
-    * level, writer version, per-column dictionary toggles (v1 writer), and
-    * APPROXIMATELY the row-group cadence — the writer's row-group byte
-    * target is set to the source file's largest row group, so a
-    * row-groups-per-batch layout re-rolls at about the same stride
-    * (parquet-mr rolls on buffered bytes, so exact row counts per group
-    * are not reproducible through this API). File-level splitting (C2) is
-    * decided per FILE before this pass and is unaffected. */
+    * type / logical annotation. No-op when [[needed]] is false. Row groups,
+    * encodings and footer metadata are kept ([[assemble]]). */
   def rewrite(file: Path, schema: StructType, compression: String,
       compressionLevel: Option[Int], writerVersion: String,
       columnDictionary: Map[String, Boolean] = Map.empty): Unit = {
     if (!needed(schema)) return
-    val conf = new Configuration()
-    compressionLevel.foreach(l =>
-      conf.setInt("parquet.compression.codec.zstd.level", l))
-    columnDictionary.foreach { case (c, on) =>
-      conf.setBoolean(s"parquet.enable.dictionary#$c", on)
-    }
-    val hPath = new org.apache.hadoop.fs.Path(file.toString)
-    val (srcSchema, maxBlockBytes) = {
-      val fr = org.apache.parquet.hadoop.ParquetFileReader
-        .open(HadoopInputFile.fromPath(hPath, conf))
-      try {
-        val footer = fr.getFooter
-        val blocks = footer.getBlocks.asScala
-        (footer.getFileMetaData.getSchema,
-          if (blocks.isEmpty) ParquetWriter.DEFAULT_BLOCK_SIZE.toLong
-          else blocks.map(_.getTotalByteSize).max)
-      } finally fr.close()
-    }
-    val target = targetType(srcSchema, schema)
     val tmp = file.resolveSibling("." + file.getFileName.toString + ".fidelity")
-    Files.deleteIfExists(tmp)
-    copyFile(hPath, tmp, target, conf, codec(compression),
-      if (writerVersion == "v1") ParquetWriter.DEFAULT_WRITER_VERSION
-      else org.apache.parquet.column.ParquetProperties.WriterVersion.PARQUET_2_0,
-      maxBlockBytes.max(64L * 1024))
+    assemble(Seq(file), tmp, targetType(_, schema),
+      Encoding(compression, compressionLevel, writerVersion, columnDictionary))
     Files.move(tmp, file, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Stream every record of `src` into `dest` under `target`'s schema
-    * (values copied field-wise, tagged binaries padded — [[copyGroup]]). */
-  private def copyFile(src: org.apache.hadoop.fs.Path, dest: Path,
-      target: MessageType, conf: Configuration,
-      codecName: CompressionCodecName,
-      version: org.apache.parquet.column.ParquetProperties.WriterVersion,
-      rowGroupBytes: Long): Unit = {
-    val reader: ParquetReader[Group] =
-      ParquetReader.builder(new GroupReadSupport(), src).withConf(conf).build()
+  /** Concatenate the row groups of `inputs` (one schema, flat primitive
+    * columns — the CLI's schema surface, SURVEY §1.1) into `dest` under
+    * `retype(input schema)`. A column whose physical type is unchanged is
+    * appended as its raw chunk; BYTE_ARRAY → FIXED_LEN_BYTE_ARRAY(n) is
+    * re-encoded with values zero-padded to n, a longer value an error. The
+    * footer carries the first input's key-value metadata — less Spark's
+    * stored row schema when the footer is retyped: that schema describes
+    * the inputs, and Spark would read a TIME column through it as plain
+    * ints instead of rejecting it (the interop contract FooterSpec pins). */
+  def assemble(inputs: Seq[Path], dest: Path, retype: MessageType => MessageType,
+      enc: Encoding = Encoding()): Unit = {
+    require(inputs.nonEmpty, "assemble needs at least one input file")
+    val readers = inputs.map(p => ParquetFileReader.open(inputFile(p)))
     try {
-      val writer: ParquetWriter[Group] = ExampleParquetWriter
-        .builder(HadoopOutputFile.fromPath(
-          new org.apache.hadoop.fs.Path(dest.toString), conf))
-        .withType(target)
-        .withConf(conf)
-        .withCompressionCodec(codecName)
-        .withRowGroupSize(rowGroupBytes)
-        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
-        .withWriterVersion(version)
-        .build()
+      val meta = readers.head.getFileMetaData
+      val src = meta.getSchema
+      readers.zip(inputs).foreach { case (r, p) =>
+        require(r.getFileMetaData.getSchema == src,
+          s"$p has a different schema than ${inputs.head}")
+      }
+      val target = retype(src)
+      val retyped = src.getColumns.asScala.zip(target.getColumns.asScala).collect {
+        case (s, t) if s.getPrimitiveType.getPrimitiveTypeName !=
+            t.getPrimitiveType.getPrimitiveTypeName =>
+          require(s.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.BINARY &&
+            t.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY,
+            s"cannot retype ${s.getPrimitiveType} to ${t.getPrimitiveType}")
+          s.getPath.toSeq -> t
+      }.toMap
+      val props = properties(enc)
+      // row groups arrive whole, so the writer's row-group size and padding
+      // never apply
+      val writer = new ParquetFileWriter(new LocalOutputFile(dest), target,
+        ParquetFileWriter.Mode.OVERWRITE, ParquetProperties.DEFAULT_PAGE_SIZE.toLong, 0,
+        null, props)
+      val codecs = new CodecFactory(zstdConf(enc), props.getPageSizeThreshold)
       try {
-        val factory = new SimpleGroupFactory(target)
-        var g = reader.read()
-        while (g != null) {
-          writer.write(copyGroup(g, target, factory))
-          g = reader.read()
+        writer.start()
+        readers.zip(inputs).foreach { case (r, p) =>
+          if (retyped.nonEmpty)
+            r.setRequestedSchema(new MessageType(src.getName,
+              src.getFields.asScala.filter(f => retyped.contains(Seq(f.getName))).asJava))
+          val stream = inputFile(p).newStream()
+          try r.getRowGroups.asScala.zipWithIndex.foreach { case (block, bi) =>
+            lazy val decoded = new ColumnReadStoreImpl(r.readRowGroup(bi), NoConverter,
+              src, r.getFileMetaData.getCreatedBy)
+            writer.startBlock(block.getRowCount)
+            block.getColumns.asScala.foreach { chunk =>
+              val path = chunk.getPath.toArray
+              retyped.get(path.toSeq) match {
+                case None =>
+                  writer.appendColumnChunk(target.getColumnDescription(path), stream,
+                    chunk, r.readBloomFilter(chunk), r.readColumnIndex(chunk),
+                    r.readOffsetIndex(chunk))
+                case Some(t) =>
+                  padChunk(decoded.getColumnReader(src.getColumnDescription(path)),
+                    t, block.getRowCount, codecs.getCompressor(codec(enc.compression)),
+                    props, writer)
+              }
+            }
+            writer.endBlock()
+          } finally stream.close()
         }
-      } finally writer.close()
-    } finally reader.close()
+        writer.end(
+          if (target == src) meta.getKeyValueMetaData
+          else (meta.getKeyValueMetaData.asScala - SparkSchemaKey).asJava)
+      } catch {
+        case e: Throwable =>
+          writer.close()
+          Files.deleteIfExists(dest)
+          throw e
+      } finally codecs.release()
+    } finally readers.foreach(_.close())
   }
+
+  /** Re-encode one BYTE_ARRAY chunk as FIXED_LEN_BYTE_ARRAY(n) into the
+    * writer's open row group, zero-padding each value to n. */
+  private def padChunk(reader: org.apache.parquet.column.ColumnReader,
+      target: ColumnDescriptor, rows: Long,
+      compressor: CodecFactory.BytesCompressor, props: ParquetProperties,
+      writer: ParquetFileWriter): Unit = {
+    val prim = target.getPrimitiveType
+    val schema = new MessageType("chunk", prim)
+    val pageStore = new ColumnChunkPageWriteStore(compressor, schema,
+      props.getAllocator, props.getColumnIndexTruncateLength,
+      props.getPageWriteChecksumEnabled)
+    val columns = props.newColumnWriteStore(schema, pageStore)
+    val out = columns.getColumnWriter(target)
+    val width = prim.getTypeLength
+    val maxDef = target.getMaxDefinitionLevel
+    var i = 0L
+    while (i < rows) {
+      val d = reader.getCurrentDefinitionLevel
+      if (d == maxDef) {
+        val raw = reader.getBinary.getBytes
+        require(raw.length <= width,
+          s"fixed BINARY($width) column '${prim.getName}' received ${raw.length} bytes")
+        out.write(Binary.fromConstantByteArray(
+          if (raw.length == width) raw else java.util.Arrays.copyOf(raw, width)), 0, d)
+      } else out.writeNull(0, d)
+      reader.consume()
+      columns.endRecord()
+      i += 1
+    }
+    columns.flush()
+    pageStore.flushToFileWriter(writer)
+    columns.close()
+    pageStore.close()
+  }
+
+  /** The column reader needs a record converter to exist; the assembler
+    * pulls values straight from the reader and never materializes. */
+  private object NoConverter extends GroupConverter {
+    private val primitive = new PrimitiveConverter {}
+    def getConverter(fieldIndex: Int): Converter = primitive
+    def start(): Unit = ()
+    def end(): Unit = ()
+  }
+
+  /** A local file as a parquet InputFile whose stream reads through a
+    * FileChannel in bulk — parquet-mr's LocalInputFile reads a chunk copy
+    * one byte per call. */
+  private[sources] def inputFile(p: Path): InputFile = new InputFile {
+    def getLength: Long = Files.size(p)
+    def newStream(): SeekableInputStream = {
+      val ch = java.nio.channels.FileChannel.open(p)
+      new DelegatingSeekableInputStream(java.nio.channels.Channels.newInputStream(ch)) {
+        def getPos: Long = ch.position
+        def seek(pos: Long): Unit = ch.position(pos)
+      }
+    }
+  }
+
+  private def properties(enc: Encoding): ParquetProperties = {
+    val b = ParquetProperties.builder().withWriterVersion(
+      if (enc.writerVersion == "v1") ParquetProperties.WriterVersion.PARQUET_1_0
+      else ParquetProperties.WriterVersion.PARQUET_2_0)
+    enc.columnDictionary.foreach { case (c, on) => b.withDictionaryEncoding(c, on) }
+    b.build()
+  }
+
+  private def zstdConf(enc: Encoding): Configuration = {
+    val conf = new Configuration()
+    enc.compressionLevel.foreach(l =>
+      conf.setInt("parquet.compression.codec.zstd.level", l))
+    conf
+  }
+
+  /** One TIME-stripped copy per source file, keyed by absolute path and
+    * replaced (the old copy deleted) when the source's length or mtime
+    * changes — a long-lived JVM re-reading the same files holds one copy
+    * each, not one per read. */
+  private val stripped = scala.collection.mutable.Map.empty[Path, ((Long, Long), Path)]
+
+  private def strippedCopy(src: Path, stripType: MessageType => MessageType): Path =
+    stripped.synchronized {
+      val key = src.toAbsolutePath.normalize
+      val stamp = (Files.size(key), Files.getLastModifiedTime(key).to(TimeUnit.NANOSECONDS))
+      stripped.get(key) match {
+        case Some((`stamp`, copy)) if Files.exists(copy) => copy
+        case previous =>
+          previous.foreach { case (_, old) => Files.deleteIfExists(old) }
+          val copy = Files.createTempFile("graft-timeread", ".parquet")
+          copy.toFile.deleteOnExit()
+          assemble(Seq(key), copy, stripType)
+          stripped(key) = (stamp, copy)
+          copy
+      }
+    }
 
   /** The INVERSE pass, for graft's own read paths (insert/exec/tables-dir):
     * Spark's reader rejects TIME-annotated columns, so a fidelity file
     * written by `query` would be unreadable by `insert` — while the
     * reference's insert reads its own TIME output fine (input.rs reads
     * physical ints). Strips TIME logical annotations (same physical
-    * INT32/INT64) into an ephemeral sibling of java.io.tmpdir and reads
-    * THAT, re-attaching the `graft.time.unit` field metadata the stripped
-    * annotation carried. FLBA needs no strip (Spark reads it as binary).
-    * Files without TIME annotations read directly — zero-copy fast path. */
+    * INT32/INT64 — a footer-only change, [[assemble]] copies every chunk
+    * raw) into a copy in java.io.tmpdir and reads THAT, re-attaching the
+    * `graft.time.unit` field metadata the stripped annotation carried.
+    * FLBA needs no strip (Spark reads it as binary). Files without TIME
+    * annotations read directly — zero-copy fast path. Either way the read
+    * takes its schema from one footer, not from a Spark inference job. */
   def readSparkCompatible(spark: org.apache.spark.sql.SparkSession,
       file: Path): org.apache.spark.sql.DataFrame = {
     val conf = new Configuration()
@@ -140,59 +264,51 @@ object PhysicalFormat {
     // it, or a glob over it must all strip per-file, not crash in
     // ParquetFileReader.open
     val matched = Option(fs.globStatus(hPath)).map(_.toSeq).getOrElse(Seq.empty)
-    val candidates: Seq[org.apache.hadoop.fs.Path] = matched.flatMap { st =>
+    val candidates: Seq[Path] = matched.flatMap { st =>
       if (st.isDirectory)
         fs.listStatus(st.getPath).toSeq
           .filter(c => c.isFile && !c.getPath.getName.startsWith("_") &&
             !c.getPath.getName.startsWith("."))
           .map(_.getPath)
       else Seq(st.getPath)
-    }
+    }.map(p => Paths.get(p.toUri))
     if (candidates.isEmpty) return spark.read.parquet(file.toString)
-    def timeUnitsOf(p: org.apache.hadoop.fs.Path):
-        (MessageType, Map[String, String]) = {
-      val fr = org.apache.parquet.hadoop.ParquetFileReader
-        .open(HadoopInputFile.fromPath(p, conf))
-      val schema = try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-      val units = schema.getFields.asScala.collect {
+    def timeUnitsOf(p: Path): Map[String, String] = {
+      val fr = ParquetFileReader.open(inputFile(p))
+      val schema = try fr.getFileMetaData.getSchema finally fr.close()
+      schema.getFields.asScala.collect {
         case f if f.isPrimitive &&
             f.getLogicalTypeAnnotation.isInstanceOf[LogicalTypeAnnotation.TimeLogicalTypeAnnotation] =>
           val u = f.getLogicalTypeAnnotation
             .asInstanceOf[LogicalTypeAnnotation.TimeLogicalTypeAnnotation].getUnit
           f.getName -> u.toString.toLowerCase
       }.toMap
-      (schema, units)
     }
     val inspected = candidates.map(p => (p, timeUnitsOf(p)))
-    if (inspected.forall(_._2._2.isEmpty))
-      return spark.read.parquet(file.toString)
-    // strip each TIME-bearing member into an ephemeral sibling; untouched
-    // members read in place. Strip targets must outlive this call (Spark
-    // reads lazily) but not the process — deleteOnExit bounds the leak
-    // for the CLI's one-shot lifetime.
-    val readPaths = inspected.map { case (p, (srcSchema, units)) =>
+    // one footer read instead of Spark's schema-inference job: the members
+    // share one schema (once stripped), as Spark's own inference assumes
+    def readAs(schemaOf: String, paths: String*) = spark.read
+      .schema(org.apache.spark.sql.GraftBridge.parquetSchemaOf(spark, schemaOf))
+      .parquet(paths: _*)
+    if (inspected.forall(_._2.isEmpty))
+      return readAs(candidates.head.toString, file.toString)
+    // strip each TIME-bearing member into its cached copy; untouched
+    // members read in place. Copies must outlive this call (Spark reads
+    // lazily); deleteOnExit removes them when the JVM ends.
+    val readPaths = inspected.map { case (p, units) =>
       if (units.isEmpty) p.toString
-      else {
-        val stripped = new MessageType(srcSchema.getName,
-          srcSchema.getFields.asScala.toSeq.map { f =>
-            if (units.contains(f.getName))
-              Types.primitive(f.asPrimitiveType().getPrimitiveTypeName,
-                f.getRepetition).named(f.getName)
-            else f
-          }.asJava)
-        val tmp = Files.createTempFile("graft-timeread", ".parquet")
-        Files.deleteIfExists(tmp)
-        tmp.toFile.deleteOnExit()
-        copyFile(p, tmp, stripped, conf, CompressionCodecName.ZSTD,
-          ParquetWriter.DEFAULT_WRITER_VERSION,
-          ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
-        tmp.toString
-      }
+      else strippedCopy(p, src => new MessageType(src.getName,
+        src.getFields.asScala.toSeq.map { f =>
+          if (units.contains(f.getName))
+            Types.primitive(f.asPrimitiveType().getPrimitiveTypeName,
+              f.getRepetition).named(f.getName)
+          else f
+        }.asJava)).toString
     }
     // splits of one logical output share a schema, so the unit map is the
     // union (identical per column across members)
-    val timeUnits = inspected.flatMap(_._2._2).toMap
-    val raw = spark.read.parquet(readPaths: _*)
+    val timeUnits = inspected.flatMap(_._2).toMap
+    val raw = readAs(readPaths.head, readPaths: _*)
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.MetadataBuilder
     raw.select(raw.schema.fieldNames.toIndexedSeq.map { n =>
@@ -207,7 +323,7 @@ object PhysicalFormat {
   /** The source file's MessageType with tagged fields replaced: FLBA(n) for
     * fixed-width binary tags, TIME-annotated INT32/INT64 for time tags;
     * every untagged field carried through untouched. */
-  private def targetType(src: MessageType, schema: StructType): MessageType = {
+  def targetType(src: MessageType, schema: StructType): MessageType = {
     val fields: Seq[Type] = src.getFields.asScala.toSeq.map { f =>
       val name = f.getName
       schema.fields.find(_.name == name) match {
@@ -230,47 +346,8 @@ object PhysicalFormat {
     new MessageType(src.getName, fields.asJava)
   }
 
-  /** Copy one flat record into the target schema, padding tagged binaries
-    * to their declared fixed width. The CLI schema surface is flat
-    * primitives (SURVEY §1.1: the reference rejects nested columns), so a
-    * per-field primitive copy is total. */
-  private def copyGroup(src: Group, target: MessageType,
-      factory: SimpleGroupFactory): Group = {
-    val out = factory.newGroup()
-    var i = 0
-    val n = target.getFieldCount
-    while (i < n) {
-      if (src.getFieldRepetitionCount(i) > 0) {
-        val t = target.getType(i).asPrimitiveType()
-        t.getPrimitiveTypeName match {
-          case PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY =>
-            val raw = src.getBinary(i, 0).getBytes
-            val width = t.getTypeLength
-            require(raw.length <= width,
-              s"fixed BINARY($width) column '${t.getName}' received ${raw.length} bytes")
-            val padded =
-              if (raw.length == width) raw
-              else java.util.Arrays.copyOf(raw, width)
-            out.add(i, Binary.fromConstantByteArray(padded))
-          case PrimitiveTypeName.BINARY =>
-            out.add(i, src.getBinary(i, 0))
-          case PrimitiveTypeName.INT32 => out.add(i, src.getInteger(i, 0))
-          case PrimitiveTypeName.INT64 => out.add(i, src.getLong(i, 0))
-          case PrimitiveTypeName.BOOLEAN => out.add(i, src.getBoolean(i, 0))
-          case PrimitiveTypeName.FLOAT => out.add(i, src.getFloat(i, 0))
-          case PrimitiveTypeName.DOUBLE => out.add(i, src.getDouble(i, 0))
-          case PrimitiveTypeName.INT96 =>
-            throw new IllegalStateException(
-              "INT96 cannot appear: the sink always writes annotated INT64 timestamps")
-        }
-      }
-      i += 1
-    }
-    out
-  }
-
   /** Spark's parquet codec vocabulary, mapped 1:1 — an unknown name is an
-    * ERROR, never a silent substitution (the rewritten file must carry
+    * ERROR, never a silent substitution (a re-encoded chunk must carry
     * exactly the codec the caller asked the sink for). */
   private def codec(name: String): CompressionCodecName = name.toLowerCase match {
     case "zstd" => CompressionCodecName.ZSTD

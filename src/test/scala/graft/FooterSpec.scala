@@ -276,4 +276,132 @@ class FooterSpec extends AnyFunSuite {
     // the untouched column keeps its dictionary
     assert(encodings(out2, "p_brand").exists(_.contains("DICTIONARY")))
   }
+
+  private def rowGroups(p: java.nio.file.Path): Seq[Long] =
+    footer(p).getBlocks.asScala.map(_.getRowCount).toSeq
+
+  test("non-split writes roll one row group per batch, never a whole-file group") {
+    val out = Files.createTempDirectory("graft-footer").resolve("rg.par")
+    ParquetSink.write(spark.range(0, 25000).toDF("id"), out.toString,
+      ParquetSink.Options(batchRows = 10000))
+    val groups = rowGroups(out)
+    assert(groups.sum == 25000)
+    assert(groups.size >= 3 && groups.forall(_ <= 10000), s"row groups: $groups")
+  }
+
+  /** `n` rows of an id, a TIME(3) column, a BINARY(16) column of 0..16-byte
+    * values (every 50th NULL) and a text column. */
+  private def fidelityFrame(n: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.functions.TypeMapping
+    def field(name: String, t: TypeMapping.SqlType) =
+      TypeMapping.field(TypeMapping.SourceColumn(name, t), TypeMapping.MappingOptions())
+    val rows = (0 until n).map { i =>
+      Row(i.toLong, Int.box((i * 7919) % 86400000),
+        if (i % 50 == 0) null else Array.tabulate[Byte](i % 17)(j => (i + j + 1).toByte),
+        s"row-$i-${i * 31 % 97}")
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      field("t_ms", TypeMapping.SqlTime(3)), field("b", TypeMapping.SqlBinary(16)),
+      StructField("txt", StringType))))
+  }
+
+  private def expectedBytes(i: Int): Seq[Byte] =
+    if (i % 50 == 0) null
+    else Array.tabulate[Byte](16)(j => if (j < i % 17) (i + j + 1).toByte else 0).toSeq
+
+  test("split fidelity output: parts' row groups appended, TIME/FLBA footer, indexes kept") {
+    val n = 6000
+    val df = fidelityFrame(n)
+    val dir = Files.createTempDirectory("graft-footer-asm")
+    val written = ParquetSink.write(df, dir.resolve("f.par").toString,
+      ParquetSink.Options(batchRows = 500, fileSizeThresholdBytes = 16 * 1024))
+    assert(written.size >= 2, s"expected a split, got $written")
+    val groups = written.map(rowGroups)
+    assert(groups.flatten.sum == n && groups.flatten.forall(_ <= 500), s"row groups: $groups")
+    assert(groups.exists(_.size > 1), s"no file merged several parts: $groups")
+    written.foreach { f =>
+      assert(primitive(f, "t_ms").getLogicalTypeAnnotation.toString == "TIME(MILLIS,false)")
+      assert(primitive(f, "b").getPrimitiveTypeName.toString == "FIXED_LEN_BYTE_ARRAY")
+      assert(primitive(f, "b").getTypeLength == 16)
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString), new Configuration()))
+      try r.getRowGroups.asScala.foreach(_.getColumns.asScala.foreach { c =>
+        assert(r.readColumnIndex(c) != null, s"$f ${c.getPath}: no column index")
+        assert(r.readOffsetIndex(c) != null, s"$f ${c.getPath}: no offset index")
+      }) finally r.close()
+    }
+    // values round-trip through graft's own reader; FLBA values zero-padded
+    val back = graft.sources.PhysicalFormat.readSparkCompatible(spark, dir)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(back.size == n)
+    (0 until n).foreach { i =>
+      val r = back(i.toLong)
+      assert(r.getInt(1) == (i * 7919) % 86400000)
+      assert(Option(r.getAs[Array[Byte]](2)).map(_.toSeq).orNull == expectedBytes(i), s"row $i")
+      assert(r.getString(3) == s"row-$i-${i * 31 % 97}")
+    }
+  }
+
+  test("assemble keeps each part's row groups exactly; an over-long BINARY(n) fails") {
+    import graft.sources.PhysicalFormat
+    val df = fidelityFrame(3000)
+    val partsDir = Files.createTempDirectory("graft-footer-parts").resolve("p")
+    df.repartition(3).write.option("parquet.block.row.count.limit", "400")
+      .parquet(partsDir.toString)
+    val parts = Files.list(partsDir).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sorted
+    val out = Files.createTempDirectory("graft-footer-asm").resolve("one.parquet")
+    PhysicalFormat.assemble(parts, out, PhysicalFormat.targetType(_, df.schema))
+    assert(rowGroups(out) == parts.flatMap(rowGroups))
+    assert(rowGroups(out).size > parts.size, "each part should hold several row groups")
+
+    val tooLong = df.select(col("id"), col("b").as("b",
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .putLong(graft.functions.TypeMapping.FixedLenKey, 4L).build()))
+    val e = intercept[Exception](ParquetSink.write(tooLong,
+      Files.createTempDirectory("graft-footer").resolve("long.par").toString,
+      ParquetSink.Options(batchRows = 500, fileSizeThresholdBytes = 16 * 1024)))
+    assert(e.getMessage.contains("fixed BINARY(4) column 'b' received"), e.getMessage)
+  }
+
+  test("--no-physical-fidelity merges keep the v2 encodings and the zstd level") {
+    val df = fidelityFrame(6000)
+    def merged(level: Int) = {
+      val dir = Files.createTempDirectory("graft-footer-nofid")
+      val written = ParquetSink.write(df, dir.resolve("m.par").toString,
+        ParquetSink.Options(batchRows = 500, fileSizeThresholdBytes = 16 * 1024,
+          compressionLevel = Some(level), physicalFidelity = false))
+      assert(written.exists(rowGroups(_).size > 1), "no file merged several parts")
+      written
+    }
+    val fast = merged(1)
+    val small = merged(19)
+    (fast ++ small).foreach { f =>
+      footer(f).getBlocks.asScala.foreach { b =>
+        val id = b.getColumns.asScala.find(_.getPath.toDotString == "id").get
+        assert(id.getEncodings.asScala.map(_.toString).contains("DELTA_BINARY_PACKED"),
+          s"$f: ${id.getEncodings}")
+      }
+    }
+    assert(small.map(Files.size(_)).sum < fast.map(Files.size(_)).sum,
+      "zstd level 19 output must be smaller than level 1")
+  }
+
+  test("TIME-stripped read copies are reused per unchanged file and replaced on change") {
+    import graft.sources.PhysicalFormat
+    val f = Files.createTempDirectory("graft-footer-strip").resolve("t.par")
+    ParquetSink.write(fidelityFrame(100), f.toString, ParquetSink.Options())
+    val first = PhysicalFormat.readSparkCompatible(spark, f).inputFiles.toSeq
+    val second = PhysicalFormat.readSparkCompatible(spark, f).inputFiles.toSeq
+    assert(first.size == 1 && first == second, s"$first vs $second")
+    ParquetSink.write(fidelityFrame(200), f.toString, ParquetSink.Options())
+    val third = PhysicalFormat.readSparkCompatible(spark, f)
+    assert(third.inputFiles.toSeq != first)
+    assert(third.count() == 200)
+    assert(!Files.exists(java.nio.file.Paths.get(new java.net.URI(first.head))),
+      "the superseded copy must be deleted")
+  }
 }
