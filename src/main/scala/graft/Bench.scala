@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints the one-line JSON contract. A warmup pass at sf0.001 absorbs JVM,
   * codegen, and parquet-footer costs so measured numbers reflect steady-
@@ -22,38 +20,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // parquet reader policy pinned at session build so timestamp
-      // dtypes never depend on whether an events load ran first
-      // (Tables.events also sets these lazily for ad-hoc sessions)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    // single-node bench: spill/shuffle scratch on tmpfs when available —
-    // a machine-level IO knob (a real cluster provisions fast local disks
-    // for exactly this), not a semantics change. java.io.tmpdir must NOT
-    // move there: /dev/shm is commonly mounted noexec and snappy-java
-    // extracts its native library into java.io.tmpdir.
-    // triage toggles (SPARK_GRAFT_SHM / SPARK_GRAFT_GC=false) isolate the
-    // protocol pieces when attributing run-to-run variance to the harness
-    // rather than to query code.
-    val useShm = sys.env.getOrElse("SPARK_GRAFT_SHM", "true").toBoolean
-    if (useShm &&
-        java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm"))) {
-      builder.config("spark.local.dir", "/dev/shm/graft-bench")
-      // tmpfs shuffle: compression is pure CPU overhead at memory speed
-      builder.config("spark.shuffle.compress", "false")
-      builder.config("spark.shuffle.spill.compress", "false")
-    }
-    builder.config("spark.locality.wait", "0")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus(32), "graft-bench", "ERROR", tmpfsScratch = true)
 
     // Index-bearing queries (s2 LSH signatures, s3 IVF): the persisted
     // artifacts build once and serve every later execution, so pay the
@@ -201,17 +168,18 @@ object Bench {
     *     with empty per_query/scaling blocks because the driver parses
     *     only the final JSON line): values below a threshold T keep one
     *     decimal, values ≥ T round to the nearest integer second. T
-    *     walks down 2.0 → 1.0 → 0.55 → 0.35 → 0.2 until the line fits
-    *     [[ContractBudget]]; at the current 216-query inventory T=0.55
+    *     walks down 2.0 → 1.0 → 0.55 → 0.5 until the line fits
+    *     [[ContractBudget]] — never below 0.5, where a nonzero time would
+    *     round to `0`; at the current 216-query inventory T=0.55
     *     fits with ~10 chars to spare. Big queries — the only ones whose
     *     round-over-round deltas clear the noise floor — lose at most
     *     0.5 s of resolution; full decisecond times stay in
     *     bench_full.json and the bench-full stdout line for humans.
-    *  3. Once even the T=0.2 map outgrows the budget (~260+ queries),
-    *     the contract DROPS its map and shrinks to a fixed ~130 chars,
-    *     and the times move to compact `bench-times` chunk lines just
-    *     above it: a JSON string payload of `name:deciseconds` pairs,
-    *     chunked ≤ [[ChunkChars]] per line.
+    *  3. Once even the T=0.5 map outgrows the budget, the contract
+    *     DROPS its map and shrinks to a fixed ~130 chars, and the times
+    *     move to compact `bench-times` chunk lines just above it: a JSON
+    *     string payload of `name:deciseconds` pairs, chunked
+    *     ≤ [[ChunkChars]] per line.
     *  4. If even the times chunks cannot fit (≫250 queries), drop the
     *     spread line first, then the chunks last-first (earliest chunks
     *     are cut by the tail anyway); the full map still lives in
@@ -256,7 +224,7 @@ object Bench {
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","failed":$failed,"sf":"$sfShort","queries":$m}"""
     }
-    val mixed = Seq(2.0, 1.0, 0.55, 0.35, 0.2).map(contractMixed)
+    val mixed = Seq(2.0, 1.0, 0.55, 0.5).map(contractMixed)
       .find(_.length <= ContractBudget)
     classic.orElse(mixed) match {
       case Some(c) =>

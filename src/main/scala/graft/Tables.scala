@@ -116,12 +116,8 @@ object Tables {
     * layout (`ts_ns` in the original ts slot, `ts` appended) so positional
     * consumers see one shape.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val raw = t(spark, dir, "events")
-    normalizeEventTs(raw)
-  }
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeEventTs(t(Session.pin(spark), dir, "events"))
 
   /** Schema-sniffing normalization shared by the batch loader and the
     * streaming feed reader: any frame with a `ts` column in one of the known

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -27,19 +26,7 @@ object Verify {
     // optional trailing args: run only these queries (dev loop; the
     // driver always passes exactly two args → full run)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // parquet reader policy pinned at session build so timestamp
-      // dtypes never depend on whether an events load ran first
-      // (Tables.events also sets these lazily for ad-hoc sessions)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4), "graft-verify", "WARN")
     new java.io.File(outDir).mkdirs()
     // queries that THREW (analysis or execution): recorded in errors.json so
     // the dump is self-contained — a consumer sees explicit error rows

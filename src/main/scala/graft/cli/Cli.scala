@@ -1,6 +1,7 @@
 package graft.cli
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import graft.functions.QueryParams
 import graft.sources.{BatchSizeLimit, JdbcSink, ParquetSink}
@@ -409,35 +410,16 @@ object Cli {
     case _ => "DEBUG"
   }
 
-  def session(verbosity: Int = 0): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // parquet reader policy pinned at session build so timestamp
-      // dtypes never depend on whether an events load ran first
-      // (Tables.events also sets these lazily for ad-hoc sessions)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // applied at context start so -q silences startup logging too
-      .config("spark.log.level", logLevel(verbosity))
-      .getOrCreate()
-    s.sparkContext.setLogLevel(logLevel(verbosity))
-    s
-  }
+  def session(verbosity: Int = 0): SparkSession =
+    graft.Session.local(graft.Session.cpus(32), "graft", logLevel(verbosity))
 
   private def readQueryText(q: String): String =
     if (q == "-") scala.io.Source.stdin.mkString else q
 
   def runQuery(conf: Conf, sparkOpt: Option[SparkSession] = None): Seq[java.nio.file.Path] = {
     val Vector(out, sqlArg, params @ _*) = conf.positional: @unchecked
-    val spark = sparkOpt.getOrElse(session(conf.verbosity))
+    val spark = sparkOpt.map(graft.Session.pin).getOrElse(session(conf.verbosity))
     spark.sparkContext.setLogLevel(logLevel(conf.verbosity))
-    graft.functions.TimeKernels.registerAll(spark)
     val baseSql = QueryParams.substitute(readQueryText(sqlArg), params.toSeq)
     // watermark-incremental pull: wrap the (arbitrary) user query as a
     // derived table and predicate on the monotone column — the WHERE
@@ -483,12 +465,9 @@ object Cli {
         conf.password.foreach(p => r = r.option("password", p))
         r.load()
       case (None, Some(dir)) =>
-        // parquet TIMESTAMP(NANOS) columns surface as epoch-nanos longs —
-        // same policy as TypeMapping (Spark tops out at micros); MICROS
-        // columns surface as TimestampType with the raw stored value
-        // (NTZ inference off), matching Tables.events' sniffing contract
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        // the pinned reader policy (graft.Session.pin) surfaces parquet
+        // TIMESTAMP(NANOS) columns as epoch-nanos longs — same policy as
+        // TypeMapping — and MICROS columns as TimestampType
         Files.list(Paths.get(dir)).iterator().asScala
           .filter(_.getFileName.toString.endsWith(".parquet"))
           .foreach { p =>
@@ -536,7 +515,7 @@ object Cli {
         if (!mx.isNullAt(0)) {
           val stateP = Paths.get(conf.statePath.get).toAbsolutePath
           val tmp = Files.createTempFile(stateP.getParent, ".graft-state", ".tmp")
-          Files.write(tmp, mx.get(0).toString.getBytes("UTF-8"))
+          Files.write(tmp, watermarkLiteral(mx.get(0)).getBytes("UTF-8"))
           Files.move(tmp, stateP,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -546,11 +525,20 @@ object Cli {
     written
   }
 
+  /** The landed max as the literal the next pull splices after `col >`,
+    * valid on the JDBC and the tables-dir path: numbers bare, any other
+    * type quoted with `'` doubled, for the engine to coerce. */
+  private def watermarkLiteral(v: Any): String = v match {
+    case d: java.math.BigDecimal => d.toPlainString
+    case n: java.lang.Number => n.toString
+    case other => "'" + other.toString.replace("'", "''") + "'"
+  }
+
   def runInsert(conf: Conf, sparkOpt: Option[SparkSession] = None): Unit = {
     val Vector(file, table) = conf.positional: @unchecked
     val url = conf.connectionString.getOrElse(
       throw new IllegalArgumentException("--connection-string is required for insert"))
-    val spark = sparkOpt.getOrElse(session())
+    val spark = sparkOpt.map(graft.Session.pin).getOrElse(session())
     // readSparkCompatible: graft's own TIME-annotated fidelity output
     // must be insertable, like the reference's insert reads its own files
     JdbcSink.insert(graft.sources.PhysicalFormat.readSparkCompatible(
@@ -561,7 +549,7 @@ object Cli {
     val Vector(statement, file) = conf.positional: @unchecked
     val url = conf.connectionString.getOrElse(
       throw new IllegalArgumentException("--connection-string is required for exec"))
-    val spark = sparkOpt.getOrElse(session())
+    val spark = sparkOpt.map(graft.Session.pin).getOrElse(session())
     JdbcSink.exec(graft.sources.PhysicalFormat.readSparkCompatible(
       spark, Paths.get(file)), statement, url, conf.batchSizeRow)
   }
@@ -605,7 +593,7 @@ object Cli {
       if (rest.size != n) throw new IllegalArgumentException(
         s"lake $verb needs exactly: $shape (got ${rest.size} " +
           s"positional(s))\n$usage")
-    lazy val spark = sparkOpt.getOrElse(session(conf.verbosity))
+    lazy val spark = sparkOpt.map(graft.Session.pin).getOrElse(session(conf.verbosity))
     verb match {
       case "commit" =>
         arity(2, "TABLE_DIR IN_PARQUET")
@@ -896,12 +884,5 @@ object Cli {
     case other => throw new IllegalArgumentException(
       s"unsupported shell '$other'; expected one of: " +
         "bash, zsh, fish, elvish, powershell")
-  }
-
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge.{column => toCol, expression => toExpr}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, TernaryExpression}
@@ -163,13 +163,4 @@ object QuantizeFunctions {
   /** PQ approximate dot from a precomputed LUT (see [[PqKernels.pqLutScore]]). */
   def pqLutScore(lutCol: Column, code: Column, ks: Int): Column =
     toCol(PqLutScore(toExpr(lutCol), toExpr(code), toExpr(lit(ks))))
-
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    GraftBridge.registerFunction(spark, "sq8_adc_dot",
-      e => Sq8AdcDot(e(0), e(1), e(2), e(3)))
-    GraftBridge.registerFunction(spark, "pq_lut",
-      e => PqLut(e(0), e(1), e(2), e(3)))
-    GraftBridge.registerFunction(spark, "pq_lut_score",
-      e => PqLutScore(e(0), e(1), e(2)))
-  }
 }

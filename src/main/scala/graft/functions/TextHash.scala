@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge.{column => toCol, expression => toExpr}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -175,10 +175,4 @@ object TextHashFunctions {
   def fnv64(c: Column): Column = toCol(Fnv64(toExpr(c)))
   def min_kgram_hash(c: Column): Column = toCol(MinKgramHash(toExpr(c)))
   def simhash64(tokens: Column): Column = toCol(SimHash64(toExpr(tokens)))
-
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    GraftBridge.registerFunction(spark, "fnv64", e => Fnv64(e.head))
-    GraftBridge.registerFunction(spark, "min_kgram_hash", e => MinKgramHash(e.head))
-    GraftBridge.registerFunction(spark, "simhash64", e => SimHash64(e.head))
-  }
 }

@@ -134,11 +134,7 @@ object TimeKernels {
   def timestamp_tz_to_micros(c: Column): Column = toCol(TimestampTzTextToMicros(toExpr(c)))
   def micros_of_day_to_text(c: Column): Column = toCol(MicrosOfDayToText(toExpr(c)))
 
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    GraftBridge.registerFunction(spark, "time_text_to_micros", e => TimeTextToMicros(e.head))
-    GraftBridge.registerFunction(spark, "time_text_to_millis", e => TimeTextToMillis(e.head))
-    GraftBridge.registerFunction(spark, "time_text_to_nanos", e => TimeTextToNanos(e.head))
-    GraftBridge.registerFunction(spark, "timestamp_tz_to_micros", e => TimestampTzTextToMicros(e.head))
-    GraftBridge.registerFunction(spark, "micros_of_day_to_text", e => MicrosOfDayToText(e.head))
-  }
+  /** Every [[graft.GraftExtensions]] SQL function, as [[graft.Session.pin]]. */
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+    GraftBridge.applyFunctionExtensions(spark, new graft.GraftExtensions)
 }

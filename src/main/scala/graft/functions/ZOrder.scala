@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge.{column => toCol, expression => toExpr}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -74,7 +74,4 @@ object ZOrderFunctions {
     else least(lit(65535), greatest(lit(0),
       ((c.cast("double") - lit(lo)) / lit(hi - lo) * lit(65535.0)).cast("int")))
   }
-
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftBridge.registerFunction(spark, "zorder2", e => ZOrder2(e(0), e(1)))
 }

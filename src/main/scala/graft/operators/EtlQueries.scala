@@ -19,15 +19,12 @@ object EtlQueries {
     * fsync latency per micro-batch while every lake gate already ran on
     * tmpfs — same machine-IO posture as Bench's spark.local.dir choice. */
   private[graft] def scratchDir(prefix: String): java.nio.file.Path = {
-    // SPARK_GRAFT_SHM_SCRATCH=false: triage/production toggle — scratch
-    // falls back to java.io.tmpdir (mirrors Bench's SPARK_GRAFT_SHM knob)
-    val useShm = sys.env.getOrElse("SPARK_GRAFT_SHM_SCRATCH", "true").toBoolean
     val shm = java.nio.file.Paths.get("/dev/shm")
-    // auto-fallback (round-17 ADVICE): containers commonly mount a tiny
-    // /dev/shm (64 MB default) — staging feeds/checkpoints there would
-    // ENOSPC mid-gate, so require real headroom before choosing tmpfs
-    // rather than relying on the env toggle alone
-    val shmUsable = useShm && Files.isDirectory(shm) &&
+    // auto-fallback to java.io.tmpdir (round-17 ADVICE): containers
+    // commonly mount a tiny /dev/shm (64 MB default) — staging
+    // feeds/checkpoints there would ENOSPC mid-gate, so require real
+    // headroom before choosing tmpfs
+    val shmUsable = Files.isDirectory(shm) &&
       (try Files.getFileStore(shm).getUsableSpace > (1L << 30)
        catch { case _: java.io.IOException => false })
     val dir =
@@ -1236,8 +1233,9 @@ object EtlQueries {
     val names = src.select(col("c_name")).distinct()
     val n = names.count()
     val lo = src.agg(min(col("c_name"))).head().getString(0)
+    // limit takes an Int: past Int.MaxValue names, fail instead of wrapping
     val qhi = names.orderBy(col("c_name"))
-      .limit(math.max(1L, n / 4).toInt)
+      .limit(Math.toIntExact(math.max(1L, n / 4)))
       .agg(max(col("c_name"))).head().getString(0)
     val (kept, skipped) = SnapshotLog.prunedFilesString(dir, "c_name", lo, qhi)
     val ok = kept.nonEmpty && skipped.nonEmpty

@@ -642,9 +642,9 @@ object RelationalExt {
     *
     * Width-guarded ([[Scans.wide]], round 17): a failing TRY cast pays a
     * constructed-and-caught SparkNumberFormatException PER VALUE inside
-    * Spark's Cast(TRY) codegen (CastProbe: the two always-failing casts
-    * alone cost 1.37 s vs 0.07 s for the same casts on parseable input —
-    * 18×), making this a compute-dense per-row kernel whose parallelism
+    * Spark's Cast(TRY) codegen (OPTIMIZATION_r17.md: the two
+    * always-failing casts alone cost 1.37 s vs 0.07 s for the same casts
+    * on parseable input — 18×), making this a compute-dense per-row kernel whose parallelism
     * ceiling is the scan's split count, not data volume. Identity at
     * warehouse file counts. */
   def q72TryCast(s: SparkSession, d: String): DataFrame =

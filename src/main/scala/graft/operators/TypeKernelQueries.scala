@@ -29,7 +29,7 @@ object TypeKernelQueries {
     // vs 1 double). The project does not reorder rows: the sort keys are
     // the unique (l_orderkey, l_linenumber) base columns. Measured
     // 2.16 s → 0.77 s at sf0.1, bit-identical output
-    // (graft.tools.SortExperiment).
+    // (OPTIMIZATION_r16.md).
     lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
       .orderBy(col("l_orderkey"), col("l_linenumber"))

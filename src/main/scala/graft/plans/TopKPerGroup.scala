@@ -94,6 +94,14 @@ object TopKStrategy extends SparkStrategy {
 
 /** DataFrame-level API. */
 object TopKPerGroup {
+  /** Plan the node on `spark`: [[TopKStrategy]] joins its
+    * `extraStrategies` unless already there. */
+  def installStrategy(spark: SparkSession): Unit = {
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(TopKStrategy))
+      spark.experimental.extraStrategies = strategies :+ TopKStrategy
+  }
+
   /** Rows of `df` keeping only the `k` best rows per group; `orderCols`
     * pairs a column with `true` for ascending / `false` for descending
     * (catalyst SortOrder is built directly — Column.desc wraps
@@ -107,9 +115,7 @@ object TopKPerGroup {
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    installStrategy(spark)
     val child = GraftBridge.analyzedPlan(df)
     // plain column references resolved against the analyzed child — the
     // operator takes key/order COLUMNS, not arbitrary expressions

@@ -112,8 +112,7 @@ object StreamingOps {
     * deployment does the same once at stream definition time, not
     * per micro-batch. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    graft.Session.pin(spark)
     // one direct footer read instead of spark.read.parquet inference —
     // the feed's files share one schema by construction (copies of one
     // source file, or stageFeed writes of one frame shape), and the

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid (round 16): quantify the fixed per-query cost components the
   * bench pays 216 times — parquet schema inference + file listing at
   * read() time, job scheduling at materialize() time — so optimization
@@ -9,14 +7,7 @@ import org.apache.spark.sql.SparkSession
 object FloorProbe {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus(32), "graft-floorprobe", "ERROR")
     def timeN(n: Int)(f: => Unit): Double = {
       f // warm
       val t0 = System.nanoTime(); (1 to n).foreach(_ => f)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Job-timeline profile of one declared query (round 17, guide §1):
   * run `<query>` once warm + once measured with a listener recording
@@ -15,14 +14,7 @@ object JobProfile {
     val name = args.headOption.getOrElse(sys.error("usage: JobProfile <query> [sfDir]"))
     val sf = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus(32), "graft-jobprofile", "ERROR")
     val fn = graft.SparkEntry.queries(name)
 
     def once(label: String): Unit = {

@@ -31,19 +31,7 @@ object Measure {
       absent.foreach(p => println(s"== $p SKIPPED (not a directory)"))
       present
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-measure")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // parquet reader policy pinned at session build so timestamp
-      // dtypes never depend on whether an events load ran first
-      // (Tables.events also sets these lazily for ad-hoc sessions)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus(8), "graft-measure", "ERROR")
     dirs.foreach { d =>
       println(s"== $d")
       measureOne(spark, d)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid: print the executed plan of named gate queries —
   * `sbt "runMain graft.tools.PlanDump q55_funnel d15_source_overlap"`.
   * The audit loop is: dump the plan here, decide what property makes it
@@ -25,17 +23,8 @@ object PlanDump {
         case n => names += n; i += 1
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", if (dir.isDefined) "32" else "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // parquet reader policy pinned at session build so timestamp
-      // dtypes never depend on whether an events load ran first
-      // (Tables.events also sets these lazily for ad-hoc sessions)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus(if (dir.isDefined) 32 else 4),
+      "graft-plandump", "ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       if (dir.isDefined) "/root/testdata/sf0.1" else "/root/testdata/sf0.001")
     for (n <- names) {

@@ -71,7 +71,6 @@ object ScaleProbe {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     if (args.drop(1).headOption.contains("meta")) { metaMain(base); return }
     val factor = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // replica dir is keyed by BASE CORPUS NAME + factor — two base dirs
     // must never share a replica path (a stale _OK marker would silently
     // serve the other corpus's data)
@@ -79,33 +78,8 @@ object ScaleProbe {
       s"${System.getProperty("java.io.tmpdir")}/graft-scale") +
       s"/${new java.io.File(base).getName}-x$factor"
 
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    // triage passthrough: SPARK_GRAFT_CONF="k=v;k=v" sets arbitrary session
-    // confs (e.g. spark.sql.adaptive.coalescePartitions.enabled=false to
-    // attribute an anomaly to AQE coalescing)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v.trim)
-        case _ if kv.trim.isEmpty => ()
-        case _ => sys.error(s"SPARK_GRAFT_CONF entry needs k=v, got: '$kv'")
-      }
-    })
-    // same machine-level IO posture as Bench (see Bench.scala): shuffle
-    // scratch on tmpfs, java.io.tmpdir untouched (snappy-java needs exec)
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm"))) {
-      builder.config("spark.local.dir", "/dev/shm/graft-bench")
-      builder.config("spark.shuffle.compress", "false")
-      builder.config("spark.shuffle.spill.compress", "false")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.cpus(32), "graft-scaleprobe", "ERROR",
+      tmpfsScratch = true)
 
     ensureReplica(spark, base, scaleDir, factor)
 
@@ -271,13 +245,7 @@ object ScaleProbe {
     */
   private def metaMain(base: String): Unit = {
     import graft.sources.SnapshotLog
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]").appName("graft-metaladder")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus(32), "graft-metaladder", "WARN")
     val docs = spark.read.parquet(s"$base/documents.parquet")
     def timed(f: => Unit): Double = {
       System.gc(); val t0 = System.nanoTime(); f

@@ -12,13 +12,6 @@ object GraftBridge {
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  def registerFunction(
-      spark: SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
-
   def analyzedPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
@@ -133,15 +126,18 @@ object GraftBridge {
   }
 
   /** Apply an extensions installer's function registrations to a LIVE
-    * session (normally they only take effect at session build time via
-    * `spark.sql.extensions`). Used by tests and by hosts that receive an
-    * already-built session. */
+    * session (normally done at build time via `spark.sql.extensions`).
+    * Idempotent and quiet: a name the session already resolves stays, so
+    * a re-pin logs no "replaced a previously registered function". */
   def applyFunctionExtensions(
       spark: SparkSession,
       installer: SparkSessionExtensions => Unit): Unit = {
-    val ext = new SparkSessionExtensions
-    installer(ext)
-    ext.registerFunctions(
-      spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry)
+    val registry = spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+    installer(new SparkSessionExtensions {
+      override def injectFunction(fd: FunctionDescription): Unit = {
+        val (name, info, builder) = fd
+        if (!registry.functionExists(name)) registry.registerFunction(name, info, builder)
+      }
+    })
   }
 }

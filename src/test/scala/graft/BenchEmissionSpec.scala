@@ -99,6 +99,18 @@ class BenchEmissionSpec extends AnyFunSuite {
     }
   }
 
+  test("the mixed-precision map never serializes a nonzero time as 0") {
+    // 216 queries at 0.4 s: too long for every one-decimal rung, short
+    // enough as whole seconds — a rung rounding to integers below 0.5 s
+    // would emit each of them as 0
+    val mins = synth(216).map { case (k, _) => k -> 0.4 }
+    val lines = Bench.emission(mins, spreadsFor(mins), 86.4, 0, "sf0.1")
+    val got = recover(tailOf(lines))
+    mins.foreach { case (k, _) =>
+      assert(got.get(k).contains(4L), s"$k: 0.4 s came back as ${got.get(k)} ds")
+    }
+  }
+
   test("a 230-query suite survives the 2000-char tail with every time recoverable") {
     val mins = synth(230)
     val lines = Bench.emission(mins, spreadsFor(mins), 400.0, 0, "sf0.1")

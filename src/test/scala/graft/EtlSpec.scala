@@ -204,6 +204,56 @@ class EtlSpec extends AnyFunSuite {
     }
   }
 
+  test("cli: --incremental-column on TIMESTAMP and string columns pulls only the delta") {
+    val db = s"cliincq${System.nanoTime()}"
+    val url = s"jdbc:derby:memory:$db;create=true"
+    try {
+      val ddl = java.sql.DriverManager.getConnection(url)
+      try ddl.createStatement().execute(
+        "CREATE TABLE wm_src (id INT, ts TIMESTAMP, k VARCHAR(16))")
+      finally ddl.close()
+      // every key carries a quote, so the stored string watermark only
+      // splices back into valid SQL if the quote is escaped
+      def rows(from: Int, until: Int) = spark.range(from, until).select(
+        col("id").cast("int").as("id"),
+        timestamp_seconds(lit(1704067200L) + col("id")).as("ts"),
+        format_string("k'%04d", col("id")).as("k"))
+      JdbcSink.insert(rows(0, 600), url, "wm_src")
+      val dir = tmp()
+      def pull(column: String, out: String): Set[Int] = {
+        val (_, conf) = Cli.parse(Seq("query", "-c", url,
+          "--incremental-column", column,
+          "--state-path", dir.resolve(s"$column.wm").toString,
+          dir.resolve(out).toString, "SELECT id, ts, k FROM wm_src"))
+        val files = Cli.runQuery(conf, Some(spark))
+        spark.read.parquet(files.map(_.toString): _*)
+          .collect().map(_.getInt(0)).toSet
+      }
+      assert(pull("ts", "ts1.par") == (0 until 600).toSet)
+      assert(pull("k", "k1.par") == (0 until 600).toSet)
+      JdbcSink.insert(rows(600, 800), url, "wm_src")
+      assert(pull("ts", "ts2.par") == (600 until 800).toSet,
+        "the TIMESTAMP watermark must select exactly the new rows")
+      assert(pull("k", "k2.par") == (600 until 800).toSet,
+        "the string watermark must select exactly the new rows")
+      assert(new String(Files.readAllBytes(dir.resolve("k.wm")), "UTF-8") == "'k''0799'")
+    } finally {
+      try { java.sql.DriverManager.getConnection(s"jdbc:derby:memory:$db;drop=true"); () }
+      catch { case _: java.sql.SQLException => () }
+    }
+    // the --tables-dir path (Spark SQL) takes the same quoted literal
+    val dir = tmp()
+    def pullOrders(out: String): Long = {
+      val (_, conf) = Cli.parse(Seq("query", "--tables-dir", sf,
+        "--incremental-column", "o_orderdate",
+        "--state-path", dir.resolve("orders.wm").toString,
+        dir.resolve(out).toString, "SELECT o_orderkey, o_orderdate FROM orders"))
+      spark.read.parquet(Cli.runQuery(conf, Some(spark)).map(_.toString): _*).count()
+    }
+    assert(pullOrders("o1.par") == Tables.orders(spark, sf).count())
+    assert(pullOrders("o2.par") == 0, "nothing lies above the landed max")
+  }
+
   test("cli: unknown flags and subcommands fail with usage") {
     intercept[IllegalArgumentException](Cli.parse(Seq("query", "--bogus")))
     intercept[IllegalArgumentException](Cli.main(Array("frobnicate")))

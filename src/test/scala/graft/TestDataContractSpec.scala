@@ -76,8 +76,7 @@ class TestDataContractSpec extends AnyFunSuite {
         "event_type STRING,value DOUBLE,props STRING,ts TIMESTAMP"),
       "documents" -> "doc_id BIGINT,text STRING,lang STRING,source STRING,n_chars BIGINT",
       "embeddings" -> "vec_id BIGINT,embedding ARRAY<FLOAT>,label INT")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    Session.pin(spark)
     for (d <- sfDirs; t <- tables
         if java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/$t.parquet"))) {
       val df = if (t == "events") Tables.events(spark, d) else Tables.t(spark, d, t)
