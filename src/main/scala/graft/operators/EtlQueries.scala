@@ -86,9 +86,11 @@ object EtlQueries {
   // -------------------------------------------------- e1_sink_roundtrip
   /** lineitem → ParquetSink with row-count splitting (`out_01.par`…) →
     * read the split files back → aggregate. The sums check byte fidelity;
-    * `split_ok` checks the split invariant (every file ≤ the 20k-row cap,
-    * and at least ⌈rows/20k⌉ files — the exact count depends on source
-    * task partitioning, which an engine-independent oracle can't model). */
+    * `split_ok` checks the split invariant (every file one row group of ≤
+    * 20k rows, and at least ⌈rows/20k⌉ files — each write task's last row
+    * group may be short of a batch, so the exact count depends on the
+    * source's partitioning, which an engine-independent oracle can't
+    * model). */
   def e1SinkRoundtrip(s: SparkSession, d: String): DataFrame = {
     val dir = scratchDir("graft-e1")
     val out = dir.resolve("out.par")

@@ -10,8 +10,9 @@ import org.apache.spark.sql.types._
   * cap is a hard error. Bytes-per-row is estimated from the Spark schema the
   * same way the reference sizes its ODBC buffers from column descriptions.
   *
-  * In Spark these rows feed `maxRecordsPerFile` / `parquet.block.size`
-  * (row-group targeting) and the JDBC `fetchsize`.
+  * In Spark these rows feed `parquet.block.row.count.limit` (at most one
+  * batch per row group, the unit the sink's file splitting counts) and the
+  * JDBC `fetchsize`.
   */
 object BatchSizeLimit {
 

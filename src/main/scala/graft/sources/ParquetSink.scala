@@ -20,22 +20,37 @@ import scala.jdk.CollectionConverters._
   *    most one batch (`parquet.block.row.count.limit` = batch rows)
   *  - `-` streams a single parquet to stdout (parquet_writer.rs:192-230)
   *
-  * Scale posture: Spark tasks write part files in parallel into a staging
-  * directory (atomic-commit protocol replaces the reference's
-  * tempfile+persist crash safety). The post-pass runs on the driver with
-  * no Spark job: a final file made of one part that needs no fidelity
-  * retype is RENAMED; any other final file (a split bin of several parts,
-  * or a file needing FLBA/TIME fidelity) is written once by
-  * [[PhysicalFormat.assemble]], which appends the parts' row groups as raw
-  * column chunks and re-encodes only BINARY → FLBA(n) columns. Output files
-  * therefore keep the parts' row groups, codec, level, writer version,
-  * dictionary choices, page indexes and footer key-value metadata. The
-  * non-split single-file mode writes through one task (`coalesce(1)`),
-  * like the reference's single-process writer. On a cluster you'd leave
-  * splitting on and skip single-file mode; the semantics knobs are what
-  * parity requires.
+  * Scale posture: each Spark write task writes ONE part file into a
+  * staging directory (atomic-commit protocol replaces the reference's
+  * tempfile+persist crash safety), cut into row groups of at most one
+  * batch; the source's partitioning is kept, so parts sort in partition
+  * order and an ORDER BY result lands in order. The post-pass runs on the
+  * driver with no Spark job. It reads the parts' footers once and bins
+  * their row groups with the reference's rule: a file ends after the row
+  * group that makes it hold `--row-groups-per-file` row groups or reach
+  * `--file-size-threshold` compressed bytes. A bin that is one whole part
+  * needing no fidelity retype is RENAMED; any other final file is written
+  * once by [[PhysicalFormat.assembleSlices]], which appends the bin's row
+  * groups as raw column chunks and re-encodes only BINARY → FLBA(n)
+  * columns. Output files therefore keep the parts' row groups, codec,
+  * level, writer version, dictionary choices, page indexes and footer
+  * key-value metadata. One deviation remains: every task's last row group
+  * may hold less than a batch, where the reference's single fetch loop
+  * leaves only the result's last batch short, so a source with several
+  * partitions can give more files than the reference. The non-split
+  * single-file mode writes through one task (`coalesce(1)`), like the
+  * reference's single-process writer. On a cluster you'd leave splitting
+  * on and skip single-file mode; the semantics knobs are what parity
+  * requires.
+  *
+  * Every file write logs one INFO line (visible with `-v`) with what the
+  * reference logs: batch rows, estimated bytes per row, files, row groups
+  * and bytes written, and the seconds of the Spark write and the
+  * post-pass.
   */
 object ParquetSink {
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.sources.ParquetSink")
 
   final case class Options(
       compression: String = "zstd",
@@ -145,6 +160,7 @@ object ParquetSink {
         .option("parquet.writer.version", opts.writerVersion)
         // one fetch batch == at most one row group, whatever its bytes
         .option("parquet.block.row.count.limit", opts.batchRows.toString)
+        .option("parquet.dictionary.page.size", PhysicalFormat.DictionaryPageSize.toString)
       opts.compressionLevel.foreach(l =>
         out = out.option("parquet.compression.codec.zstd.level", l.toString))
       opts.columnDictionary.foreach { case (c, on) =>
@@ -152,96 +168,83 @@ object ParquetSink {
       }
       out
     }
-    if (split) {
-      // parallelize the writers when the source plan has fewer partitions
-      // than cores (single-row-group inputs otherwise serialize the write);
-      // at real scale inputs arrive already partitioned and this is a no-op.
-      // toRdd is the raw InternalRow RDD — lazily built, no job, and no
-      // Row-deserializer layer like df.rdd would add
-      val parallelism = df.sparkSession.sparkContext.defaultParallelism
-      val src =
-        if (df.queryExecution.toRdd.getNumPartitions < parallelism / 2)
-          df.repartition(parallelism)
-        else df
-      // one fetch batch == one row group: cap records per file at the batch
-      // size × row groups so each emitted file holds whole "batches"
-      configured(src.write)
-        .option("maxRecordsPerFile",
-          (if (opts.rowGroupsPerFile > 0) opts.rowGroupsPerFile.toLong else 1L)
-            * opts.batchRows)
-        .parquet(stagingDir)
-    } else {
-      configured(df.coalesce(1).write).parquet(stagingDir)
-    }
+    // one part per write task, in the source's partition order (part
+    // names sort by partition id, so an ORDER BY result stays in order);
+    // the row-count limit above cuts each part into one-batch row groups
+    val started = System.nanoTime()
+    configured(if (split) df.write else df.coalesce(1).write).parquet(stagingDir)
+    val sparkDone = System.nanoTime()
 
     val parts = Files.list(Paths.get(stagingDir)).iterator().asScala
       .filter(p => p.getFileName.toString.startsWith("part-") &&
         p.getFileName.toString.endsWith(".parquet"))
       .toSeq.sortBy(_.getFileName.toString)
-
-    // cheap emptiness probe against the WRITTEN files: their footers' row
-    // counts, not a re-execution of the source plan
-    if (opts.noEmptyFile) {
-      val nonEmpty = parts.exists { p =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          PhysicalFormat.inputFile(p))
-        try r.getRecordCount > 0 finally r.close()
-      }
-      if (!nonEmpty) {
-        deleteRecursively(staging)
-        return Seq.empty
-      }
+    // one footer pass over the parts: every row group, in output order
+    val groups: Seq[RowGroup] = parts.flatMap { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(PhysicalFormat.inputFile(p))
+      try r.getRowGroups.asScala.zipWithIndex.map { case (b, i) =>
+        RowGroup(p, i, b.getCompressedSize)
+      }.toSeq finally r.close()
     }
+    val groupCount = groups.groupBy(_.part).view.mapValues(_.size).toMap
 
-    val binned: Seq[Seq[Path]] =
-      if (opts.fileSizeThresholdBytes > 0) binBySize(parts, opts.fileSizeThresholdBytes)
-      else if (opts.rowGroupsPerFile > 0) parts.map(Seq(_))
-      else Seq(parts)
+    // --no-empty-file writes nothing for a result without rows; any other
+    // zero-row result is one schema-only file (parquet_writer.rs:117-121)
+    val bins: Seq[Seq[RowGroup]] =
+      if (groups.isEmpty) (if (opts.noEmptyFile) Seq.empty else Seq(Seq.empty))
+      else if (split) binRowGroups(groups, opts.rowGroupsPerFile, opts.fileSizeThresholdBytes)
+      else Seq(groups)
 
     // one pass per FINAL file, after the parallel write and before the
     // destination rename — so a crash mid-pass never leaves a half-written
-    // file at the destination path: the bin's parts are appended row group
-    // by row group under the fidelity footer (FLBA(n) / TIME annotations —
-    // see [[PhysicalFormat]]); a lone part needing no retype is renamed
+    // file at the destination path: the bin's row groups are appended as
+    // raw column chunks under the fidelity footer (FLBA(n) / TIME
+    // annotations — see [[PhysicalFormat]]); a bin that is one whole part
+    // needing no retype is renamed
     val retype = opts.physicalFidelity && PhysicalFormat.needed(df.schema)
     val encoding = PhysicalFormat.Encoding(opts.compression, opts.compressionLevel,
       opts.writerVersion, opts.columnDictionary)
-    def finalFile(bin: Seq[Path], n: Int): Path = {
-      val inputs =
-        if (bin.nonEmpty) bin
-        else { // a zero-row result's schema-only file (parquet_writer.rs:117-121)
+    var bytes = 0L
+    def finalFile(bin: Seq[RowGroup], n: Int): Path = {
+      val slices =
+        if (bin.nonEmpty) sliced(bin)
+        else Seq(PhysicalFormat.Slice(parts.headOption.getOrElse {
           val dir = staging.resolve("empty").toString
           configured(df.limit(0).coalesce(1).write).parquet(dir)
-          Seq(firstPart(dir))
-        }
-      if (inputs.size == 1 && !retype) inputs.head
-      else {
-        val out = staging.resolve(s"final-$n.parquet")
-        PhysicalFormat.assemble(inputs, out,
-          if (retype) PhysicalFormat.targetType(_, df.schema) else identity, encoding)
-        out
+          firstPart(dir)
+        }, 0 until 0))
+      val file = slices match {
+        case Seq(s) if !retype && s.rowGroups.size == groupCount.getOrElse(s.file, 0) => s.file
+        case _ =>
+          val out = staging.resolve(s"final-$n.parquet")
+          PhysicalFormat.assembleSlices(slices, out,
+            if (retype) PhysicalFormat.targetType(_, df.schema) else identity, encoding)
+          out
       }
+      bytes += Files.size(file)
+      file
+    }
+    def promote(bin: Seq[RowGroup], n: Int, dest: Path): Path = {
+      val merged = finalFile(bin, n)
+      if (dest.getParent != null) Files.createDirectories(dest.getParent)
+      Files.move(merged, dest, StandardCopyOption.REPLACE_EXISTING)
     }
     val outputs: Seq[Path] =
-      if (outPath == "-") {
-        val merged = finalFile(binned.head, 1)
-        Files.copy(merged, System.out)
+      if (bins.isEmpty) Seq.empty
+      else if (outPath == "-") {
+        Files.copy(finalFile(bins.head, 1), System.out)
         System.out.flush()
         Seq.empty
-      } else if (binned.size <= 1) {
-        val merged = finalFile(binned.headOption.getOrElse(Seq.empty), 1)
-        val dest = Paths.get(outPath)
-        if (dest.getParent != null) Files.createDirectories(dest.getParent)
-        Seq(move(merged, dest))
-      } else {
-        binned.zipWithIndex.map { case (bin, i) =>
-          val merged = finalFile(bin, i + 1)
-          val dest = Paths.get(suffixedPath(outPath, i + 1, opts.suffixLength))
-          if (dest.getParent != null) Files.createDirectories(dest.getParent)
-          move(merged, dest)
-        }
+      } else if (bins.size == 1) Seq(promote(bins.head, 1, Paths.get(outPath)))
+      else bins.zipWithIndex.map { case (bin, i) =>
+        promote(bin, i + 1, Paths.get(suffixedPath(outPath, i + 1, opts.suffixLength)))
       }
     deleteRecursively(staging)
+    log.info(s"batch ${opts.batchRows} rows, estimated " +
+      s"${BatchSizeLimit.bytesPerRow(df.schema)} bytes per row; wrote ${bins.size} files, " +
+      s"${bins.map(_.size).sum} row groups, $bytes bytes; " +
+      f"Spark write ${(sparkDone - started) / 1e9}%.2f s, " +
+      f"post-pass ${(System.nanoTime() - sparkDone) / 1e9}%.2f s")
     outputs
   }
 
@@ -257,30 +260,42 @@ object ParquetSink {
     Option(p.getParent).map(_.resolve(newName).toString).getOrElse(newName)
   }
 
-  /** Consecutive bin-packing by compressed size: a new output file starts
-    * when the current one has reached the threshold — same greedy rule as
-    * the reference's `should_start_new_file` (batch_size_limit.rs:45-55). */
-  private def binBySize(parts: Seq[Path], threshold: Long): Seq[Seq[Path]] = {
-    val bins = Seq.newBuilder[Seq[Path]]
-    var current = Vector.empty[Path]
+  /** One row group of a staged part: its index in the part and its
+    * compressed bytes. */
+  private final case class RowGroup(part: Path, index: Int, bytes: Long)
+
+  /** The reference's split rule, applied after each row group
+    * (`parquet_writer.rs:86-189`, `batch_size_limit.rs:45-55`): the current
+    * file ends once it holds `rowGroupsPerFile` row groups or its row
+    * groups' compressed bytes reach `threshold` (0 turns either rule off). */
+  private def binRowGroups(groups: Seq[RowGroup], rowGroupsPerFile: Int,
+      threshold: Long): Seq[Seq[RowGroup]] = {
+    val bins = Seq.newBuilder[Seq[RowGroup]]
+    var current = Vector.empty[RowGroup]
     var size = 0L
-    parts.foreach { p =>
-      if (current.nonEmpty && size >= threshold) {
+    groups.foreach { g =>
+      current :+= g; size += g.bytes
+      if ((rowGroupsPerFile > 0 && current.size >= rowGroupsPerFile) ||
+          (threshold > 0 && size >= threshold)) {
         bins += current; current = Vector.empty; size = 0L
       }
-      current :+= p; size += Files.size(p)
     }
     if (current.nonEmpty) bins += current
     bins.result()
   }
 
+  /** A bin's row groups as one slice per part (a part's groups in a bin
+    * are consecutive). */
+  private def sliced(bin: Seq[RowGroup]): Seq[PhysicalFormat.Slice] =
+    bin.map(_.part).distinct.map { p =>
+      val in = bin.filter(_.part == p)
+      PhysicalFormat.Slice(p, in.head.index to in.last.index)
+    }
+
   private def firstPart(dir: String): Path =
     Files.list(Paths.get(dir)).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
       .sortBy(_.getFileName.toString).head
-
-  private def move(src: Path, dest: Path): Path =
-    Files.move(src, dest, StandardCopyOption.REPLACE_EXISTING)
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p))

@@ -29,8 +29,9 @@ import scala.jdk.CollectionConverters._
   *    so the values travel as ints tagged `graft.time.unit`; the annotation
   *    makes the FILE self-describing for non-graft readers.
   *
-  * Mechanics: [[assemble]] writes one file from N Spark-written files under
-  * a target MessageType, row group by row group, at the column-chunk level.
+  * Mechanics: [[assembleSlices]] writes one file from row-group ranges of N
+  * Spark-written files ([[assemble]]: their whole files) under a target
+  * MessageType, row group by row group, at the column-chunk level.
   * A column whose physical type stays (every TIME annotate or strip, every
   * untagged column) is copied as its raw compressed chunk — pages,
   * dictionary, statistics, column and offset index — so only the footer
@@ -38,8 +39,9 @@ import scala.jdk.CollectionConverters._
   * chunk at a time. The output keeps the inputs' row groups exactly (one
   * per fetch batch, like the reference's writer), their codec, encodings
   * and footer key-value metadata. The sink runs it once per FINAL output
-  * file, merging a split bin's parts in the same pass; graft's own read
-  * paths run it to strip TIME annotations ([[readSparkCompatible]]).
+  * file, cutting a split file's row groups from the parts in the same
+  * pass; graft's own read paths run it to strip TIME annotations
+  * ([[readSparkCompatible]]).
   */
 object PhysicalFormat {
 
@@ -50,6 +52,23 @@ object PhysicalFormat {
         f.metadata.contains(TypeMapping.TimeUnitKey))
 
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** parquet-mr's dictionary cap (`parquet.dictionary.page.size`, 1 MiB by
+    * default) for every column chunk the CLI sink encodes: its Spark writer
+    * and [[assemble]]'s BINARY(n) → FLBA re-encode alike. parquet-mr keeps
+    * a dictionary only when dictionary + ids are smaller than the plain
+    * bytes of the chunk's first page, and a page holds at most 20,000 rows
+    * (its default row-count limit). A 128 KiB dictionary of ≤ 8-byte values
+    * plus its ids always exceeds that, so for int, long, double, date,
+    * timestamp and decimal (≤ 18 digits) columns in a first page the cap
+    * changes no encoding decision: it only ends a doomed attempt after at
+    * most 16k values instead of dictionary-encoding the whole page and then
+    * encoding it a second time on fall-back. For BYTE_ARRAY/FLBA columns,
+    * and for a dictionary that keeps growing over later pages of a row group
+    * longer than one page, it can fall back where 1 MiB would not; FooterSpec
+    * bounds that (a 3,000-value dictionary of 30-char strings stays, which a
+    * 64 KiB cap would drop at +15% bytes). */
+  val DictionaryPageSize: Int = 128 * 1024
 
   /** Writer settings for the chunks [[assemble]] re-encodes; raw-copied
     * chunks keep whatever their input file had. */
@@ -72,18 +91,30 @@ object PhysicalFormat {
     Files.move(tmp, file, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Concatenate the row groups of `inputs` (one schema, flat primitive
-    * columns — the CLI's schema surface, SURVEY §1.1) into `dest` under
-    * `retype(input schema)`. A column whose physical type is unchanged is
-    * appended as its raw chunk; BYTE_ARRAY → FIXED_LEN_BYTE_ARRAY(n) is
-    * re-encoded with values zero-padded to n, a longer value an error. The
-    * footer carries the first input's key-value metadata — less Spark's
-    * stored row schema when the footer is retyped: that schema describes
-    * the inputs, and Spark would read a TIME column through it as plain
-    * ints instead of rejecting it (the interop contract FooterSpec pins). */
+  /** The row groups `rowGroups` (indices in file order; by default all of
+    * them) of the parquet file `file`. */
+  final case class Slice(file: Path, rowGroups: Range = 0 until Int.MaxValue)
+
+  /** Concatenate every row group of `inputs` into `dest`
+    * ([[assembleSlices]]). */
   def assemble(inputs: Seq[Path], dest: Path, retype: MessageType => MessageType,
-      enc: Encoding = Encoding()): Unit = {
-    require(inputs.nonEmpty, "assemble needs at least one input file")
+      enc: Encoding = Encoding()): Unit =
+    assembleSlices(inputs.map(Slice(_)), dest, retype, enc)
+
+  /** Concatenate the sliced row groups of `slices`, in order (one schema,
+    * flat primitive columns — the CLI's schema surface, SURVEY §1.1) into
+    * `dest` under `retype(input schema)`. A column whose physical type is
+    * unchanged is appended as its raw chunk; BYTE_ARRAY →
+    * FIXED_LEN_BYTE_ARRAY(n) is re-encoded with values zero-padded to n, a
+    * longer value an error. The footer carries the first input's key-value
+    * metadata — less Spark's stored row schema when the footer is retyped:
+    * that schema describes the inputs, and Spark would read a TIME column
+    * through it as plain ints instead of rejecting it (the interop contract
+    * FooterSpec pins). */
+  def assembleSlices(slices: Seq[Slice], dest: Path,
+      retype: MessageType => MessageType, enc: Encoding = Encoding()): Unit = {
+    require(slices.nonEmpty, "assemble needs at least one input file")
+    val inputs = slices.map(_.file)
     val readers = inputs.map(p => ParquetFileReader.open(inputFile(p)))
     try {
       val meta = readers.head.getFileMetaData
@@ -110,12 +141,13 @@ object PhysicalFormat {
       val codecs = new CodecFactory(zstdConf(enc), props.getPageSizeThreshold)
       try {
         writer.start()
-        readers.zip(inputs).foreach { case (r, p) =>
+        readers.zip(slices).foreach { case (r, slice) =>
           if (retyped.nonEmpty)
             r.setRequestedSchema(new MessageType(src.getName,
               src.getFields.asScala.filter(f => retyped.contains(Seq(f.getName))).asJava))
-          val stream = inputFile(p).newStream()
-          try r.getRowGroups.asScala.zipWithIndex.foreach { case (block, bi) =>
+          val stream = inputFile(slice.file).newStream()
+          try r.getRowGroups.asScala.zipWithIndex.filter(g => slice.rowGroups.contains(g._2))
+              .foreach { case (block, bi) =>
             lazy val decoded = new ColumnReadStoreImpl(r.readRowGroup(bi), NoConverter,
               src, r.getFileMetaData.getCreatedBy)
             writer.startBlock(block.getRowCount)
@@ -209,6 +241,7 @@ object PhysicalFormat {
     val b = ParquetProperties.builder().withWriterVersion(
       if (enc.writerVersion == "v1") ParquetProperties.WriterVersion.PARQUET_1_0
       else ParquetProperties.WriterVersion.PARQUET_2_0)
+      .withDictionaryPageSize(DictionaryPageSize)
     enc.columnDictionary.foreach { case (c, on) => b.withDictionaryEncoding(c, on) }
     b.build()
   }

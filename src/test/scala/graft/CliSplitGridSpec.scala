@@ -13,11 +13,13 @@ import scala.jdk.CollectionConverters._
   * `Cli.runQuery` and asserts the reference's observable contract —
   * file presence/absence, `_NN` zero-padded extension-preserving
   * numbering from 1, per-file row caps, and schema-only files for empty
-  * results. The file-COUNT deviation is deliberate and documented in
-  * `ParquetSink`: parallel task writers may split a batch across more
-  * files than the reference's single-process writer, so the pinned
-  * invariants are per-file caps + contiguous numbering + exact union,
-  * not an exact file count. */
+  * results. Files are cut at row-group boundaries like the reference's,
+  * but every write task's last row group may be short of a batch (the
+  * deviation documented in `ParquetSink`), so for a multi-partition source
+  * the pinned invariants are per-file caps + contiguous numbering + exact
+  * union, not an exact file count; a single-cursor JDBC source gives the
+  * reference's exact count, and either way the files in name order hold
+  * the rows in ORDER BY order. */
 class CliSplitGridSpec extends AnyFunSuite {
   import TestSession._
 
@@ -81,7 +83,7 @@ class CliSplitGridSpec extends AnyFunSuite {
     val out = dir.resolve("out.par")
     val written = run(out, rowsSql,
       "--batch-size-row", "3", "--row-groups-per-file", "2", "--no-empty-file")
-    assert(written.size >= 4, s"25 rows / cap 6 → ≥4 files (≥⌈25/6⌉ with parallel writers), got ${written.size}")
+    assert(written.size >= 5, s"25 rows / 3-row groups → 9 row groups → ≥5 files, got ${written.size}")
     val expectedNames = (1 to written.size).map(i => f"out_$i%02d.par")
     assert(written.map(_.getFileName.toString) == expectedNames,
       s"naming must be contiguous from _01: ${written.map(_.getFileName)}")
@@ -102,6 +104,83 @@ class CliSplitGridSpec extends AnyFunSuite {
     assert(written.map(_.getFileName.toString) ==
       (1 to written.size).map(i => f"out_$i%02d.par"))
     assert(spark.read.parquet(written.map(_.toString): _*).count() == 25)
+  }
+
+  /** The first column of `files`' rows, read one file at a time in name
+    * order. */
+  private def firstColumnInNameOrder(files: Seq[Path]): Seq[Any] =
+    files.sortBy(_.getFileName.toString).flatMap(f =>
+      spark.read.parquet(f.toString).collect().map(_.get(0)).toSeq)
+
+  test("split files keep ORDER BY order; one JDBC cursor gives ceil(rows / (batch × N)) files") {
+    val db = s"gridorder${System.nanoTime()}"
+    val url = s"jdbc:derby:memory:$db;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      conn.createStatement().execute("CREATE TABLE T (ID INT, V VARCHAR(20))")
+      val ins = conn.prepareStatement("INSERT INTO T VALUES (?, ?)")
+      new scala.util.Random(7).shuffle((1 to 1000).toVector).foreach { i =>
+        ins.setInt(1, i); ins.setString(2, s"v$i"); ins.addBatch()
+      }
+      ins.executeBatch()
+      for (n <- Seq(1, 3)) {
+        val dir = tmp()
+        val (_, conf) = Cli.parse(Seq("query", "-c", url, "--batch-size-row", "100",
+          "--row-groups-per-file", n.toString, dir.resolve("t.par").toString,
+          "SELECT * FROM T ORDER BY ID"))
+        val written = Cli.runQuery(conf, Some(spark))
+        assert(written.size == (1000 + 100 * n - 1) / (100 * n),
+          s"N=$n: ${written.size} files")
+        assert(firstColumnInNameOrder(written) == (1 to 1000), s"N=$n: rows out of order")
+      }
+    } finally {
+      conn.close()
+      try { java.sql.DriverManager.getConnection(s"jdbc:derby:memory:$db;drop=true"); () }
+      catch { case _: java.sql.SQLException => () }
+    }
+
+    // an aggregate sorted on its result: shuffled, range-partitioned input
+    val sql = "SELECT l_orderkey, SUM(l_quantity) AS q FROM lineitem " +
+      "GROUP BY l_orderkey ORDER BY q DESC, l_orderkey"
+    for (split <- Seq(Seq("--row-groups-per-file", "1"), Seq("--file-size-threshold", "2KiB"))) {
+      val dir = tmp()
+      val written = run(dir.resolve("agg.par"), sql, "--batch-size-row" +: "100" +: split: _*)
+      assert(written.size > 1, s"$split: expected a split")
+      val expected = spark.sql(sql).collect().map(_.get(0)).toSeq
+      assert(firstColumnInNameOrder(written) == expected, s"$split: rows out of order")
+    }
+  }
+
+  test("-v logs one sink line: batch, bytes per row, files, row groups, bytes, phase times") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-sink-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      def append(e: LogEvent): Unit =
+        if (e.getLoggerName == "graft.sources.ParquetSink")
+          lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getConfiguration.getRootLogger
+    root.addAppender(capture, null, null)
+    val written = try run(tmp().resolve("v.par"), rowsSql,
+        "-v", "--batch-size-row", "10", "--row-groups-per-file", "1")
+      finally {
+        root.removeAppender(capture.getName)
+        spark.sparkContext.setLogLevel("WARN")
+      }
+    val logged = lines.asScala.toSeq
+    assert(logged.size == 1, s"one sink line expected: $logged")
+    val bytes = written.map(Files.size(_)).sum
+    assert(logged.head.matches(
+      s"batch 10 rows, estimated \\d+ bytes per row; wrote ${written.size} files, " +
+        s"${written.size} row groups, " +
+        s"$bytes bytes; Spark write \\d+\\.\\d\\d s, post-pass \\d+\\.\\d\\d s"),
+      logged.head)
   }
 
   test("configurable suffix length (integration.rs:1656)") {

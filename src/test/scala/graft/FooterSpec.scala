@@ -277,6 +277,47 @@ class FooterSpec extends AnyFunSuite {
     assert(encodings(out2, "p_brand").exists(_.contains("DICTIONARY")))
   }
 
+  test("the sink's dictionary cap keeps profitable dictionaries, drops doomed ones early") {
+    // 40,000 rows in two 20,000-row batches: ~2,000 distinct dates, a
+    // unique BIGINT, random 16-byte BINARY, and 30-char strings with 3,000
+    // and 5,000 distinct values
+    def text(distinct: Int) =
+      substring(sha2(pmod(hash(col("id")), lit(distinct)).cast("string"), 256), 1, 30)
+    val df = spark.range(0, 40000, 1, 2).select(
+      expr("date_add(DATE'2000-01-01', CAST(pmod(id * 7919, 2000) AS INT))").as("d"),
+      (col("id") * 1000003L).as("k"),
+      unhex(substring(sha2(col("id").cast("string"), 256), 1, 32)).as("b"),
+      text(3000).as("s3k"), text(5000).as("s5k"))
+    val dir = Files.createTempDirectory("graft-footer-dict")
+    val capped = dir.resolve("capped.par")
+    ParquetSink.write(df, capped.toString, ParquetSink.Options(batchRows = 20000))
+    // the same frame through Spark's writer at parquet-mr's 1 MiB default
+    df.coalesce(1).write.option("compression", "zstd")
+      .option("parquet.writer.version", "v2")
+      .option("parquet.block.row.count.limit", "20000")
+      .option("parquet.dictionary.page.size", (1 << 20).toString)
+      .parquet(dir.resolve("plain").toString)
+    val plain = Files.list(dir.resolve("plain")).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    def chunks(p: java.nio.file.Path, c: String) = footer(p).getBlocks.asScala.toSeq
+      .map(_.getColumns.asScala.find(_.getPath.toDotString == c).get)
+    assert(footer(capped).getBlocks.asScala.map(_.getRowCount) == Seq(20000L, 20000L))
+    chunks(capped, "d").foreach(c =>
+      assert(c.getEncodings.asScala.map(_.toString).contains("RLE_DICTIONARY"), c.getEncodings))
+    for (name <- Seq("k", "b")) chunks(capped, name).foreach(c =>
+      assert(!c.hasDictionaryPage, s"$name carries a dictionary page: ${c.getEncodings}"))
+    // 3,000 × 30 chars (~102 KiB) fits under the cap: same dictionary,
+    // same bytes as at 1 MiB
+    chunks(capped, "s3k").foreach(c => assert(c.hasDictionaryPage, c.getEncodings))
+    val s3k = chunks(capped, "s3k").map(_.getTotalSize).sum.toDouble
+    val s3kPlain = chunks(plain, "s3k").map(_.getTotalSize).sum.toDouble
+    assert(math.abs(s3k - s3kPlain) <= 0.01 * s3kPlain, s"$s3k bytes vs $s3kPlain at 1 MiB")
+    // 5,000 × 30 chars (~166 KiB) outgrows it: the cap is in force, where
+    // 1 MiB keeps the dictionary
+    chunks(plain, "s5k").foreach(c => assert(c.hasDictionaryPage, c.getEncodings))
+    chunks(capped, "s5k").foreach(c => assert(!c.hasDictionaryPage, c.getEncodings))
+  }
+
   private def rowGroups(p: java.nio.file.Path): Seq[Long] =
     footer(p).getBlocks.asScala.map(_.getRowCount).toSeq
 
