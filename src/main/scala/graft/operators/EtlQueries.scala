@@ -1150,9 +1150,10 @@ object EtlQueries {
       max(col("o_orderkey")).as("hi")).head()
     val (lo, hi) = (mm.getLong(0), mm.getLong(1))
     val qhi = lo + (hi - lo) / 4 // lowest quarter of the key span
-    val (kept, skipped) = SnapshotLog.prunedFiles(dir, "o_orderkey", lo, qhi)
+    val where = Seq("o_orderkey" -> SnapshotLog.IntRange(lo, qhi))
+    val (kept, skipped) = SnapshotLog.prunedFiles(dir, where)
     val ok = kept.nonEmpty && skipped.nonEmpty
-    val out = SnapshotLog.readPruned(s, dir, "o_orderkey", lo, qhi)
+    val out = SnapshotLog.readPruned(s, dir, where)
       .filter(col("o_orderkey").between(lo, qhi))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_rows"),
@@ -1239,9 +1240,10 @@ object EtlQueries {
     val qhi = names.orderBy(col("c_name"))
       .limit(Math.toIntExact(math.max(1L, n / 4)))
       .agg(max(col("c_name"))).head().getString(0)
-    val (kept, skipped) = SnapshotLog.prunedFilesString(dir, "c_name", lo, qhi)
+    val where = Seq("c_name" -> SnapshotLog.StrRange(lo, Some(qhi)))
+    val (kept, skipped) = SnapshotLog.prunedFiles(dir, where)
     val ok = kept.nonEmpty && skipped.nonEmpty
-    val out = SnapshotLog.readPrunedString(s, dir, "c_name", lo, qhi)
+    val out = SnapshotLog.readPruned(s, dir, where)
       .filter(col("c_name").between(lo, qhi))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_rows"),
@@ -1585,13 +1587,15 @@ object EtlQueries {
     val mm = base.agg(min(col("c_custkey")), max(col("c_custkey"))).head()
     val (lo, w) = (mm.getLong(0), mm.getLong(1) - mm.getLong(0))
     val (aLo, aHi) = (lo + w / 16, lo + (w * 3) / 16) // off-center slab
-    val preA = SnapshotLog.prunedFiles(dir, "c_custkey", aLo, aHi)
-    val preB = SnapshotLog.prunedFiles(dir, "c_nationkey", 2L, 5L)
+    val whereA = Seq("c_custkey" -> SnapshotLog.IntRange(aLo, aHi))
+    val whereB = Seq("c_nationkey" -> SnapshotLog.IntRange(2L, 5L))
+    val preA = SnapshotLog.prunedFiles(dir, whereA)
+    val preB = SnapshotLog.prunedFiles(dir, whereB)
     val vZ = SnapshotLog.compact(s, dir, targetFiles = 16,
       statsCols = Seq("c_custkey", "c_nationkey"),
       zorderBy = Seq("c_custkey", "c_nationkey"))
-    val zA = SnapshotLog.prunedFiles(dir, "c_custkey", aLo, aHi)
-    val zB = SnapshotLog.prunedFiles(dir, "c_nationkey", 2L, 5L)
+    val zA = SnapshotLog.prunedFiles(dir, whereA)
+    val zB = SnapshotLog.prunedFiles(dir, whereB)
     val ok = vZ == 3 &&
       preA._2.size <= 1 && preB._2.size <= 2 && // random layout: no skip
       zA._2.size >= 8 && zB._2.size >= 4 &&     // curve layout: both dims
@@ -2042,12 +2046,13 @@ object EtlQueries {
     val mm = base.agg(min(col("c_custkey")), max(col("c_custkey"))).head()
     val (mn, w) = (mm.getLong(0), mm.getLong(1) - mm.getLong(0))
     val (lo, hi) = (mn + w / 4, mn + w / 4 + w / 8)
-    val (keptP, _) = SnapshotLog.prunedFilesPartition(dir,
-      Map("c_mktsegment" -> Set("BUILDING")))
-    val (keptE, _) = SnapshotLog.prunedFiles(dir, "c_custkey", lo, hi)
+    val wherePart =
+      Seq("c_mktsegment" -> SnapshotLog.PartIn(Set(Some("BUILDING"))))
+    val whereKey = Seq("c_custkey" -> SnapshotLog.IntRange(lo, hi))
+    val (keptP, _) = SnapshotLog.prunedFiles(dir, wherePart)
+    val (keptE, _) = SnapshotLog.prunedFiles(dir, whereKey)
     val composed = keptE.toSet.intersect(keptP.toSet)
-    val composedRead = SnapshotLog.readPrunedPartition(s, dir,
-      Map("c_mktsegment" -> Set("BUILDING")), "c_custkey", lo, hi)
+    val composedRead = SnapshotLog.readPruned(s, dir, wherePart ++ whereKey)
       .filter(col("c_mktsegment") === "BUILDING" &&
         col("c_custkey").between(lo, hi)).count()
     val directRead = SnapshotLog.read(s, dir)
@@ -2233,7 +2238,7 @@ object EtlQueries {
     * struct, so it's free), and COUNT(col) — SQL's non-null count —
     * becomes rows − nulls summed over the manifest, no data file
     * opened. The same per-file counts drive IS [NOT] NULL mutation
-    * pruning ([[graft.sources.SnapshotLog.prunedFilesNull]]; the
+    * pruning ([[graft.sources.SnapshotLog.NullIs]]; the
     * lastMutationScan pin lives in SnapshotLogSpec). e41's brutal
     * proof: every data file is deleted from disk before the answering
     * read — and the count must also DECLINE honestly for a column
@@ -2256,7 +2261,7 @@ object EtlQueries {
       .filter(col("opt_price").isNotNull).count()
     val mcBefore = SnapshotLog.metadataCountCol(dir, "opt_price")
     val (_, skippedNull) =
-      SnapshotLog.prunedFilesNull(dir, "opt_price", wantNull = true)
+      SnapshotLog.prunedFiles(dir, Seq("opt_price" -> SnapshotLog.NullIs(true)))
     // the proof: data files gone, the column count still answers —
     // and a column without recorded counts declines instead of guessing
     import scala.jdk.CollectionConverters._

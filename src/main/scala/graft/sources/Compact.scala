@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
-import scala.jdk.CollectionConverters._
 
 /** Small-file compaction — the data-lake maintenance operator every
   * 100 TB pipeline runs continuously: a directory of many small parquet
@@ -27,29 +26,23 @@ object Compact {
     val inputBytes = listParquet(Paths.get(inDir)).map(Files.size).sum
     require(inputBytes > 0, s"no parquet input under $inDir")
     val nFiles = math.max(1L, (inputBytes + targetBytes - 1) / targetBytes).toInt
-    val staging = Files.createTempDirectory(
-      Files.createDirectories(Paths.get(outDir).toAbsolutePath.getParent), ".graft-compact-")
-    graft.operators.Scans.parquetNoInfer(spark, inDir)
-      .repartition(nFiles)
-      .write.mode("overwrite")
-      .option("compression", compression)
-      .parquet(staging.toString)
     val dest = Paths.get(outDir)
-    deleteRecursively(dest)
-    Files.move(staging, dest)
+    Staging(dest.toAbsolutePath.getParent, ".graft-compact-") { staging =>
+      val out = staging.resolve("out")
+      graft.operators.Scans.parquetNoInfer(spark, inDir)
+        .repartition(nFiles)
+        .write.mode("overwrite")
+        .option("compression", compression)
+        .parquet(out.toString)
+      Staging.deleteRecursively(dest)
+      Files.move(out, dest)
+    }
     listParquet(dest)
   }
 
   private def listParquet(dir: Path): Seq[Path] =
     if (!Files.isDirectory(dir)) Seq.empty
-    else Files.list(dir).iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-        !p.getFileName.toString.startsWith("."))
-      .toSeq.sortBy(_.getFileName.toString)
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
+    else Staging.listNames(dir)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
+      .sorted.map(dir.resolve)
 }

@@ -144,15 +144,16 @@ object ParquetSink {
     // promotes files with Files.move, which is only a metadata rename when
     // source and target share a filesystem — a /tmp staging dir would turn
     // every promotion into a byte copy whenever the output lives elsewhere
-    val staging =
-      if (outPath == "-") Files.createTempDirectory("graft-sink-")
-      else {
-        val parent = Option(Paths.get(outPath).toAbsolutePath.getParent)
-          .getOrElse(Paths.get("."))
-        Files.createDirectories(parent)
-        Files.createTempDirectory(parent, ".graft-sink-")
-      }
-    val stagingDir = staging.resolve("out").toString
+    val parent =
+      if (outPath == "-") Paths.get(System.getProperty("java.io.tmpdir"))
+      else Option(Paths.get(outPath).toAbsolutePath.getParent).getOrElse(Paths.get("."))
+    Staging(parent, ".graft-sink-")(writeStaged(df, outPath, opts, split, _))
+  }
+
+  /** The sink's write and post-pass inside its staging dir `staging`. */
+  private def writeStaged(df: DataFrame, outPath: String, opts: Options,
+      split: Boolean, staging: Path): Seq[Path] = {
+    val stagingDir = staging.resolve("out")
     def configured(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) = {
       var out = w.mode("overwrite")
         .option("compression", opts.compression)
@@ -172,13 +173,12 @@ object ParquetSink {
     // names sort by partition id, so an ORDER BY result stays in order);
     // the row-count limit above cuts each part into one-batch row groups
     val started = System.nanoTime()
-    configured(if (split) df.write else df.coalesce(1).write).parquet(stagingDir)
+    configured(if (split) df.write else df.coalesce(1).write).parquet(stagingDir.toString)
     val sparkDone = System.nanoTime()
 
-    val parts = Files.list(Paths.get(stagingDir)).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("part-") &&
-        p.getFileName.toString.endsWith(".parquet"))
-      .toSeq.sortBy(_.getFileName.toString)
+    val parts = Staging.listNames(stagingDir)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      .sorted.map(stagingDir.resolve)
     // one footer pass over the parts: every row group, in output order
     val groups: Seq[RowGroup] = parts.flatMap { p =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(PhysicalFormat.inputFile(p))
@@ -209,9 +209,9 @@ object ParquetSink {
       val slices =
         if (bin.nonEmpty) sliced(bin)
         else Seq(PhysicalFormat.Slice(parts.headOption.getOrElse {
-          val dir = staging.resolve("empty").toString
-          configured(df.limit(0).coalesce(1).write).parquet(dir)
-          firstPart(dir)
+          val dir = staging.resolve("empty")
+          configured(df.limit(0).coalesce(1).write).parquet(dir.toString)
+          dir.resolve(Staging.listNames(dir).filter(_.endsWith(".parquet")).min)
         }, 0 until 0))
       val file = slices match {
         case Seq(s) if !retype && s.rowGroups.size == groupCount.getOrElse(s.file, 0) => s.file
@@ -239,7 +239,6 @@ object ParquetSink {
       else bins.zipWithIndex.map { case (bin, i) =>
         promote(bin, i + 1, Paths.get(suffixedPath(outPath, i + 1, opts.suffixLength)))
       }
-    deleteRecursively(staging)
     log.info(s"batch ${opts.batchRows} rows, estimated " +
       s"${BatchSizeLimit.bytesPerRow(df.schema)} bytes per row; wrote ${bins.size} files, " +
       s"${bins.map(_.size).sum} row groups, $bytes bytes; " +
@@ -291,15 +290,4 @@ object ParquetSink {
       val in = bin.filter(_.part == p)
       PhysicalFormat.Slice(p, in.head.index to in.last.index)
     }
-
-  private def firstPart(dir: String): Path =
-    Files.list(Paths.get(dir)).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      .sortBy(_.getFileName.toString).head
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
+import Staging.listNames
 
 /** Snapshot-manifest table log — versioned, time-travelable parquet tables
   * (beyond-reference lake lifecycle, the minimal shape of the
@@ -313,10 +314,9 @@ object SnapshotLog {
     * ORIGINAL columns stay in the data — reads need no value
     * re-injection, and the per-file values parsed from the staging
     * directory names land in the manifest (`"part"`) next to the
-    * partition spec (`"partCols"`). Partition pruning
-    * ([[prunedFilesPartition]], [[readPrunedPartition]]) and the
-    * mutation scans then skip files from the manifest alone, COMPOSED
-    * with envelopes. Appends to a partitioned lineage must use the same
+    * partition spec (`"partCols"`). Pruned reads ([[PartIn]] and
+    * range constraints, [[pruneForPredicate]]) and the mutation scans
+    * then skip files from the manifest alone, COMPOSED with envelopes. Appends to a partitioned lineage must use the same
     * spec (or none — their files simply carry no values and are never
     * partition-pruned; the conservative read stays sound); changing the
     * spec requires an overwrite lineage. */
@@ -427,10 +427,7 @@ object SnapshotLog {
         .toMap
     val stagedColMap =
       if (overwrite) Map.empty[String, String] else baseColMap ++ freshAlloc
-    // stage next to data/ so promotion is a metadata rename (ParquetSink's
-    // same-filesystem staging rule)
-    val staging = Files.createTempDirectory(dataDir(dir), ".commit-")
-    try {
+    Staging(dataDir(dir), ".commit-") { staging =>
       if (alignedPartitionBy.isEmpty)
         toPhysical(aligned, stagedColMap).write.mode("overwrite")
           .option("compression", "zstd").parquet(staging.toString)
@@ -470,16 +467,8 @@ object SnapshotLog {
       // produced — zero extra data scan (the Delta/Iceberg
       // stats-at-commit idea); see [[readPruned]], [[binPack]],
       // [[metadataCount]]
-      val harvested = harvestFiles(dir, moved,
-        statsCols.toSet.map(physNameOf(stagedColMap, _)),
-        Some(df.sparkSession))
-      val stats = logicalizeCols(
-        harvested.map { case (n, h) => n -> h.stats }
-          .filter(_._2.nonEmpty).toMap, stagedColMap)
-      val meta = harvested.map { case (n, h) => n -> h.meta }.toMap
-      val nulls = logicalizeCols(
-        harvested.map { case (n, h) => n -> h.nulls }
-          .filter(_._2.nonEmpty).toMap, stagedColMap)
+      val (stats, meta, nulls) = harvestLogical(dir, moved, statsCols.toSet,
+        stagedColMap, Some(df.sparkSession))
       // CAS publish loop: each round re-reads the log so the carry-over
       // is the CURRENT latest manifest (a lost race means the winner's
       // files must be carried, not the stale snapshot's). Data files keep
@@ -492,161 +481,163 @@ object SnapshotLog {
         // a racing writer may have published THIS txn between the fast
         // path above and now (two replays running concurrently)
         val replayedNow = txnId.flatMap(committedTxnVersion(dir, _))
-        if (replayedNow.isDefined) return replayedNow.get
-        val v = math.max(attemptV, prev.lastOption.getOrElse(0) + 1)
-        expectedVersion.filter(_ != v).foreach { e =>
-          throw new java.util.ConcurrentModificationException(
-            s"conditional commit to $dir expected version $e but the log " +
-              s"advanced to $v — re-read the table and retry (orphaned " +
-              "parts are vacuumable)")
-        }
-        val prevState = prev.lastOption.map(pv => stateOf(dir, pv))
-        // EAGER fields only here — the carried per-file maps force the
-        // base's lazy members and are built ONLY on the full-checkpoint
-        // fallback below (round 15: an append's metadata cost is
-        // O(delta), the write-side twin of the lazy checkpoint read)
-        val carriedDvs =
-          if (overwrite) Seq.empty[String]
-          else prevState.map(_.dvs).getOrElse(Seq.empty)
-        // the table owns its partition spec: an append under a DIFFERENT
-        // spec is rejected (a re-layout is an overwrite lineage); an
-        // append with no partitionBy is allowed — its files carry no
-        // values and are never partition-pruned (sound)
-        val prevPartCols =
-          if (overwrite) Seq.empty
-          else prevState.map(_.partCols).getOrElse(Seq.empty)
-        if (!overwrite && prevPartCols.nonEmpty &&
-            alignedPartitionBy.nonEmpty && alignedPartitionBy != prevPartCols)
-          throw new IllegalArgumentException(
-            s"append to $dir partitioned by " +
-              s"${alignedPartitionBy.mkString(",")} " +
-              s"but the table is partitioned by ${prevPartCols.mkString(",")}" +
-              " — the partition spec is table metadata; use overwrite = " +
-              "true to re-layout")
-        val publishPartCols =
-          if (overwrite || prev.isEmpty) alignedPartitionBy
-          else if (prevPartCols.nonEmpty) prevPartCols
-          else alignedPartitionBy
-        // authoritative re-check against the version actually appended
-        // onto (a racing writer may have evolved the schema since the
-        // fail-fast above)
-        val prevSchemaJson = prevState.flatMap(_.schemaJson)
-        if (!overwrite)
-          prevSchemaJson.foreach(
-            requireAppendCompatible(dir, _, aligned.schema, caseSensitive))
-        // the casing ALIGNMENT above was computed (and the files staged)
-        // against the pre-staging schema snapshot; if a racing writer
-        // established or changed column casing since, publishing would
-        // resurrect the appender-cased-manifest defect the alignment
-        // exists to prevent — abort instead (optimistic-concurrency
-        // contract: the caller retries, which re-aligns and re-stages;
-        // the orphaned parts are vacuumable)
-        if (!overwrite && !caseSensitive) prevSchemaJson.foreach { pj =>
-          val prevS = org.apache.spark.sql.types.DataType.fromJson(pj)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-          val misaligned = aligned.schema.fields.exists(f =>
-            prevS.fields.exists(p =>
-              p.name.equalsIgnoreCase(f.name) && p.name != f.name))
-          if (misaligned)
+        if (replayedNow.isDefined) committed = replayedNow.get
+        else {
+          val v = math.max(attemptV, prev.lastOption.getOrElse(0) + 1)
+          expectedVersion.filter(_ != v).foreach { e =>
             throw new java.util.ConcurrentModificationException(
-              s"append to $dir raced a schema-casing change: the staged " +
-                "files were aligned to a superseded column spelling — " +
-                "retry the commit (orphaned parts are vacuumable)")
-        }
-        // the files were STAGED under the mapping read before staging; a
-        // racing rename/drop (a colMap or physUsed change) would make
-        // their physical names — or the fresh-name allocation — stale.
-        // Abort instead of publishing resurrect-prone files (optimistic
-        // contract: the caller retries, which re-stages under the fresh
-        // mapping; orphaned parts are vacuumable).
-        if (!overwrite) {
-          val curColMap = prevState.map(_.colMap).getOrElse(Map.empty)
-          val curPhysUsed = prevState.map(_.physUsed).getOrElse(Seq.empty)
-          if (curColMap != baseColMap || curPhysUsed != basePhysUsed)
-            throw new java.util.ConcurrentModificationException(
-              s"append to $dir raced a column-mapping change (rename/" +
-                "drop): the staged files carry superseded physical names " +
-                "— retry the commit (orphaned parts are vacuumable)")
-        }
-        // LEGACY lineages (pre-schema manifests) stay legacy on append:
-        // stamping this frame's schema would silently impose it on
-        // carried files that were never compatibility-checked against
-        // it (explicit-schema reads would drop/retype their columns).
-        // An overwrite — or the first commit — establishes the schema.
-        val publishSchema =
-          if (overwrite || prev.isEmpty || prevSchemaJson.isDefined)
-            Some(schemaJson)
-          else None
-        val dropped = dropCarried.toSet
-        // DIRECT DELTA (round 15): an ordinary append publishes its
-        // delta manifest straight from its OWN adds/removes — the base's
-        // lazy stats/meta/part/nulls are never forced, so a commit onto
-        // a million-file parquet checkpoint costs O(new files) driver
-        // work, not an O(table) decode. Falls back to the full
-        // (map-diffing, possibly checkpoint-writing) path on the
-        // checkpoint cadence, schema/spec/mapping steps, overwrites,
-        // and non-consecutive versions — exactly the cases the old
-        // deltaJson declined, so the published bytes keep the same
-        // shape either way (the encoder is shared).
-        val canDelta = !overwrite && prevState.isDefined &&
-          checkpointEvery > 1 && v % checkpointEvery != 0 &&
-          prev.last + 1 == v &&
-          publishSchema == prevState.get.schemaJson &&
-          publishPartCols == prevState.get.partCols &&
-          stagedColMap == prevState.get.colMap && {
-            // deltaJson's smaller-than-full eligibility, from EAGER
-            // counts: a dropCarried-heavy rewrite (drop everything, add
-            // one file) must checkpoint — a thousand-name remove list
-            // would cost more bytes AND more resolve work than the
-            // one-file state it encodes (round-15 review)
-            val deltaWeight = moved.size + dropped.size + stats.size +
-              meta.size + partVals.size + nulls.size
-            val newFileCount =
-              prevState.get.files.size - dropped.size + moved.size
-            // the full state carries up to 5 per-file members per file
-            // (deltaJson's exact rule, approximated from eager counts)
-            deltaWeight < math.max(1, 5 * newFileCount)
+              s"conditional commit to $dir expected version $e but the log " +
+                s"advanced to $v — re-read the table and retry (orphaned " +
+                "parts are vacuumable)")
           }
-        val published =
-          if (canDelta)
-            tryPublishDeltaDirect(dir, v, moved, dropCarried, stats,
-              meta, partVals, nulls, txnId)
-          else {
-            val (carriedAll, carriedStatsAll, carriedMetaAll) =
-              if (overwrite)
-                (Seq.empty[String], Map.empty[String, Map[String, ColEnv]],
-                  Map.empty[String, FileMeta])
-              else prevState
-                .map(st => (st.files, st.stats, st.meta))
-                .getOrElse((Seq.empty[String],
-                  Map.empty[String, Map[String, ColEnv]],
-                  Map.empty[String, FileMeta]))
-            val carriedPartAll =
-              if (overwrite) Map.empty[String, Map[String, Option[String]]]
-              else prevState.map(_.part).getOrElse(Map.empty)
-            val carriedNullsAll =
-              if (overwrite) Map.empty[String, Map[String, Long]]
-              else prevState.map(_.nulls).getOrElse(Map.empty)
-            val carried = carriedAll.filterNot(dropped)
-            val carriedStats = carriedStatsAll -- dropped
-            val carriedMeta = carriedMetaAll -- dropped
-            val carriedPart = carriedPartAll -- dropped
-            val carriedNulls = carriedNullsAll -- dropped
-            // DVs carry whole: rows referencing dropped data files are
-            // inert (the read anti-join matches absent names)
-            tryPublishManifest(dir, v, carried ++ moved,
-              carriedStats ++ stats,
-              txnId, carriedDvs, publishSchema, carriedMeta ++ meta,
-              publishPartCols, carriedPart ++ partVals,
-              carriedNulls ++ nulls,
-              colMap = stagedColMap,
-              physUsed = if (overwrite) Seq.empty else basePhysUsed)
+          val prevState = prev.lastOption.map(pv => stateOf(dir, pv))
+          // EAGER fields only here — the carried per-file maps force the
+          // base's lazy members and are built ONLY on the full-checkpoint
+          // fallback below (round 15: an append's metadata cost is
+          // O(delta), the write-side twin of the lazy checkpoint read)
+          val carriedDvs =
+            if (overwrite) Seq.empty[String]
+            else prevState.map(_.dvs).getOrElse(Seq.empty)
+          // the table owns its partition spec: an append under a DIFFERENT
+          // spec is rejected (a re-layout is an overwrite lineage); an
+          // append with no partitionBy is allowed — its files carry no
+          // values and are never partition-pruned (sound)
+          val prevPartCols =
+            if (overwrite) Seq.empty
+            else prevState.map(_.partCols).getOrElse(Seq.empty)
+          if (!overwrite && prevPartCols.nonEmpty &&
+              alignedPartitionBy.nonEmpty && alignedPartitionBy != prevPartCols)
+            throw new IllegalArgumentException(
+              s"append to $dir partitioned by " +
+                s"${alignedPartitionBy.mkString(",")} " +
+                s"but the table is partitioned by ${prevPartCols.mkString(",")}" +
+                " — the partition spec is table metadata; use overwrite = " +
+                "true to re-layout")
+          val publishPartCols =
+            if (overwrite || prev.isEmpty) alignedPartitionBy
+            else if (prevPartCols.nonEmpty) prevPartCols
+            else alignedPartitionBy
+          // authoritative re-check against the version actually appended
+          // onto (a racing writer may have evolved the schema since the
+          // fail-fast above)
+          val prevSchemaJson = prevState.flatMap(_.schemaJson)
+          if (!overwrite)
+            prevSchemaJson.foreach(
+              requireAppendCompatible(dir, _, aligned.schema, caseSensitive))
+          // the casing ALIGNMENT above was computed (and the files staged)
+          // against the pre-staging schema snapshot; if a racing writer
+          // established or changed column casing since, publishing would
+          // resurrect the appender-cased-manifest defect the alignment
+          // exists to prevent — abort instead (optimistic-concurrency
+          // contract: the caller retries, which re-aligns and re-stages;
+          // the orphaned parts are vacuumable)
+          if (!overwrite && !caseSensitive) prevSchemaJson.foreach { pj =>
+            val prevS = org.apache.spark.sql.types.DataType.fromJson(pj)
+              .asInstanceOf[org.apache.spark.sql.types.StructType]
+            val misaligned = aligned.schema.fields.exists(f =>
+              prevS.fields.exists(p =>
+                p.name.equalsIgnoreCase(f.name) && p.name != f.name))
+            if (misaligned)
+              throw new java.util.ConcurrentModificationException(
+                s"append to $dir raced a schema-casing change: the staged " +
+                  "files were aligned to a superseded column spelling — " +
+                  "retry the commit (orphaned parts are vacuumable)")
           }
-        if (published)
-          committed = v
+          // the files were STAGED under the mapping read before staging; a
+          // racing rename/drop (a colMap or physUsed change) would make
+          // their physical names — or the fresh-name allocation — stale.
+          // Abort instead of publishing resurrect-prone files (optimistic
+          // contract: the caller retries, which re-stages under the fresh
+          // mapping; orphaned parts are vacuumable).
+          if (!overwrite) {
+            val curColMap = prevState.map(_.colMap).getOrElse(Map.empty)
+            val curPhysUsed = prevState.map(_.physUsed).getOrElse(Seq.empty)
+            if (curColMap != baseColMap || curPhysUsed != basePhysUsed)
+              throw new java.util.ConcurrentModificationException(
+                s"append to $dir raced a column-mapping change (rename/" +
+                  "drop): the staged files carry superseded physical names " +
+                  "— retry the commit (orphaned parts are vacuumable)")
+          }
+          // LEGACY lineages (pre-schema manifests) stay legacy on append:
+          // stamping this frame's schema would silently impose it on
+          // carried files that were never compatibility-checked against
+          // it (explicit-schema reads would drop/retype their columns).
+          // An overwrite — or the first commit — establishes the schema.
+          val publishSchema =
+            if (overwrite || prev.isEmpty || prevSchemaJson.isDefined)
+              Some(schemaJson)
+            else None
+          val dropped = dropCarried.toSet
+          // DIRECT DELTA (round 15): an ordinary append publishes its
+          // delta manifest straight from its OWN adds/removes — the base's
+          // lazy stats/meta/part/nulls are never forced, so a commit onto
+          // a million-file parquet checkpoint costs O(new files) driver
+          // work, not an O(table) decode. Falls back to the full
+          // (map-diffing, possibly checkpoint-writing) path on the
+          // checkpoint cadence, schema/spec/mapping steps, overwrites,
+          // and non-consecutive versions — exactly the cases the old
+          // deltaJson declined, so the published bytes keep the same
+          // shape either way (the encoder is shared).
+          val canDelta = !overwrite && prevState.isDefined &&
+            checkpointEvery > 1 && v % checkpointEvery != 0 &&
+            prev.last + 1 == v &&
+            publishSchema == prevState.get.schemaJson &&
+            publishPartCols == prevState.get.partCols &&
+            stagedColMap == prevState.get.colMap && {
+              // deltaJson's smaller-than-full eligibility, from EAGER
+              // counts: a dropCarried-heavy rewrite (drop everything, add
+              // one file) must checkpoint — a thousand-name remove list
+              // would cost more bytes AND more resolve work than the
+              // one-file state it encodes (round-15 review)
+              val deltaWeight = moved.size + dropped.size + stats.size +
+                meta.size + partVals.size + nulls.size
+              val newFileCount =
+                prevState.get.files.size - dropped.size + moved.size
+              // the full state carries up to 5 per-file members per file
+              // (deltaJson's exact rule, approximated from eager counts)
+              deltaWeight < math.max(1, 5 * newFileCount)
+            }
+          val published =
+            if (canDelta)
+              tryPublishDeltaDirect(dir, v, moved, dropCarried, stats,
+                meta, partVals, nulls, txnId)
+            else {
+              val (carriedAll, carriedStatsAll, carriedMetaAll) =
+                if (overwrite)
+                  (Seq.empty[String], Map.empty[String, Map[String, ColEnv]],
+                    Map.empty[String, FileMeta])
+                else prevState
+                  .map(st => (st.files, st.stats, st.meta))
+                  .getOrElse((Seq.empty[String],
+                    Map.empty[String, Map[String, ColEnv]],
+                    Map.empty[String, FileMeta]))
+              val carriedPartAll =
+                if (overwrite) Map.empty[String, Map[String, Option[String]]]
+                else prevState.map(_.part).getOrElse(Map.empty)
+              val carriedNullsAll =
+                if (overwrite) Map.empty[String, Map[String, Long]]
+                else prevState.map(_.nulls).getOrElse(Map.empty)
+              val carried = carriedAll.filterNot(dropped)
+              val carriedStats = carriedStatsAll -- dropped
+              val carriedMeta = carriedMetaAll -- dropped
+              val carriedPart = carriedPartAll -- dropped
+              val carriedNulls = carriedNullsAll -- dropped
+              // DVs carry whole: rows referencing dropped data files are
+              // inert (the read anti-join matches absent names)
+              tryPublishManifest(dir, v, carried ++ moved,
+                carriedStats ++ stats,
+                txnId, carriedDvs, publishSchema, carriedMeta ++ meta,
+                publishPartCols, carriedPart ++ partVals,
+                carriedNulls ++ nulls,
+                colMap = stagedColMap,
+                physUsed = if (overwrite) Seq.empty else basePhysUsed)
+            }
+          if (published)
+            committed = v
+        }
       }
       committed
-    } finally deleteRecursively(staging)
+    }
   }
 
   /** The version that already committed `txnId`, if any — one manifest
@@ -675,95 +666,65 @@ object SnapshotLog {
   }
 
   /** Read the table AS OF a version with MANIFEST-LEVEL FILE SKIPPING: a
-    * file whose committed [min, max] envelope on `column` cannot overlap
-    * [lo, hi] is never opened — no footer read, no task, no listing; the
-    * decision is made from the one manifest read. This is the pruning a
-    * 100 TB lake needs on its slowest axis (file count): predicate
-    * pushdown still skips ROW GROUPS inside opened files, but only
-    * manifest stats keep the scan's FILE set proportional to the
-    * predicate's selectivity. Sound, not exact: files without an
-    * envelope for `column` (not a stats column at commit time, a
-    * non-integer type, or an old manifest) are always read — callers
-    * apply the real filter on top, pruning only removes provably-empty
-    * work. Files without an envelope for `column` (not a stats column at
-    * commit time, an unsupported physical type, or an old manifest) are
-    * always read. String columns: use [[readPrunedString]]. */
-  def readPruned(spark: SparkSession, dir: Path, column: String,
-      lo: Long, hi: Long, asOf: Option[Int] = None): DataFrame = {
+    * file that provably holds no row satisfying the conjunction `where`
+    * ([[pruneForPredicate]]) is never opened — no footer read, no task,
+    * no listing; the decision is made from the one manifest read. This is
+    * the pruning a 100 TB lake needs on its slowest axis (file count):
+    * predicate pushdown still skips ROW GROUPS inside opened files, but
+    * only manifest metadata keeps the scan's FILE set proportional to the
+    * predicate's selectivity. Sound, not exact: files without the
+    * metadata a constraint needs are always read, so callers apply the
+    * real filter on top — pruning removes provably-empty work, it proves
+    * nothing about kept rows. Deletion vectors and the column mapping
+    * apply as in [[read]]; when every file prunes the result is the
+    * EMPTY frame of the recorded schema ([[readKept]]), so the API is
+    * safe without a caller-side filter. */
+  def readPruned(spark: SparkSession, dir: Path,
+      where: Seq[(String, PredRange)], asOf: Option[Int] = None): DataFrame = {
     // resolve the version ONCE: files, DVs, and schema must come from
     // the same snapshot, or a commit landing mid-call tears the read
     // (e.g. an update's DV applied to a file list missing its appends)
     val v = resolveVersion(dir, asOf)
-    val st = stateOf(dir, v)
-    val (kept, skipped) = prunedFiles(dir, column, lo, hi, Some(v))
-    readKeptOrEmpty(spark, dir, kept, skipped, st.dvs,
-      schemaFromJson(st.schemaJson), st.colMap)
+    scanPruned(spark, dir, v, stateOf(dir, v), where)
   }
 
-  /** Shared tail of the pruned readers: read the kept files, or — when
-    * everything pruned away — an EMPTY frame (one skipped file supplies
-    * the schema, `lit(false)` drops its rows). The empty-case filter
-    * makes the API safe without a caller-side re-filter: a skipped
-    * file's rows provably fail the range predicate, so returning none of
-    * them is the only answer that is correct for callers that do NOT
-    * re-apply the filter (kept files still need the caller's exact
-    * filter on top — envelopes prune provably-empty files, they don't
-    * prove the kept rows match). */
-  private def readKeptOrEmpty(spark: SparkSession, dir: Path,
-      kept: Seq[String], skipped: Seq[String],
-      dvs: Seq[String] = Seq.empty,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      colMap: Map[String, String] = Map.empty)
-      : DataFrame = {
-    val toRead = if (kept.nonEmpty) kept else skipped.take(1)
-    if (toRead.isEmpty) {
-      // zero-file snapshot: readable iff the manifest recorded the schema
-      val s = schema.getOrElse(throw new IllegalStateException(
-        "the resolved version is a zero-file snapshot with no recorded " +
-          "schema — nothing to read (pre-schema manifests need at least " +
-          "one schema-only part)"))
-      return spark.createDataFrame(
+  private def scanPruned(spark: SparkSession, dir: Path, v: Int,
+      st: LogState, where: Seq[(String, PredRange)]): DataFrame = {
+    val (kept, skipped) = pruneForPredicate(st, st.files, where)
+    lastLakeScan.set((kept.size, st.files.size))
+    readKept(spark, dir, v, st, kept, skipped)
+  }
+
+  /** The one tail of every snapshot read: the kept files with the
+    * version's DVs and column mapping applied, or — when nothing is
+    * kept — the EMPTY frame of the recorded schema. A legacy
+    * (schema-less) lineage reads one skipped file under `lit(false)` for
+    * its schema instead; a zero-file snapshot with no recorded schema
+    * has nothing to read and throws. */
+  private def readKept(spark: SparkSession, dir: Path, v: Int, st: LogState,
+      kept: Seq[String], skipped: Seq[String]): DataFrame = {
+    val schema = schemaFromJson(st.schemaJson)
+    if (kept.nonEmpty) readFiles(spark, dir, kept, st.dvs, schema, st.colMap)
+    else schema match {
+      case Some(s) => spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), s)
+      case None if skipped.nonEmpty =>
+        readFiles(spark, dir, skipped.take(1), st.dvs, None, st.colMap)
+          .filter(org.apache.spark.sql.functions.lit(false))
+      case None => throw new IllegalStateException(
+        s"version $v of $dir is a zero-file snapshot with no recorded " +
+          "schema — nothing to read (pre-schema manifests need at least " +
+          "one schema-only part)")
     }
-    val df = readFiles(spark, dir, toRead, dvs, schema, colMap)
-    if (kept.nonEmpty) df
-    else df.filter(org.apache.spark.sql.functions.lit(false))
   }
 
-  /** The skipping decision itself, exposed for gates/audits:
-    * (kept, skipped) manifest file names for `column` ∩ [lo, hi].
-    * Integer form — serves long/int/date columns AND (in physical units)
-    * TIMESTAMP-micros and unscaled small decimals; see [[ColEnv]]. */
-  def prunedFiles(dir: Path, column: String, lo: Long, hi: Long,
-      asOf: Option[Int] = None): (Seq[String], Seq[String]) =
-    pruneWith(dir, column, asOf) {
-      case IntEnv(mn, mx) => mx >= lo && mn <= hi // overlap → must read
-      case _: StrEnv => true // type mismatch → conservative read
-    }
-
-  /** String-range form of [[prunedFiles]]: `column` ∩ [lo, hi] in
-    * unsigned UTF-8 byte order (Spark's own string ordering). Envelopes
-    * are truncated at commit ([[StatsTruncateLen]]), already rounded
-    * outward, so the plain overlap test here stays sound. */
-  def prunedFilesString(dir: Path, column: String, lo: String, hi: String,
-      asOf: Option[Int] = None): (Seq[String], Seq[String]) =
-    pruneWith(dir, column, asOf) {
-      case StrEnv(mn, emx) =>
-        emx.forall(utf8Cmp(_, lo) >= 0) && utf8Cmp(mn, hi) <= 0
-      case _: IntEnv => true // type mismatch → conservative read
-    }
-
-  /** Read AS OF a version with string-range manifest skipping — the
-    * [[readPruned]] contract on a string column (same all-pruned-→-empty
-    * safety; kept files still need the caller's exact filter on top). */
-  def readPrunedString(spark: SparkSession, dir: Path, column: String,
-      lo: String, hi: String, asOf: Option[Int] = None): DataFrame = {
-    // same one-version resolution as readPruned (torn-snapshot hazard)
-    val v = resolveVersion(dir, asOf)
-    val st = stateOf(dir, v)
-    val (kept, skipped) = prunedFilesString(dir, column, lo, hi, Some(v))
-    readKeptOrEmpty(spark, dir, kept, skipped, st.dvs,
-      schemaFromJson(st.schemaJson), st.colMap)
+  /** The skipping decision itself, exposed for gates/audits: the
+    * version's manifest files as (kept, skipped) under the conjunction
+    * `where` ([[pruneForPredicate]]), from one state resolution. */
+  def prunedFiles(dir: Path, where: Seq[(String, PredRange)],
+      asOf: Option[Int] = None): (Seq[String], Seq[String]) = {
+    val st = stateOf(dir, resolveVersion(dir, asOf))
+    pruneForPredicate(st, st.files, where)
   }
 
   /** The table's partition spec at a version (round 14; empty for
@@ -778,144 +739,72 @@ object SnapshotLog {
       : Map[String, Map[String, Option[String]]] =
     stateOf(dir, resolveVersion(dir, asOf)).part
 
-  /** (kept, skipped) by PARTITION VALUES alone: a file is SKIPPED when
-    * ANY filtered column has a recorded value outside its filter set
-    * (a column without a recorded value contributes nothing either way)
-    * — the hive-layout coarse prune, decided from the one manifest read
-    * (no listing, no footer). Values compare as the exact strings the
-    * layout wrote (a long partition value 7 is "7"). Files with no
-    * recorded value on any filtered column always read (sound). */
-  def prunedFilesPartition(dir: Path, partFilter: Map[String, Set[String]],
-      asOf: Option[Int] = None): (Seq[String], Seq[String]) =
-    prunedFilesPartitionNullable(dir,
-      partFilter.map { case (c, vs) => c -> vs.map(Option(_)) }, asOf)
-
-  /** [[prunedFilesPartition]] with NULL-PARTITION addressability (round
-    * 15, judge #8): filter values are Option[String], where None selects
-    * the NULL partition — an IS-NULL partition predicate prunes to
-    * exactly the null-partition files instead of full-scanning (the
-    * string form cannot express it: there, a recorded null value matches
-    * no wanted string and the file correctly skips). Same soundness
-    * rule: files without a recorded value on a filtered column always
-    * read. */
-  def prunedFilesPartitionNullable(dir: Path,
-      partFilter: Map[String, Set[Option[String]]],
-      asOf: Option[Int] = None): (Seq[String], Seq[String]) =
-    prunePartitionOf(stateOf(dir, resolveVersion(dir, asOf)), partFilter)
-
-  private def prunePartitionOf(st: LogState,
-      partFilter: Map[String, Set[Option[String]]])
-      : (Seq[String], Seq[String]) =
-    st.files.partition { f =>
-      partFilter.forall { case (c, wanted) =>
-        st.part.get(f).flatMap(_.get(c)) match {
-          // a recorded value — including the NULL partition (None) —
-          // matches iff the filter wants it
-          case Some(v) => wanted.contains(v)
-          case None => true // no recorded value → must read
-        }
-      }
-    }
-
-  /** Read AS OF a version with PARTITION pruning COMPOSED with integer
-    * envelope skipping — the round-14 hive-layout contract: the file set
-    * is the intersection of [[prunedFilesPartition]]'s coarse decision
-    * and [[prunedFiles]]'s fine one, from the same single manifest
-    * resolution. Kept files still need the caller's exact filter on top
-    * (pruning removes provably-empty work, it proves nothing about kept
-    * rows). */
-  def readPrunedPartition(spark: SparkSession, dir: Path,
-      partFilter: Map[String, Set[String]],
-      column: String, lo: Long, hi: Long,
-      asOf: Option[Int] = None): DataFrame = {
-    // ONE state resolution for the whole decision (the stateCache
-    // discipline): both prunes work off the same destructured state
-    val st = stateOf(dir, resolveVersion(dir, asOf))
-    val keptPSet = prunePartitionOf(st,
-      partFilter.map { case (c, vs) => c -> vs.map(Option(_)) })._1.toSet
-    val kept = st.files.filter { f =>
-      keptPSet(f) && (st.stats.get(f).flatMap(_.get(column)) match {
-        case Some(IntEnv(mn, mx)) => mx >= lo && mn <= hi
-        case _ => true // no/unsuited envelope → conservative read
-      })
-    }
-    val skipped = st.files.filterNot(kept.toSet)
-    readKeptOrEmpty(spark, dir, kept, skipped, st.dvs,
-      schemaFromJson(st.schemaJson), st.colMap)
-  }
-
-  private def pruneWith(dir: Path, column: String, asOf: Option[Int])(
-      overlaps: ColEnv => Boolean): (Seq[String], Seq[String]) = {
-    val vs = versions(dir)
-    require(vs.nonEmpty, s"$dir has no committed snapshots")
-    val v = asOf.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v does not exist in $dir (have $vs)")
-    val st = stateOf(dir, v)
-    val stats = st.stats
-    st.files.partition { f =>
-      stats.get(f).flatMap(_.get(column)) match {
-        case Some(env) => overlaps(env)
-        case None => true // unknown → must read
-      }
-    }
-  }
-
-  /** A NECESSARY per-column range implied by a mutation predicate —
-    * the file-pruning contract of [[deleteWhere]]/[[updateWhere]]: every
-    * row satisfying the predicate must fall inside the range, so a file
-    * whose committed envelope cannot overlap it provably contains no
-    * matches and is never opened by the policy/match scan. The range may
-    * be LOOSER than the predicate (strict bounds widen to inclusive,
-    * un-analyzable conjuncts contribute nothing) — looseness only costs
-    * reads, never correctness. */
-  private[graft] sealed trait PredRange
-  private[graft] final case class IntRange(lo: Long, hi: Long) extends PredRange
-  private[graft] final case class StrRange(lo: String, hi: Option[String])
-    extends PredRange
+  /** One constraint of a pruning conjunction. A `where` is a sequence of
+    * (column, constraint) pairs that must ALL hold for a row to match:
+    *  - [[IntRange]] / [[StrRange]]: the value lies in [lo, hi] — integer
+    *    bounds in the column's PHYSICAL units (see [[ColEnv]]), string
+    *    bounds in unsigned UTF-8 order (`hi = None`: unbounded above);
+    *  - [[NullIs]]: the value IS NULL (`wantNull`) or IS NOT NULL;
+    *  - [[PartIn]]: the row's partition value is one of `values`
+    *    (None = the null partition), decided from the values the
+    *    manifest records for a `partitionBy` column.
+    * [[requiredRanges]] and [[requiredNullness]] derive NECESSARY
+    * constraints of a resolved predicate: every row satisfying the
+    * predicate satisfies them, so they may be LOOSER than it (strict
+    * bounds widen to inclusive, un-analyzable conjuncts contribute
+    * nothing) — looseness only costs reads, never correctness. */
+  sealed trait PredRange
+  final case class IntRange(lo: Long, hi: Long) extends PredRange
+  final case class StrRange(lo: String, hi: Option[String]) extends PredRange
+  final case class NullIs(wantNull: Boolean) extends PredRange
+  final case class PartIn(values: Set[Option[String]]) extends PredRange
 
   /** Resolve a user-built predicate Column against a table schema and
-    * extract its necessary ranges — the one entry point
-    * [[deleteWhere]]/[[updateWhere]] and the specs share. Resolution
-    * goes through the engine's own analyzer (an empty frame + Filter),
-    * so type-coercion casts land exactly where every later read will put
-    * them, and [[requiredRanges]] sees the same resolved tree. */
+    * extract its necessary constraints ([[requiredRanges]] and
+    * [[requiredNullness]]) — the one entry point [[readWhere]],
+    * [[deleteWhere]] and [[updateWhere]] share. Resolution goes through
+    * the engine's own analyzer (an empty frame + Filter), so
+    * type-coercion casts land exactly where every later read will put
+    * them, and the extractors see the same resolved tree. */
+  private[graft] def constraintsOf(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      cond: org.apache.spark.sql.Column): Seq[(String, PredRange)] =
+    resolvedCondition(spark, schema, cond).toSeq
+      .flatMap(e => requiredRanges(e).toSeq ++ requiredNullness(e))
+
+  /** The range half of [[constraintsOf]], one range per column. */
   private[graft] def mutationRanges(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
-      cond: org.apache.spark.sql.Column): Map[String, PredRange] = {
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    org.apache.spark.sql.GraftBridge.analyzedPlan(empty.filter(cond))
-      .collectFirst { case f: Filter => requiredRanges(f.condition) }
+      cond: org.apache.spark.sql.Column): Map[String, PredRange] =
+    resolvedCondition(spark, schema, cond).map(requiredRanges)
       .getOrElse(Map.empty)
-  }
 
-  /** NULL-ness constraints NECESSARILY implied by a resolved mutation
-    * predicate (round 15): column → {true} = every matching row's value
-    * is NULL (an `IsNull` conjunct), {false} = non-NULL (`IsNotNull`),
-    * {true, false} = the conjunction is unsatisfiable (prune every
-    * file). The conservative subset — only top-level AND conjuncts
-    * contribute; OR branches and anything else yield nothing (read).
-    * Casts: a value-preserving widening integral cast is transparent
-    * both ways (null ↔ null); other casts can MANUFACTURE nulls
-    * (string→int), so `IsNull(cast(x))` does not imply `IsNull(x)` and
-    * is skipped, while `IsNotNull(cast(x))` ⇒ `IsNotNull(x)` holds for
-    * every null-preserving cast and is kept. Probed against the
-    * committed per-file null counts by [[pruneForPredicate]]. */
-  private[graft] def mutationNullness(spark: SparkSession,
+  private def resolvedCondition(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
-      cond: org.apache.spark.sql.Column): Map[String, Set[Boolean]] = {
+      cond: org.apache.spark.sql.Column)
+      : Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
     import org.apache.spark.sql.catalyst.plans.logical.Filter
     val empty = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     org.apache.spark.sql.GraftBridge.analyzedPlan(empty.filter(cond))
-      .collectFirst { case f: Filter => requiredNullness(f.condition) }
-      .getOrElse(Map.empty)
+      .collectFirst { case f: Filter => f.condition }
   }
 
+  /** NULL-ness constraints NECESSARILY implied by a resolved predicate
+    * (round 15): `NullIs(true)` for an `IsNull` conjunct, `NullIs(false)`
+    * for `IsNotNull`; both on one column make the conjunction
+    * unsatisfiable (every file prunes). The conservative subset — only
+    * top-level AND conjuncts contribute; OR branches and anything else
+    * yield nothing (read). Casts: a value-preserving widening integral
+    * cast is transparent both ways (null ↔ null); other casts can
+    * MANUFACTURE nulls (string→int), so `IsNull(cast(x))` does not imply
+    * `IsNull(x)` and is skipped, while `IsNotNull(cast(x))` ⇒
+    * `IsNotNull(x)` holds for every null-preserving cast and is kept.
+    * Probed against the committed per-file null counts by
+    * [[pruneForPredicate]]. */
   private[graft] def requiredNullness(
       e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Map[String, Set[Boolean]] = {
+      : Seq[(String, PredRange)] = {
     import org.apache.spark.sql.catalyst.expressions._
     def attr(x: Expression): Option[String] = x match {
       case a: AttributeReference => Some(a.name)
@@ -928,17 +817,10 @@ object SnapshotLog {
       case other => attr(other)
     }
     e match {
-      case And(l, r) =>
-        val a = requiredNullness(l)
-        val b = requiredNullness(r)
-        (a.keySet ++ b.keySet).map(k =>
-          k -> (a.getOrElse(k, Set.empty) ++ b.getOrElse(k, Set.empty))
-        ).toMap
-      case IsNull(x) => attr(x).map(n => Map(n -> Set(true)))
-        .getOrElse(Map.empty)
-      case IsNotNull(x) => attrThroughCasts(x)
-        .map(n => Map(n -> Set(false))).getOrElse(Map.empty)
-      case _ => Map.empty
+      case And(l, r) => (requiredNullness(l) ++ requiredNullness(r)).distinct
+      case IsNull(x) => attr(x).map(_ -> NullIs(true)).toSeq
+      case IsNotNull(x) => attrThroughCasts(x).map(_ -> NullIs(false)).toSeq
+      case _ => Seq.empty
     }
   }
 
@@ -1072,13 +954,60 @@ object SnapshotLog {
     }
   }
 
-  /** Does a committed envelope overlap a necessary range? A mismatch of
-    * shapes (or no constraint) reads conservatively. */
-  /** An INVERTED necessary range (lo > hi, produced by intersecting an
-    * unsatisfiable AND) — the predicate is FALSE on every row. */
-  private def unsatisfiableRange(r: PredRange): Boolean = r match {
+  /** THE pruning evaluator: every manifest-level skip decision — pruned
+    * reads, [[prunedFiles]], the DELETE/UPDATE candidate scans and the
+    * delete's rebase over appended files — partitions `files` of state
+    * `st` into (kept, skipped) under the conjunction `where`. A file is
+    * skipped when SOME constraint provably fails on every row it holds,
+    * decided from committed metadata alone ([[mayMatch]]); a file
+    * without the metadata a constraint needs is kept (sound). An
+    * UNSATISFIABLE conjunction — an inverted range (an AND of disjoint
+    * bounds), or IS NULL and IS NOT NULL on one column — is false on
+    * every row, so every file prunes, metadata or not. */
+  private def pruneForPredicate(st: LogState, files: Seq[String],
+      where: Seq[(String, PredRange)]): (Seq[String], Seq[String]) =
+    if (where.exists { case (c, r) => unsatisfiable(c, r, where) })
+      (Seq.empty, files)
+    else if (where.isEmpty) (files, Seq.empty)
+    else files.partition(f => where.forall { case (c, r) => mayMatch(st, f, c, r) })
+
+  private def unsatisfiable(c: String, r: PredRange,
+      where: Seq[(String, PredRange)]): Boolean = r match {
     case IntRange(lo, hi) => lo > hi
     case StrRange(lo, hi) => hi.exists(utf8Cmp(lo, _) > 0)
+    case NullIs(wantNull) => where.contains(c -> NullIs(!wantNull))
+    case PartIn(_) => false
+  }
+
+  /** Can file `f` hold a row whose column `c` satisfies `r`?
+    *  - a range: its envelope must overlap (an envelope of the other
+    *    type reads), and so must its recorded partition value — the null
+    *    partition satisfies no range, since SQL comparisons with NULL are
+    *    never TRUE;
+    *  - IS NULL / IS NOT NULL: a recorded partition value decides
+    *    outright (a valued partition's column is non-null in every row,
+    *    the null partition's in none); otherwise IS NULL needs a non-zero
+    *    null count and IS NOT NULL a null count below the file's row
+    *    count (so it needs row meta);
+    *  - partition-in: its recorded partition value must be in the set.
+    * Missing metadata answers true. Partition values are looked up only
+    * for partition columns, so each lazy state member is decoded only
+    * when a constraint needs it. */
+  private def mayMatch(st: LogState, f: String, c: String,
+      r: PredRange): Boolean = {
+    def partValue: Option[Option[String]] = st.part.get(f).flatMap(_.get(c))
+    val partitioned = st.partCols.contains(c)
+    r match {
+      case PartIn(values) => partValue.forall(values.contains)
+      case NullIs(wantNull) =>
+        (!partitioned || partValue.forall(_.isEmpty == wantNull)) &&
+          st.nulls.get(f).flatMap(_.get(c)).forall(nc =>
+            if (wantNull) nc > 0
+            else st.meta.get(f).forall(m => nc < m.rows))
+      case range =>
+        st.stats.get(f).flatMap(_.get(c)).forall(rangeOverlaps(range, _)) &&
+          (!partitioned || partValue.forall(partValueOverlaps(range, _)))
+    }
   }
 
   private def rangeOverlaps(r: PredRange, env: ColEnv): Boolean = (r, env) match {
@@ -1088,72 +1017,18 @@ object SnapshotLog {
     case _ => true
   }
 
-  /** Does a file's recorded PARTITION VALUE for a constrained column
-    * fall inside a necessary range? Missing value → true (conservative
-    * read). A null-partition value satisfies no range constraint — SQL
-    * comparisons with NULL are never TRUE, so a file holding only the
-    * null partition provably contains no predicate match on that
-    * column. Integer ranges parse the hive string value; an unparseable
-    * value reads conservatively. */
+  /** Does a recorded PARTITION VALUE fall inside a range? The null
+    * partition (None) never does; integer ranges parse the hive string
+    * value, and an unparseable value reads conservatively. */
   private def partValueOverlaps(r: PredRange, v: Option[String]): Boolean =
-    v match {
-      case None => false // the null partition: col <op> literal is never TRUE
-      case Some(s) => r match {
-        case IntRange(lo, hi) =>
-          scala.util.Try(s.toLong).toOption
-            .forall(n => n >= lo && n <= hi)
-        case StrRange(lo, hi) =>
-          utf8Cmp(s, lo) >= 0 && hi.forall(utf8Cmp(s, _) <= 0)
-      }
+    (r, v) match {
+      case (_, None) => false // the null partition: col <op> literal is never TRUE
+      case (IntRange(lo, hi), Some(s)) =>
+        s.toLongOption.forall(n => n >= lo && n <= hi)
+      case (StrRange(lo, hi), Some(s)) =>
+        utf8Cmp(s, lo) >= 0 && hi.forall(utf8Cmp(s, _) <= 0)
+      case _ => true
     }
-
-  /** Partition a manifest into (candidates, provably-untouched) for a
-    * mutation predicate — the same decision [[readPruned]] makes for
-    * reads, applied to DELETE/UPDATE, COMPOSED from both metadata
-    * sources (round 14): a file is a candidate unless SOME constrained
-    * column's envelope misses its necessary range OR its recorded
-    * partition value falls outside it. Files without an envelope or
-    * partition value for a constrained column are candidates (sound). */
-  private def pruneForPredicate(files: Seq[String],
-      stats: Map[String, Map[String, ColEnv]],
-      ranges: Map[String, PredRange],
-      part: Map[String, Map[String, Option[String]]] = Map.empty,
-      nullness: Map[String, Set[Boolean]] = Map.empty,
-      nulls: Map[String, Map[String, Long]] = Map.empty,
-      meta: Map[String, FileMeta] = Map.empty)
-      : (Seq[String], Seq[String]) = {
-    // an unsatisfiable necessary range — or a column required to be
-    // both NULL and non-NULL — falsifies the whole predicate on every
-    // row: prune everything, including files with no envelope
-    if (ranges.values.exists(unsatisfiableRange) ||
-        nullness.values.exists(_.size > 1)) (Seq.empty, files)
-    else if (ranges.isEmpty && nullness.isEmpty) (files, Seq.empty)
-    else files.partition { f =>
-      ranges.forall { case (c, r) =>
-        stats.get(f).flatMap(_.get(c)).forall(rangeOverlaps(r, _)) &&
-          part.get(f).flatMap(_.get(c))
-            .forall(partValueOverlaps(r, _))
-      } && nullness.forall { case (c, req) =>
-        val needNull = req.head
-        // a recorded PARTITION value decides null-ness outright: a
-        // valued partition's column is non-null in every row, the null
-        // partition's in none (round 15, judge #8 — the IS-NULL
-        // partition read prunes to the null partition's files)
-        val partOk = part.get(f).flatMap(_.get(c)) match {
-          case Some(Some(_)) => !needNull
-          case Some(None) => needNull
-          case None => true
-        }
-        partOk && (nulls.get(f).flatMap(_.get(c)) match {
-          case None => true // no recorded count → must read
-          case Some(nc) =>
-            if (needNull) nc > 0 // IS NULL: a null-free file can't match
-            else // IS NOT NULL: an all-null file can't match (needs rows)
-              meta.get(f).forall(m => nc < m.rows)
-        })
-      }
-    }
-  }
 
   /** Dev/gate observability seam: (files scanned, manifest files) of the
     * most recent [[deleteWhere]]/[[updateWhere]] predicate scan on this
@@ -1413,13 +1288,8 @@ object SnapshotLog {
 
   /** The data files version `v` (default latest) resolves to — the
     * manifest membership, exposed for maintenance tooling and gates. */
-  def files(dir: Path, asOf: Option[Int] = None): Seq[String] = {
-    val vs = versions(dir)
-    require(vs.nonEmpty, s"$dir has no committed snapshots")
-    val v = asOf.getOrElse(vs.last)
-    require(vs.contains(v), s"version $v does not exist in $dir (have $vs)")
-    readManifest(dir, v)
-  }
+  def files(dir: Path, asOf: Option[Int] = None): Seq[String] =
+    readManifest(dir, resolveVersion(dir, asOf))
 
   /** COUNT(*) over a snapshot from METADATA ONLY (round 14; the
     * Delta/Iceberg numRecords idea): the manifest's per-file row counts
@@ -1473,25 +1343,6 @@ object SnapshotLog {
     Some(st.files.map(f => st.meta(f).rows - st.nulls(f)(column)).sum)
   }
 
-  /** (kept, skipped) for an IS NULL / IS NOT NULL predicate on `column`,
-    * decided from the committed per-file null counts alone — the
-    * manifest-level twin of the mutation-side pruning
-    * ([[pruneForPredicate]]'s nullness arm), exposed for gates/audits.
-    * Sound: files without a recorded count (or, for IS NOT NULL, without
-    * row meta) always read. */
-  def prunedFilesNull(dir: Path, column: String, wantNull: Boolean,
-      asOf: Option[Int] = None): (Seq[String], Seq[String]) = {
-    val st = stateOf(dir, resolveVersion(dir, asOf))
-    st.files.partition { f =>
-      st.nulls.get(f).flatMap(_.get(column)) match {
-        case None => true
-        case Some(nc) =>
-          if (wantNull) nc > 0
-          else st.meta.get(f).forall(m => nc < m.rows)
-      }
-    }
-  }
-
   /** Stage a frame's parquet output into `data/` with durable,
     * token-unique names and harvest each file's meta + envelopes — the
     * shared write half of every layout rewrite ([[compact]], [[binPack]],
@@ -1504,8 +1355,7 @@ object SnapshotLog {
       : (Seq[String],
         Map[String, Map[String, ColEnv]], Map[String, FileMeta],
         Map[String, Map[String, Long]]) = {
-    val staging = Files.createTempDirectory(dataDir(dir), ".rw-")
-    try {
+    Staging(dataDir(dir), ".rw-") { staging =>
       // data files carry PHYSICAL names; the harvest reads physical
       // footers and the manifest re-keys to logical (mapping-blind
       // consumers)
@@ -1515,15 +1365,29 @@ object SnapshotLog {
       val moved = moveParts(staging, dir,
         i => f"c$nameV%05d-$token-$i%05d.parquet")
       fsync(dataDir(dir))
-      val harvested = harvestFiles(dir, moved,
-        statCols.map(physNameOf(colMap, _)), Some(df.sparkSession))
-      (moved,
-        logicalizeCols(harvested.map { case (n, h) => n -> h.stats }
-          .filter(_._2.nonEmpty).toMap, colMap),
-        harvested.map { case (n, h) => n -> h.meta }.toMap,
-        logicalizeCols(harvested.map { case (n, h) => n -> h.nulls }
-          .filter(_._2.nonEmpty).toMap, colMap))
-    } finally deleteRecursively(staging)
+      val (stats, meta, nulls) =
+        harvestLogical(dir, moved, statCols, colMap, Some(df.sparkSession))
+      (moved, stats, meta, nulls)
+    }
+  }
+
+  /** [[harvestFiles]] for `names` on the LOGICAL stats columns
+    * `statCols`: the footers are read under their physical names and the
+    * per-file envelopes and null counts come back keyed by logical name
+    * ([[logicalizeCols]]); files with neither are left out of those two
+    * maps. Returns (stats, meta, nulls). */
+  private def harvestLogical(dir: Path, names: Seq[String],
+      statCols: Set[String], colMap: Map[String, String],
+      spark: Option[SparkSession])
+      : (Map[String, Map[String, ColEnv]], Map[String, FileMeta],
+        Map[String, Map[String, Long]]) = {
+    val harvested =
+      harvestFiles(dir, names, statCols.map(physNameOf(colMap, _)), spark)
+    (logicalizeCols(harvested.map { case (n, h) => n -> h.stats }
+        .filter(_._2.nonEmpty).toMap, colMap),
+      harvested.map { case (n, h) => n -> h.meta }.toMap,
+      logicalizeCols(harvested.map { case (n, h) => n -> h.nulls }
+        .filter(_._2.nonEmpty).toMap, colMap))
   }
 
   /** Publish a REWRITE — a new version whose semantics are "replace
@@ -1970,20 +1834,9 @@ object SnapshotLog {
   def read(spark: SparkSession, dir: Path, asOf: Option[Int] = None): DataFrame = {
     val v = resolveVersion(dir, asOf)
     val st = stateOf(dir, v) // one resolution: files, DVs, schema together
-    val files = st.files
-    val schema = schemaFromJson(st.schemaJson)
-    if (files.isEmpty) {
-      // a zero-file snapshot (e.g. a full-table DELETE dropped every
-      // file) is readable iff its manifest carries the schema — the
-      // empty frame is then exact, not a guess
-      val s = schema.getOrElse(throw new IllegalStateException(
-        s"version $v of $dir is a zero-file snapshot with no recorded " +
-          "schema — nothing to read (pre-schema manifests need at least " +
-          "one schema-only part)"))
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), s)
-    }
-    readFiles(spark, dir, files, st.dvs, schema, st.colMap)
+    // a zero-file snapshot (e.g. a full-table DELETE dropped every file)
+    // reads as the empty frame of its recorded schema
+    readKept(spark, dir, v, st, st.files, Seq.empty)
   }
 
   /** The log's COMMIT HISTORY as a DataFrame — columns `(version, ts,
@@ -2092,41 +1945,29 @@ object SnapshotLog {
   }
 
   /** Manifest-pruned snapshot read for a USER predicate (round 16,
-    * judge #2 — the `graft-lake` batch relation's scan path): envelope,
-    * partition-value, and null-count pruning decide from the ONE
-    * manifest read which files can hold matching rows
-    * ([[pruneForPredicate]], the same composition the mutation verbs
-    * use); kept files scan with DVs applied and the predicate applied
-    * INSIDE the plan, so Catalyst pushes it down to the parquet reader
-    * too. Sound: files without metadata always read, legacy schema-less
-    * lineages skip manifest pruning entirely, and an all-pruned
-    * predicate returns the schema-exact empty frame. */
+    * judge #2 — the `graft-lake` batch relation's scan path):
+    * [[readPruned]] over the predicate's necessary constraints
+    * ([[constraintsOf]], the same extraction the mutation verbs use),
+    * with the predicate itself applied INSIDE the plan, so Catalyst
+    * pushes it down to the parquet reader too. Legacy schema-less
+    * lineages have no schema to resolve the predicate against and skip
+    * manifest pruning. */
   private[graft] def readWhere(spark: SparkSession, dir: Path,
       cond: Option[org.apache.spark.sql.Column],
       asOf: Option[Int] = None): DataFrame = {
     val v = resolveVersion(dir, asOf)
-    cond match {
-      case None => read(spark, dir, Some(v))
-      case Some(c) =>
-        val st = stateOf(dir, v)
-        schemaFromJson(st.schemaJson) match {
-          case None => read(spark, dir, Some(v)).filter(c)
-          case Some(sc) =>
-            val ranges = mutationRanges(spark, sc, c)
-            val nullness = mutationNullness(spark, sc, c)
-            val (keep, _) = pruneForPredicate(st.files, st.stats, ranges,
-              st.part, nullness, st.nulls, st.meta)
-            lastLakeScan.set((keep.size, st.files.size))
-            if (keep.isEmpty) spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](), sc)
-            else readFiles(spark, dir, keep, st.dvs, Some(sc), st.colMap)
-              .filter(c)
-        }
-    }
+    val st = stateOf(dir, v)
+    val where = for {
+      c <- cond.toSeq
+      schema <- schemaFromJson(st.schemaJson).toSeq
+      w <- constraintsOf(spark, schema, c)
+    } yield w
+    val df = scanPruned(spark, dir, v, st, where)
+    cond.fold(df)(df.filter)
   }
 
   /** Dev/gate observability seam: (files scanned, manifest files) of
-    * the most recent [[readWhere]] manifest-pruned relation scan on
+    * the most recent [[readPruned]]/[[readWhere]] manifest-pruned scan on
     * this JVM — how the provider spec proves a pushed filter opened
     * strictly fewer files. Not part of the API surface. */
   private[graft] val lastLakeScan =
@@ -2376,12 +2217,9 @@ object SnapshotLog {
     // key. Un-analyzable predicates read everything, as before.
     // (legacy pre-schema lineages skip pruning — no schema to resolve
     // the predicate against; they read everything, as before round 13)
-    val ranges = schema.map(mutationRanges(spark, _, condition))
-      .getOrElse(Map.empty[String, PredRange])
-    val nullness = schema.map(mutationNullness(spark, _, condition))
-      .getOrElse(Map.empty[String, Set[Boolean]])
-    val (candidates, _) = pruneForPredicate(files, stats0, ranges, st0.part,
-      nullness, st0.nulls, st0.meta)
+    val where = schema.map(constraintsOf(spark, _, condition))
+      .getOrElse(Seq.empty)
+    val (candidates, _) = pruneForPredicate(st0, files, where)
     lastMutationScan.set((candidates.size, files.size))
     if (candidates.isEmpty) return vRead // provably no matches anywhere
     val live = liveWithPos(spark, dir, candidates, dvs0, schema,
@@ -2418,52 +2256,33 @@ object SnapshotLog {
     val dvTargets = perFile.collect {
       case (f, d, _) if !dropped(f) && !rewrite(f) && d > 0 => f }.toSet
     val token = java.util.UUID.randomUUID().toString.take(8)
-    val staging = Files.createTempDirectory(dataDir(dir), ".dv-")
-    try {
-      var newDv: Seq[String] = Seq.empty
-      if (dvTargets.nonEmpty) {
-        live.filter(col("_graft_f").isin(dvTargets.toSeq: _*))
-          .filter(condition)
-          .select(col("_graft_f").as("f"), col("_graft_pos").as("pos"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(staging.resolve("dv").toString)
-        val part = listNames(staging.resolve("dv"))
-          .find(n => n.startsWith("part-") && n.endsWith(".parquet")).get
-        val name = f"dv${vRead + 1}%05d-$token.parquet"
-        Files.move(staging.resolve("dv").resolve(part),
-          dataDir(dir).resolve(name))
-        fsync(dataDir(dir).resolve(name))
-        newDv = Seq(name)
-      }
-      var newData: Seq[String] = Seq.empty
-      var newStats: Map[String, Map[String, ColEnv]] = Map.empty
-      var newMeta: Map[String, FileMeta] = Map.empty
-      var newNulls: Map[String, Map[String, Long]] = Map.empty
-      if (rewrite.nonEmpty) {
-        // survivors of the densely-deleted files, envelopes re-harvested
-        // on whatever columns their originals carried
-        val statCols = rewrite.flatMap(f =>
-          stats0.get(f).map(_.keySet).getOrElse(Set.empty[String]))
-        // SQL DELETE keeps rows whose predicate is NOT TRUE — false OR
-        // NULL; a bare !condition would silently drop NULL-predicate
-        // rows (the DV path and the dead count both treat NULL as kept)
-        toPhysical(live.filter(col("_graft_f").isin(rewrite.toSeq: _*))
-            .filter(!coalesce(condition, lit(false)))
-            .drop("_graft_f", "_graft_pos"), st0.colMap)
-          .write.mode("overwrite").option("compression", "zstd")
-          .parquet(staging.resolve("rw").toString)
-        newData = moveParts(staging.resolve("rw"), dir,
-          i => f"c${vRead + 1}%05d-$token-$i%05d.parquet")
-        val harvested = harvestFiles(dir, newData,
-          statCols.map(physNameOf(st0.colMap, _)), Some(spark))
-        newStats = logicalizeCols(
-          harvested.map { case (n, h) => n -> h.stats }
-            .filter(_._2.nonEmpty).toMap, st0.colMap)
-        newMeta = harvested.map { case (n, h) => n -> h.meta }.toMap
-        newNulls = logicalizeCols(
-          harvested.map { case (n, h) => n -> h.nulls }
-            .filter(_._2.nonEmpty).toMap, st0.colMap)
-      }
+    Staging(dataDir(dir), ".dv-") { staging =>
+      val newDv: Seq[String] =
+        if (dvTargets.isEmpty) Seq.empty
+        else Seq(publishDv(dir, staging.resolve("dv"),
+          f"dv${vRead + 1}%05d-$token.parquet",
+          live.filter(col("_graft_f").isin(dvTargets.toSeq: _*))
+            .filter(condition)).get)
+      // survivors of the densely-deleted files, envelopes re-harvested
+      // on whatever columns their originals carried
+      val newData: Seq[String] =
+        if (rewrite.isEmpty) Seq.empty
+        else {
+          // SQL DELETE keeps rows whose predicate is NOT TRUE — false OR
+          // NULL; a bare !condition would silently drop NULL-predicate
+          // rows (the DV path and the dead count both treat NULL as kept)
+          toPhysical(live.filter(col("_graft_f").isin(rewrite.toSeq: _*))
+              .filter(!coalesce(condition, lit(false)))
+              .drop("_graft_f", "_graft_pos"), st0.colMap)
+            .write.mode("overwrite").option("compression", "zstd")
+            .parquet(staging.resolve("rw").toString)
+          moveParts(staging.resolve("rw"), dir,
+            i => f"c${vRead + 1}%05d-$token-$i%05d.parquet")
+        }
+      val (newStats, newMeta, newNulls) = harvestLogical(dir, newData,
+        rewrite.flatMap(f =>
+          stats0.get(f).map(_.keySet).getOrElse(Set.empty[String])),
+        st0.colMap, Some(spark))
       fsync(dataDir(dir))
       val kept = files.filterNot(f => dropped(f) || rewrite(f))
       beforePublish()
@@ -2537,32 +2356,23 @@ object SnapshotLog {
           val curDvs = stCur.dvs
           // the winner's appended files get the same envelope pruning —
           // a pruned added file provably contains no predicate matches
-          val (addedFiles, _) = pruneForPredicate(
-            curManifest.filterNot(files.toSet), stCur.stats, ranges,
-            stCur.part, nullness, stCur.nulls, stCur.meta)
+          val (addedFiles, _) = pruneForPredicate(stCur,
+            curManifest.filterNot(files.toSet), where)
           val addedDv: Seq[String] =
             if (addedFiles.isEmpty) Seq.empty
             else {
               // predicate over the winner's rows only — their own DVs
-              // applied, the winner's (possibly evolved) schema driving
+              // applied, the winner's (possibly evolved) schema driving;
+              // a DV with no rows (the winner's rows contain no matches)
+              // is not published
               val dead = liveWithPos(spark, dir, addedFiles, curDvs,
                   schemaFromJson(stCur.schemaJson), stCur.colMap)
                 .filter(condition)
-                .select(col("_graft_f").as("f"), col("_graft_pos").as("pos"))
-              val rb = staging.resolve(s"rb$cur")
-              dead.coalesce(1).write.mode("overwrite").parquet(rb.toString)
-              val part = listNames(rb)
-                .find(n => n.startsWith("part-") && n.endsWith(".parquet"))
-              if (part.isEmpty ||
-                  footerRowCount(rb.resolve(part.get)) == 0L)
-                Seq.empty // the winner's rows contain no matches
-              else {
-                val name = f"dv${cur + 1}%05d-$token-rb.parquet"
-                Files.move(rb.resolve(part.get), dataDir(dir).resolve(name))
-                fsync(dataDir(dir).resolve(name))
-                fsync(dataDir(dir))
-                Seq(name)
-              }
+              val rb = publishDv(dir, staging.resolve(s"rb$cur"),
+                f"dv${cur + 1}%05d-$token-rb.parquet", dead,
+                keep = footerRowCount(_) > 0L)
+              if (rb.isDefined) fsync(dataDir(dir))
+              rb.toSeq
             }
           beforeAttempt(rebases)
           if (tryPublishManifest(dir, cur + 1,
@@ -2581,7 +2391,7 @@ object SnapshotLog {
         }
       }
       committed
-    } finally deleteRecursively(staging)
+    }
   }
 
   /** UPDATE ... SET as MERGE-ON-READ (round 12; the DV-based UPDATE
@@ -2622,12 +2432,8 @@ object SnapshotLog {
     val stats0 = st0.stats
     // same envelope pruning as [[deleteWhere]]: the match scan opens only
     // files whose envelopes can contain a predicate row (see there)
-    val (candidates, _) = pruneForPredicate(files, stats0,
-      schema.map(mutationRanges(spark, _, condition))
-        .getOrElse(Map.empty[String, PredRange]), st0.part,
-      schema.map(mutationNullness(spark, _, condition))
-        .getOrElse(Map.empty[String, Set[Boolean]]),
-      st0.nulls, st0.meta)
+    val (candidates, _) = pruneForPredicate(st0, files,
+      schema.map(constraintsOf(spark, _, condition)).getOrElse(Seq.empty))
     lastMutationScan.set((candidates.size, files.size))
     if (candidates.isEmpty) return vRead // provably no matches anywhere
     val live = liveWithPos(spark, dir, candidates, dvs0, schema,
@@ -2649,50 +2455,37 @@ object SnapshotLog {
           "schema with a commit)")
     }
     val token = java.util.UUID.randomUUID().toString.take(8)
-    val staging = Files.createTempDirectory(dataDir(dir), ".upd-")
-    try {
+    Staging(dataDir(dir), ".upd-") { staging =>
       // the ONLY base-table scan: matched rows with their row identity
       staged.write.mode("overwrite").parquet(staging.resolve("m").toString)
       val matched = sniffParquet(spark, staging.resolve("m"))
-      if (matched.isEmpty) return vRead // no matches → no-op, no version
-      // local split of just-matched rows: DV (old identities die) ...
-      matched.select(col("_graft_f").as("f"), col("_graft_pos").as("pos"))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("dv").toString)
-      val dvPart = listNames(staging.resolve("dv"))
-        .find(n => n.startsWith("part-") && n.endsWith(".parquet")).get
-      val dvName = f"dv${vRead + 1}%05d-$token.parquet"
-      Files.move(staging.resolve("dv").resolve(dvPart),
-        dataDir(dir).resolve(dvName))
-      fsync(dataDir(dir).resolve(dvName))
-      // ... and the appended updated rows
-      toPhysical(matched.select(dataCols.map(col): _*), st0.colMap)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(staging.resolve("u").toString)
-      val newData = moveParts(staging.resolve("u"), dir,
-        i => f"c${vRead + 1}%05d-$token-$i%05d.parquet")
-      fsync(dataDir(dir))
-      val harvested = harvestFiles(dir, newData,
-        statsCols.toSet.map(physNameOf(st0.colMap, _)), Some(spark))
-      val newStats = logicalizeCols(
-        harvested.map { case (n, h) => n -> h.stats }
-          .filter(_._2.nonEmpty).toMap, st0.colMap)
-      val newMeta = harvested.map { case (n, h) => n -> h.meta }.toMap
-      val newNulls = logicalizeCols(
-        harvested.map { case (n, h) => n -> h.nulls }
-          .filter(_._2.nonEmpty).toMap, st0.colMap)
-      if (!tryPublishManifest(dir, vRead + 1, files ++ newData,
-          stats0 ++ newStats,
-          txnId = None, dvs = dvs0 :+ dvName, schemaJson = schemaJson,
-          meta = st0.meta ++ newMeta,
-          partCols = st0.partCols, part = st0.part,
-          nulls = st0.nulls ++ newNulls,
-          colMap = st0.colMap, physUsed = st0.physUsed))
-        throw new java.util.ConcurrentModificationException(
-          s"update on $dir lost the race for version ${vRead + 1} — " +
-            "re-read and retry (the orphaned files are vacuumable)")
-      vRead + 1
-    } finally deleteRecursively(staging)
+      if (matched.isEmpty) vRead // no matches → no-op, no version
+      else {
+        // local split of just-matched rows: DV (old identities die) ...
+        val dv = publishDv(dir, staging.resolve("dv"),
+          f"dv${vRead + 1}%05d-$token.parquet", matched).get
+        // ... and the appended updated rows
+        toPhysical(matched.select(dataCols.map(col): _*), st0.colMap)
+          .write.mode("overwrite").option("compression", "zstd")
+          .parquet(staging.resolve("u").toString)
+        val newData = moveParts(staging.resolve("u"), dir,
+          i => f"c${vRead + 1}%05d-$token-$i%05d.parquet")
+        fsync(dataDir(dir))
+        val (newStats, newMeta, newNulls) = harvestLogical(dir, newData,
+          statsCols.toSet, st0.colMap, Some(spark))
+        if (!tryPublishManifest(dir, vRead + 1, files ++ newData,
+            stats0 ++ newStats,
+            txnId = None, dvs = dvs0 :+ dv, schemaJson = schemaJson,
+            meta = st0.meta ++ newMeta,
+            partCols = st0.partCols, part = st0.part,
+            nulls = st0.nulls ++ newNulls,
+            colMap = st0.colMap, physUsed = st0.physUsed))
+          throw new java.util.ConcurrentModificationException(
+            s"update on $dir lost the race for version ${vRead + 1} — " +
+              "re-read and retry (the orphaned files are vacuumable)")
+        vRead + 1
+      }
+    }
   }
 
   /** Live rows of a file set with (file, position) row identity: the
@@ -2723,6 +2516,25 @@ object SnapshotLog {
         .select(col("f").as("_graft_dv_f"), col("pos").as("_graft_dv_pos"))),
       col("_graft_f") === col("_graft_dv_f") &&
         col("_graft_pos") === col("_graft_dv_pos"), "left_anti")
+  }
+
+  /** Publish the (file, position) identities of `rows` (a
+    * [[liveWithPos]] frame) as ONE deletion-vector file `name` in
+    * `data/`: a single-task write into `stage`, whose part file moves to
+    * the durable name and is fsynced (the caller fsyncs the directory).
+    * None when the write left no part file or `keep` rejects it. */
+  private def publishDv(dir: Path, stage: Path, name: String,
+      rows: DataFrame, keep: Path => Boolean = _ => true): Option[String] = {
+    import org.apache.spark.sql.functions.col
+    rows.select(col("_graft_f").as("f"), col("_graft_pos").as("pos"))
+      .coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    listNames(stage)
+      .find(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      .map(stage.resolve).filter(keep).map { part =>
+        Files.move(part, dataDir(dir).resolve(name))
+        fsync(dataDir(dir).resolve(name))
+        name
+      }
   }
 
   /** Move a staging dir's part files into `data/` with durable,
@@ -3714,12 +3526,6 @@ object SnapshotLog {
   private def readManifest(dir: Path, v: Int): Seq[String] =
     stateOf(dir, v).files
 
-  /** Per-file column envelopes of manifest `v`; empty for pre-stats
-    * manifests (absent "stats" member) — every consumer treats a missing
-    * envelope as "must read", so old logs keep working unpruned. */
-  private def readStats(dir: Path, v: Int): Map[String, Map[String, ColEnv]] =
-    stateOf(dir, v).stats
-
   /** The full logical state a manifest version resolves to.
     * `partCols` is the table's partition spec (Delta's partitionBy,
     * round 14 — empty for unpartitioned lineages); `part` records each
@@ -4278,18 +4084,5 @@ object SnapshotLog {
     case org.json4s.JInt(i) => i.toLong
     case org.json4s.JLong(l) => l
     case other => throw new IllegalStateException(s"non-integer stat bound: $other")
-  }
-
-  /** Files.list with the stream CLOSED (it holds a directory fd). */
-  private def listNames(dir: Path): Seq[String] = {
-    val st = Files.list(dir)
-    try st.iterator().asScala.map(_.getFileName.toString).toVector
-    finally st.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      listNames(p).foreach(n => deleteRecursively(p.resolve(n)))
-    Files.deleteIfExists(p)
   }
 }

@@ -278,8 +278,8 @@ object ScaleProbe {
           val fs = SnapshotLog.files(dir)
           if (full) {
             SnapshotLog.metadataCount(spark, dir)
-            SnapshotLog.prunedFiles(dir, "doc_id", 0L, 1L)
-            SnapshotLog.prunedFilesNull(dir, "doc_id", wantNull = true)
+            SnapshotLog.prunedFiles(dir, Seq("doc_id" -> SnapshotLog.IntRange(0L, 1L)))
+            SnapshotLog.prunedFiles(dir, Seq("doc_id" -> SnapshotLog.NullIs(true)))
           }
           require(fs.nonEmpty)
         }
@@ -420,9 +420,10 @@ object ScaleProbe {
         val fs = SnapshotLog.files(dir, Some(vHead))
         if (full) {
           SnapshotLog.metadataCount(spark, dir, Some(vHead))
-          SnapshotLog.prunedFiles(dir, "doc_id", 0L, 1L, Some(vHead))
-          SnapshotLog.prunedFilesNull(dir, "doc_id", wantNull = true,
-            Some(vHead))
+          SnapshotLog.prunedFiles(dir,
+            Seq("doc_id" -> SnapshotLog.IntRange(0L, 1L)), Some(vHead))
+          SnapshotLog.prunedFiles(dir,
+            Seq("doc_id" -> SnapshotLog.NullIs(true)), Some(vHead))
           SnapshotLog.partitionValuesOf(dir, Some(vHead))
         }
         require(fs.nonEmpty)

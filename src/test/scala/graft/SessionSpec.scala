@@ -63,26 +63,45 @@ class SessionSpec extends AnyFunSuite {
     assert(out.head().getLong(0) == nanos)
   }
 
+  private def scalaFiles(root: Path): Seq[Path] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  /** Files under `roots` matching `re`, except the `allowed` path suffixes. */
+  private def offenders(roots: Seq[String], re: scala.util.matching.Regex,
+      allowed: String*): Seq[String] =
+    roots.map(Paths.get(_)).flatMap(scalaFiles)
+      .filterNot(f => allowed.exists(f.toString.replace('\\', '/').endsWith))
+      .filter(f => re.findFirstIn(Files.readString(f)).isDefined)
+      .map(_.toString)
+
   test("lint: one SparkSession builder (graft/Session.scala), one registerAll (TimeKernels)") {
-    val roots = Seq("src/main", "src/test").map(Paths.get(_))
+    val roots = Seq("src/main", "src/test")
     assert(Files.isRegularFile(Paths.get("src/main/scala/graft/Session.scala")),
       "run from the repository root")
-    def scalaFiles(root: Path): Seq[Path] = {
-      val s = Files.walk(root)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
     // patterns assembled at run time so this file does not match itself
     val builder = ("SparkSession" + "\\s*\\.\\s*builder").r
     val registrar = ("def " + "registerAll\\b").r
-    val files = roots.flatMap(scalaFiles)
-    def offenders(re: scala.util.matching.Regex, allowed: String): Seq[String] =
-      files.filterNot(_.toString.replace('\\', '/').endsWith(allowed))
-        .filter(f => re.findFirstIn(Files.readString(f)).isDefined)
-        .map(_.toString)
-    assert(offenders(builder, "graft/Session.scala").isEmpty,
+    assert(offenders(roots, builder, "graft/Session.scala").isEmpty,
       "build sessions with graft.Session.local")
-    assert(offenders(registrar, "graft/functions/TimeKernels.scala").isEmpty,
+    assert(offenders(roots, registrar, "graft/functions/TimeKernels.scala").isEmpty,
       "register SQL functions through GraftExtensions (graft.Session.pin)")
+  }
+
+  test("lint: one staging helper (graft/sources/Staging.scala), one pruning entry point") {
+    assert(Files.isRegularFile(Paths.get("src/main/scala/graft/sources/Staging.scala")),
+      "run from the repository root")
+    val deleter = ("def " + "deleteRecursively\\b").r
+    val tempDir = ("createTemp" + "Directory").r
+    val pruneVariant = ("def (prunedFiles|readPruned)" + "\\w").r
+    assert(offenders(Seq("src/main"), deleter, "graft/sources/Staging.scala").isEmpty,
+      "delete trees with graft.sources.Staging.deleteRecursively")
+    assert(offenders(Seq("src/main/scala/graft/sources"), tempDir,
+      "graft/sources/Staging.scala").isEmpty,
+      "stage writes in graft.sources through graft.sources.Staging")
+    assert(offenders(Seq("src/main"), pruneVariant).isEmpty,
+      "prune through SnapshotLog.prunedFiles / readPruned with a constraint list")
   }
 }

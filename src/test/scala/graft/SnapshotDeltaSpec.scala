@@ -343,7 +343,8 @@ class SnapshotDeltaSpec extends AnyFunSuite {
       "a snapshot read must decode only the spine")
     // pruning decodes exactly the stats column (state is memoized, so
     // no spine re-read either)
-    val (kept, skipped) = SnapshotLog.prunedFiles(dir, "n_nationkey", 0, 5)
+    val (kept, skipped) = SnapshotLog.prunedFiles(dir,
+      Seq("n_nationkey" -> SnapshotLog.IntRange(0, 5)))
     assert(kept.nonEmpty && skipped.nonEmpty)
     assert(reads() == Seq("f,stats"),
       "envelope pruning must decode exactly the stats column")
@@ -352,7 +353,7 @@ class SnapshotDeltaSpec extends AnyFunSuite {
     assert(reads() == Seq("f,size,rows"),
       "metadataCount must decode exactly the size/rows columns")
     // every member is memoized: a second touch decodes nothing
-    SnapshotLog.prunedFiles(dir, "n_nationkey", 0, 5)
+    SnapshotLog.prunedFiles(dir, Seq("n_nationkey" -> SnapshotLog.IntRange(0, 5)))
     SnapshotLog.metadataCount(spark, dir)
     assert(reads().isEmpty, "forced members memoize — no re-decode")
   }
@@ -405,7 +406,8 @@ class SnapshotDeltaSpec extends AnyFunSuite {
         s"an append must decode only the base checkpoint's spine: $reads")
       // ... and the published delta still resolves exactly
       assert(SnapshotLog.read(spark, dir).count() == 25)
-      val (kept, skipped) = SnapshotLog.prunedFiles(dir, "n_nationkey", 0, 5)
+      val (kept, skipped) = SnapshotLog.prunedFiles(dir,
+        Seq("n_nationkey" -> SnapshotLog.IntRange(0, 5)))
       assert(kept.nonEmpty && skipped.nonEmpty,
         "the direct-encoded delta must carry the new files' envelopes")
       assert(SnapshotLog.metadataCount(spark, dir).contains(25L))

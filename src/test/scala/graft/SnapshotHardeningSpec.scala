@@ -169,7 +169,8 @@ class SnapshotHardeningSpec extends AnyFunSuite {
       val dir2 = root.resolve("t2")
       SnapshotLog.commit(nation.repartitionByRange(4, col("n_nationkey")),
         dir2, statsCols = Seq("n_nationkey"))
-      val (kept, pruned) = SnapshotLog.prunedFiles(dir2, "n_nationkey", 0L, 2L)
+      val (kept, pruned) = SnapshotLog.prunedFiles(dir2,
+        Seq("n_nationkey" -> SnapshotLog.IntRange(0L, 2L)))
       val total = SnapshotLog.files(dir2).size
       assert(kept.size < total && kept.nonEmpty && pruned.nonEmpty,
         s"job-harvested envelopes must prune: ${kept.size} of $total")

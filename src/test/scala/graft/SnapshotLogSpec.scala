@@ -96,24 +96,28 @@ class SnapshotLogSpec extends AnyFunSuite {
     val mm = ords.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head()
     val (lo, hi) = (mm.getLong(0), mm.getLong(1))
     val qhi = lo + (hi - lo) / 4
-    val (kept, skipped) = SnapshotLog.prunedFiles(dir, "o_orderkey", lo, qhi)
+    val (kept, skipped) = SnapshotLog.prunedFiles(dir,
+      Seq("o_orderkey" -> SnapshotLog.IntRange(lo, qhi)))
     assert(kept.nonEmpty && skipped.nonEmpty,
       s"range slabs must actually prune: kept=$kept skipped=$skipped")
     // soundness: the pruned read + real filter equals the unpruned read +
     // real filter, row for row
     val full = SnapshotLog.read(spark, dir)
       .filter(col("o_orderkey").between(lo, qhi)).count()
-    val pruned = SnapshotLog.readPruned(spark, dir, "o_orderkey", lo, qhi)
+    val pruned = SnapshotLog.readPruned(spark, dir,
+      Seq("o_orderkey" -> SnapshotLog.IntRange(lo, qhi)))
       .filter(col("o_orderkey").between(lo, qhi)).count()
     assert(pruned == full, "pruning dropped a file the predicate needed")
     // a column without envelopes (not a stats column) must read every file
-    val (allKept, noneSkipped) = SnapshotLog.prunedFiles(dir, "o_custkey", 0, 0)
+    val (allKept, noneSkipped) = SnapshotLog.prunedFiles(dir,
+      Seq("o_custkey" -> SnapshotLog.IntRange(0, 0)))
     assert(noneSkipped.isEmpty && allKept.size == kept.size + skipped.size,
       "unknown-column pruning must be a no-op, never a silent drop")
     // stats-free commits (the pre-stats manifest shape) also read everything
     val dir2 = Files.createTempDirectory("graft-snap")
     SnapshotLog.commit(ords.limit(100), dir2)
-    val (k2, s2) = SnapshotLog.prunedFiles(dir2, "o_orderkey", lo, lo)
+    val (k2, s2) = SnapshotLog.prunedFiles(dir2,
+      Seq("o_orderkey" -> SnapshotLog.IntRange(lo, lo)))
     assert(s2.isEmpty && k2.nonEmpty, "no envelopes → no pruning")
   }
 
@@ -153,23 +157,27 @@ class SnapshotLogSpec extends AnyFunSuite {
     val df = rows.toDF("k", "v")
     SnapshotLog.commit(df.repartitionByRange(4, col("k")), dir, statsCols = Seq("k"))
     val (lo, hi) = (s"${pre}0", s"${pre}1~") // spans slabs 0 and 1 only
-    val (kept, skipped) = SnapshotLog.prunedFilesString(dir, "k", lo, hi)
+    val (kept, skipped) = SnapshotLog.prunedFiles(dir,
+      Seq("k" -> SnapshotLog.StrRange(lo, Some(hi))))
     assert(kept.nonEmpty && skipped.nonEmpty,
       s"truncated string slabs must still prune: kept=$kept skipped=$skipped")
     val full = SnapshotLog.read(spark, dir)
       .filter(col("k").between(lo, hi)).count()
-    val pruned = SnapshotLog.readPrunedString(spark, dir, "k", lo, hi)
+    val pruned = SnapshotLog.readPruned(spark, dir,
+      Seq("k" -> SnapshotLog.StrRange(lo, Some(hi))))
       .filter(col("k").between(lo, hi)).count()
     assert(pruned == full && full == 200,
       s"truncation-sound pruning must keep every matching row: $pruned vs $full")
     // a range beyond every envelope prunes everything — and the API is
     // safe WITHOUT a caller-side filter: zero rows, not a stray file's
-    val empty = SnapshotLog.readPrunedString(spark, dir, "k", "zzz", "zzzz")
+    val empty = SnapshotLog.readPruned(spark, dir,
+      Seq("k" -> SnapshotLog.StrRange("zzz", Some("zzzz"))))
     assert(empty.count() == 0, "all-pruned string read must be empty, not arbitrary rows")
     assert(empty.columns.toSeq == Seq("k", "v"), "schema survives the empty read")
     val dirI = Files.createTempDirectory("graft-snap")
     SnapshotLog.commit(df.repartitionByRange(4, col("v")), dirI, statsCols = Seq("v"))
-    assert(SnapshotLog.readPruned(spark, dirI, "v", 5000, 6000).count() == 0,
+    assert(SnapshotLog.readPruned(spark, dirI,
+      Seq("v" -> SnapshotLog.IntRange(5000, 6000))).count() == 0,
       "all-pruned integer read must be empty too")
   }
 
@@ -195,12 +203,14 @@ class SnapshotLogSpec extends AnyFunSuite {
       unix_micros(min(col("o_orderdate"))), unix_micros(max(col("o_orderdate")))).head()
     val (lo, hi) = (mm.getLong(0), mm.getLong(1))
     val qhi = lo + (hi - lo) / 4
-    val (kept, skipped) = SnapshotLog.prunedFiles(dir, "o_orderdate", lo, qhi)
+    val (kept, skipped) = SnapshotLog.prunedFiles(dir,
+      Seq("o_orderdate" -> SnapshotLog.IntRange(lo, qhi)))
     assert(kept.nonEmpty && skipped.nonEmpty,
       s"date slabs must prune: kept=$kept skipped=$skipped")
     val full = SnapshotLog.read(spark, dir)
       .filter(unix_micros(col("o_orderdate")).between(lo, qhi)).count()
-    val pruned = SnapshotLog.readPruned(spark, dir, "o_orderdate", lo, qhi)
+    val pruned = SnapshotLog.readPruned(spark, dir,
+      Seq("o_orderdate" -> SnapshotLog.IntRange(lo, qhi)))
       .filter(unix_micros(col("o_orderdate")).between(lo, qhi)).count()
     assert(pruned == full && full > 0,
       "timestamp pruning dropped a file the predicate needed")
@@ -278,8 +288,9 @@ class SnapshotLogSpec extends AnyFunSuite {
     assert(SnapshotLog.versions(dir) == Seq(1, 2, 3))
     // pruned reads apply DVs too
     val mm = cust.agg(min(col("c_custkey")), max(col("c_custkey"))).head()
-    val pruned = SnapshotLog.readPruned(spark, dir, "c_custkey",
-      mm.getLong(0), mm.getLong(1)).count()
+    val pruned = SnapshotLog.readPruned(spark, dir,
+      Seq("c_custkey" -> SnapshotLog.IntRange(mm.getLong(0), mm.getLong(1))))
+      .count()
     assert(pruned == nAfter2, "readPruned must be DV-aware")
   }
 
@@ -465,8 +476,8 @@ class SnapshotLogSpec extends AnyFunSuite {
       "copy-on-write must rewrite every touched file")
     // the rewritten files re-harvest their envelopes: a range entirely
     // above the data must prune them
-    val (kept, skipped) = SnapshotLog.prunedFiles(cowDir, "n_nationkey",
-      1000L, 2000L)
+    val (kept, skipped) = SnapshotLog.prunedFiles(cowDir,
+      Seq("n_nationkey" -> SnapshotLog.IntRange(1000L, 2000L)))
     assert(kept.isEmpty && skipped.nonEmpty,
       "rewritten survivors must carry fresh stats envelopes")
   }
@@ -1218,8 +1229,8 @@ class SnapshotLogSpec extends AnyFunSuite {
       SnapshotLog.read(spark, dir).filter(col("id") === 6L).count() == 0,
       "the empty-string row must actually die")
     // partition-only pruning: exactly the a=b files are kept
-    val (kept, skipped) = SnapshotLog.prunedFilesPartition(dir,
-      Map("grp" -> Set("a=b")))
+    val (kept, skipped) = SnapshotLog.prunedFiles(dir,
+      Seq("grp" -> SnapshotLog.PartIn(Set(Some("a=b")))))
     assert(kept.nonEmpty && skipped.nonEmpty &&
       kept.forall(f => vals(f)("grp").contains("a=b")))
     // a mutation on a partition value opens ONLY that partition's files
@@ -1240,17 +1251,17 @@ class SnapshotLogSpec extends AnyFunSuite {
     // NULL-PARTITION ADDRESSABILITY (round 15): the Option-valued filter
     // expresses "the null partition" — kept files are exactly the
     // null-partition ones, decided from the manifest alone
-    val (keptNull, skippedNull) = SnapshotLog.prunedFilesPartitionNullable(
-      dir, Map("grp" -> Set(Option.empty[String])))
+    val (keptNull, skippedNull) = SnapshotLog.prunedFiles(dir,
+      Seq("grp" -> SnapshotLog.PartIn(Set(Option.empty[String]))))
     assert(keptNull.nonEmpty && skippedNull.nonEmpty &&
       keptNull.forall(f => SnapshotLog.partitionValuesOf(dir)(f)("grp").isEmpty),
       s"a null-partition read must open only null-partition files: $keptNull")
     // ... and mixed selections compose: null partition OR a value
-    val (keptMix, _) = SnapshotLog.prunedFilesPartitionNullable(
-      dir, Map("grp" -> Set(Option.empty[String], Some("a=b"))))
+    val (keptMix, _) = SnapshotLog.prunedFiles(dir,
+      Seq("grp" -> SnapshotLog.PartIn(Set(Option.empty[String], Some("a=b")))))
     assert(keptMix.toSet ==
-      (keptNull ++ SnapshotLog.prunedFilesPartition(dir,
-        Map("grp" -> Set("a=b")))._1).toSet)
+      (keptNull ++ SnapshotLog.prunedFiles(dir,
+        Seq("grp" -> SnapshotLog.PartIn(Set(Some("a=b")))))._1).toSet)
     // an IS-NULL mutation on the partition column opens ONLY the null
     // partition's files — partition values decide null-ness outright,
     // no statsCols needed
@@ -1286,8 +1297,8 @@ class SnapshotLogSpec extends AnyFunSuite {
     SnapshotLog.commit(Seq((3L, "a")).toDF("id", "grp"), dir)
     assert(SnapshotLog.partitionColumns(dir) == Seq("grp"),
       "the spec survives an unpartitioned append")
-    val (kept, _) = SnapshotLog.prunedFilesPartition(dir,
-      Map("grp" -> Set("b")))
+    val (kept, _) = SnapshotLog.prunedFiles(dir,
+      Seq("grp" -> SnapshotLog.PartIn(Set(Some("b")))))
     // the unvalued append file must be KEPT (it might contain 'b')
     val vals = SnapshotLog.partitionValuesOf(dir)
     assert(kept.exists(f => !vals.contains(f)),
@@ -1316,8 +1327,8 @@ class SnapshotLogSpec extends AnyFunSuite {
     assert(files.size < before, "the pack actually packed")
     assert(files.forall(vals.contains),
       "per-partition packing must keep every output's partition values")
-    val (keptA, skippedA) = SnapshotLog.prunedFilesPartition(dir,
-      Map("grp" -> Set("a")))
+    val (keptA, skippedA) = SnapshotLog.prunedFiles(dir,
+      Seq("grp" -> SnapshotLog.PartIn(Set(Some("a")))))
     assert(keptA.nonEmpty && skippedA.nonEmpty,
       "partition pruning still bites after maintenance")
     assert(SnapshotLog.read(spark, dir).count() == 6)
@@ -1522,9 +1533,11 @@ class SnapshotLogSpec extends AnyFunSuite {
     // manifest-level decision, zero data reads: IS NULL skips the
     // null-free slab; IS NOT NULL skips the all-null slab (that one
     // needs the row meta too — nc == rows)
-    val (keptN, skipN) = SnapshotLog.prunedFilesNull(dir, "opt", wantNull = true)
+    val (keptN, skipN) = SnapshotLog.prunedFiles(dir,
+      Seq("opt" -> SnapshotLog.NullIs(true)))
     assert(keptN.size == 2 && skipN.size == 1)
-    val (keptNN, skipNN) = SnapshotLog.prunedFilesNull(dir, "opt", wantNull = false)
+    val (keptNN, skipNN) = SnapshotLog.prunedFiles(dir,
+      Seq("opt" -> SnapshotLog.NullIs(false)))
     assert(keptNN.size == 2 && skipNN.size == 1 && skipN != skipNN)
     // metadata-only COUNT(opt): rows minus null counts, no data read
     val expectNonNull = 8L + (16 to 24).count(_ % 2 == 0)
@@ -1568,7 +1581,8 @@ class SnapshotLogSpec extends AnyFunSuite {
       .toSet == (0L until 25L).toSet)
     // envelope pruning works by the LOGICAL name across the rename
     // (rename re-keyed the committed stats)
-    val (kept2, skipped2) = SnapshotLog.prunedFiles(dir, "nid", 0, 5)
+    val (kept2, skipped2) = SnapshotLog.prunedFiles(dir,
+      Seq("nid" -> SnapshotLog.IntRange(0, 5)))
     assert(kept2.nonEmpty && skipped2.nonEmpty)
     // an append under the new schema STAGES under the physical name
     SnapshotLog.commit(nation.filter(col("n_nationkey") < 5)
