@@ -1,7 +1,6 @@
 package graft.cli
 
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import graft.functions.QueryParams
 import graft.sources.{BatchSizeLimit, JdbcSink, ParquetSink}
@@ -49,7 +48,8 @@ object Cli {
       avoidDecimal: Boolean = false,
       preferVarbinary: Boolean = false,
       /** --sequential-fetching: parsed and recorded, changes nothing —
-        * Spark's JDBC reader has no double-buffered fetch to turn off */
+        * the parquet sink always overlaps fetching with k encoders
+        * (`sources.EncoderPool`) */
       sequentialFetching: Boolean = false,
       /** partitioned (parallel) JDBC read: N concurrent result-set cursors
         * over disjoint ranges of this numeric column — the beyond-reference
@@ -328,7 +328,7 @@ object Cli {
       |  --parquet-column-encoding COL:ENC, --column-length-limit N, --suffix-length N,
       |  --no-empty-file, --avoid-decimal, --prefer-varbinary,
       |  --sequential-fetching (accepted so reference command lines parse; a
-      |    no-op: Spark's JDBC reader has no double-buffered fetch to turn off),
+      |    no-op: fetching and encoding always overlap),
       |  --no-physical-fidelity (skip FLBA/TIME parquet annotations; keeps
       |    output Spark-readable — annotated TIME columns need a TIME-aware
       |    reader like DuckDB),
@@ -468,12 +468,10 @@ object Cli {
         // the pinned reader policy (graft.Session.pin) surfaces parquet
         // TIMESTAMP(NANOS) columns as epoch-nanos longs — same policy as
         // TypeMapping — and MICROS columns as TimestampType
-        Files.list(Paths.get(dir)).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .foreach { p =>
-            val name = p.getFileName.toString.stripSuffix(".parquet")
-            graft.sources.PhysicalFormat.readSparkCompatible(spark, p)
-              .createOrReplaceTempView(name)
+        graft.sources.Staging.listNames(Paths.get(dir)).filter(_.endsWith(".parquet"))
+          .foreach { n =>
+            graft.sources.PhysicalFormat.readSparkCompatible(spark, Paths.get(dir, n))
+              .createOrReplaceTempView(n.stripSuffix(".parquet"))
           }
         spark.sql(sql)
       case (None, None) =>

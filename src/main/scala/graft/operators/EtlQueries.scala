@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.sources.{JdbcSink, ParquetSink}
+import graft.sources.{JdbcSink, ParquetSink, Staging}
 
 /** End-to-end ETL-path queries: these run the actual sink/reverse-path
   * machinery inside the correctness gate, then read the produced artifacts
@@ -30,16 +30,7 @@ object EtlQueries {
     val dir =
       if (shmUsable) Files.createTempDirectory(shm, prefix)
       else Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (Files.isDirectory(p)) {
-          import scala.jdk.CollectionConverters._
-          Files.list(p).iterator().asScala.foreach(rm)
-        }
-        Files.deleteIfExists(p); ()
-      }
-      rm(dir)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => Staging.deleteRecursively(dir)))
     dir
   }
 
@@ -264,16 +255,15 @@ object EtlQueries {
     val out = dir.resolve("by_year").toString
     orders(s, d).withColumn("year", year(col("o_orderdate")))
       .write.partitionBy("year").parquet(out)
-    import scala.jdk.CollectionConverters._
     // NOTE: this directory listing + distinct-years collect is a LAYOUT
     // ASSERTION, valid only because the partition key (order year) has
     // single-digit cardinality by construction. Do not copy the pattern
     // for high-cardinality partition keys — listing and collecting
     // distinct values is O(partitions) on the driver; the query path
     // itself never does this (it prunes statically on the year filter).
-    val partDirs = Files.list(java.nio.file.Paths.get(out)).iterator().asScala
-      .filter(Files.isDirectory(_)).map(_.getFileName.toString)
-      .filter(_.startsWith("year=")).toSeq.sorted
+    val partDirs = Staging.listNames(java.nio.file.Paths.get(out))
+      .filter(n => n.startsWith("year=") && Files.isDirectory(java.nio.file.Paths.get(out, n)))
+      .sorted
     val expected = orders(s, d)
       .select(year(col("o_orderdate")).as("y")).distinct()
       .collect().map(r => s"year=${r.getInt(0)}").toSeq.sorted
@@ -619,14 +609,9 @@ object EtlQueries {
       .agg(min(col("source"))).head.getString(0)
     def listing(sourceVal: String): Seq[(String, Long, Long)] = {
       val p = java.nio.file.Paths.get(out, s"source=$sourceVal")
-      import scala.jdk.CollectionConverters._
-      val l = java.nio.file.Files.list(p)
-      try l.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(f => (f.getFileName.toString, java.nio.file.Files.size(f),
-          java.nio.file.Files.getLastModifiedTime(f).toMillis))
-        .toSeq.sortBy(_._1)
-      finally l.close()
+      Staging.listNames(p).filter(_.endsWith(".parquet")).map(n => (n,
+        java.nio.file.Files.size(p.resolve(n)),
+        java.nio.file.Files.getLastModifiedTime(p.resolve(n)).toMillis)).sortBy(_._1)
     }
     val before = listing(second)
     src.filter(col("source") === first)
@@ -1997,12 +1982,8 @@ object EtlQueries {
     // the proof: with every data file gone, only a metadata-true count
     // can still answer (DV files — the dv* names — stay, the count
     // needs their dead positions)
-    import scala.jdk.CollectionConverters._
-    val st = Files.list(dir.resolve("data"))
-    try st.iterator().asScala
-      .filter(_.getFileName.toString.startsWith("c"))
-      .foreach(Files.delete(_))
-    finally st.close()
+    Staging.listNames(dir.resolve("data")).filter(_.startsWith("c"))
+      .foreach(n => Files.delete(dir.resolve("data").resolve(n)))
     val mcAfter = SnapshotLog.metadataCount(s, dir)
     val ok = SnapshotLog.versions(dir) == Seq(1, 2, 3, 4) &&
       mcBefore.contains(scanCount) && mcAfter.contains(scanCount)
@@ -2110,12 +2091,8 @@ object EtlQueries {
     val declinesUnderDv =
       SnapshotLog.metadataMinMax(dir, "o_orderkey").isEmpty
     // the proof: data files gone, metadata still answers for v2
-    import scala.jdk.CollectionConverters._
-    val st = Files.list(dir.resolve("data"))
-    try st.iterator().asScala
-      .filter(_.getFileName.toString.startsWith("c"))
-      .foreach(Files.delete(_))
-    finally st.close()
+    Staging.listNames(dir.resolve("data")).filter(_.startsWith("c"))
+      .foreach(n => Files.delete(dir.resolve("data").resolve(n)))
     val mm = SnapshotLog.metadataMinMax(dir, "o_orderkey", Some(2))
     val n = SnapshotLog.metadataCount(s, dir, Some(2))
     val ok = v3 == 3 && declinesUnderDv &&
@@ -2264,12 +2241,8 @@ object EtlQueries {
       SnapshotLog.prunedFiles(dir, Seq("opt_price" -> SnapshotLog.NullIs(true)))
     // the proof: data files gone, the column count still answers —
     // and a column without recorded counts declines instead of guessing
-    import scala.jdk.CollectionConverters._
-    val st = Files.list(dir.resolve("data"))
-    try st.iterator().asScala
-      .filter(_.getFileName.toString.startsWith("c"))
-      .foreach(Files.delete(_))
-    finally st.close()
+    Staging.listNames(dir.resolve("data")).filter(_.startsWith("c"))
+      .foreach(n => Files.delete(dir.resolve("data").resolve(n)))
     val mc = SnapshotLog.metadataCountCol(dir, "opt_price")
     val ok = mcBefore.contains(scanCount) && mc == mcBefore &&
       skippedNull.nonEmpty &&

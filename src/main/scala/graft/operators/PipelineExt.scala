@@ -18,11 +18,30 @@ object PipelineExt {
     * materialized. */
   private def observedCount(df: DataFrame): (DataFrame, () => Long) = {
     val obs = org.apache.spark.sql.Observation()
-    (df.observe(obs, count(lit(1)).as("n")),
-      () => obs.get("n") match {
-        case n: java.lang.Number => n.longValue
-        case _ => 0L
-      })
+    (df.observe(obs, count(lit(1)).as("n")), () => observedLong(obs, "n"))
+  }
+
+  /** How long [[observedLong]] waits for an observation's metrics. Every
+    * caller reads after the observed frame materialized, so the metrics
+    * are only the listener bus's latency away; a frame that never ran
+    * must fail, not block the caller forever. */
+  val ObservationWait: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.Duration(60, "s")
+
+  /** The long metric `metric` of `obs` (0 for a NULL, e.g. a SUM over no
+    * rows), waiting at most `wait` for the observed frame's metrics. */
+  def observedLong(obs: org.apache.spark.sql.Observation, metric: String,
+      wait: scala.concurrent.duration.FiniteDuration = ObservationWait): Long = {
+    val row = try scala.concurrent.Await.result(obs.future, wait)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(s"observation ${obs.name} (metric '$metric') " +
+          s"reported nothing within $wait: its observed frame has not run")
+    }
+    row.get(row.fieldIndex(metric)) match {
+      case n: java.lang.Number => n.longValue
+      case _ => 0L
+    }
   }
 
   // ------------------------------------------------------- d7_dup_clusters
@@ -113,10 +132,8 @@ object PipelineExt {
               lit(false)).as("changed"))
           .observe(obs, sum(when(col("changed"), 1L).otherwise(0L))
             .as("n_changed")))
-      converged = (obs.get("n_changed") match {
-        case n: java.lang.Number => n.longValue
-        case _ => 0L // SUM over zero rows is NULL — no rows, no changes
-      }) == 0L
+      // SUM over zero rows is NULL, read as 0 — no rows, no changes
+      converged = observedLong(obs, "n_changed") == 0L
       labels = next.select(col("id"), col("comp"))
       round += 1
     }

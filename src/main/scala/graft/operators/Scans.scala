@@ -57,21 +57,14 @@ object Scans {
     val first = {
       val p0 = java.nio.file.Paths.get(paths.head)
       if (java.nio.file.Files.isDirectory(p0)) {
-        val l = java.nio.file.Files.list(p0)
-        try {
-          import scala.jdk.CollectionConverters._
-          l.iterator().asScala.map(_.toString)
-            // skip _metadata/_SUCCESS AND hidden dotfiles — parity with
-            // SnapshotLog.sniffParquet (a stray ._foo.parquet must never
-            // be the schema source)
-            .filter { f =>
-              val name = java.nio.file.Paths.get(f).getFileName.toString
-              f.endsWith(".parquet") && !name.startsWith("_") &&
-                !name.startsWith(".")
-            }
-            .minOption
-            .getOrElse(sys.error(s"no parquet files under ${paths.head}"))
-        } finally l.close()
+        graft.sources.Staging.listNames(p0)
+          // skip _metadata/_SUCCESS AND hidden dotfiles — parity with
+          // SnapshotLog.sniffParquet (a stray ._foo.parquet must never
+          // be the schema source)
+          .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
+          .map(p0.resolve(_).toString)
+          .minOption
+          .getOrElse(sys.error(s"no parquet files under ${paths.head}"))
       } else paths.head.toString
     }
     s.read.schema(org.apache.spark.sql.GraftBridge.parquetSchemaOf(s, first))

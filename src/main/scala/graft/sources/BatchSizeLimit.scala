@@ -10,9 +10,10 @@ import org.apache.spark.sql.types._
   * cap is a hard error. Bytes-per-row is estimated from the Spark schema the
   * same way the reference sizes its ODBC buffers from column descriptions.
   *
-  * In Spark these rows feed `parquet.block.row.count.limit` (at most one
-  * batch per row group, the unit the sink's file splitting counts) and the
-  * JDBC `fetchsize`.
+  * In Spark these rows are the parquet sink's batch (each read task cuts
+  * its rows into batches, and each batch is encoded as one row group, the
+  * unit the sink's file splitting counts; [[EncoderPool]]) and the JDBC
+  * `fetchsize`.
   */
 object BatchSizeLimit {
 

@@ -20,11 +20,15 @@ import scala.jdk.CollectionConverters._
   *    most one batch (`parquet.block.row.count.limit` = batch rows)
   *  - `-` streams a single parquet to stdout (parquet_writer.rs:192-230)
   *
-  * Scale posture: each Spark write task writes ONE part file into a
-  * staging directory (atomic-commit protocol replaces the reference's
-  * tempfile+persist crash safety), cut into row groups of at most one
-  * batch; the source's partitioning is kept, so parts sort in partition
-  * order and an ORDER BY result lands in order. The post-pass runs on the
+  * Scale posture: fetching and encoding overlap ([[EncoderPool]]). Each
+  * Spark write task reads its partition and cuts it into batches; a
+  * JVM-wide pool of k encoders (k = the session's parallelism) writes
+  * each batch as a one-row-group part into a staging directory (the
+  * atomic-commit protocol replaces the reference's tempfile+persist crash
+  * safety). At most k batches wait or encode per JVM, plus the one each
+  * reading task fills: about k+1 batches of memory for a one-partition
+  * source. The source's partitioning is kept and parts sort by (partition,
+  * batch), so an ORDER BY result lands in order. The post-pass runs on the
   * driver with no Spark job. It reads the parts' footers once and bins
   * their row groups with the reference's rule: a file ends after the row
   * group that makes it hold `--row-groups-per-file` row groups or reach
@@ -38,15 +42,15 @@ import scala.jdk.CollectionConverters._
   * may hold less than a batch, where the reference's single fetch loop
   * leaves only the result's last batch short, so a source with several
   * partitions can give more files than the reference. The non-split
-  * single-file mode writes through one task (`coalesce(1)`), like the
-  * reference's single-process writer. On a cluster you'd leave splitting
-  * on and skip single-file mode; the semantics knobs are what parity
-  * requires.
+  * single-file mode and stdout read through one task (`coalesce(1)`), like
+  * the reference's single fetch loop, and still encode on k cores; an
+  * empty result's schema-only file is the encoder's zero-row part.
   *
   * Every file write logs one INFO line (visible with `-v`) with what the
   * reference logs: batch rows, estimated bytes per row, files, row groups
   * and bytes written, and the seconds of the Spark write and the
-  * post-pass.
+  * post-pass; [[EncoderPool]] logs one more with the batches, the encoder
+  * count and the seconds readers spent blocked on the pool.
   */
 object ParquetSink {
 
@@ -153,35 +157,28 @@ object ParquetSink {
   /** The sink's write and post-pass inside its staging dir `staging`. */
   private def writeStaged(df: DataFrame, outPath: String, opts: Options,
       split: Boolean, staging: Path): Seq[Path] = {
-    val stagingDir = staging.resolve("out")
-    def configured(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) = {
-      var out = w.mode("overwrite")
-        .option("compression", opts.compression)
-        // PARQUET_2_0 writer parity by default (reference parquet_writer.rs:45-47)
-        .option("parquet.writer.version", opts.writerVersion)
-        // one fetch batch == at most one row group, whatever its bytes
-        .option("parquet.block.row.count.limit", opts.batchRows.toString)
-        .option("parquet.dictionary.page.size", PhysicalFormat.DictionaryPageSize.toString)
-      opts.compressionLevel.foreach(l =>
-        out = out.option("parquet.compression.codec.zstd.level", l.toString))
-      opts.columnDictionary.foreach { case (c, on) =>
-        out = out.option(s"parquet.enable.dictionary#$c", on.toString)
-      }
-      out
-    }
-    // one part per write task, in the source's partition order (part
-    // names sort by partition id, so an ORDER BY result stays in order);
-    // the row-count limit above cuts each part into one-batch row groups
+    val options = Map(
+      "compression" -> opts.compression,
+      // PARQUET_2_0 writer parity by default (reference parquet_writer.rs:45-47)
+      "parquet.writer.version" -> opts.writerVersion,
+      // one fetch batch == one row group, whatever its bytes
+      "parquet.block.row.count.limit" -> opts.batchRows.toString,
+      "parquet.dictionary.page.size" -> PhysicalFormat.DictionaryPageSize.toString) ++
+      opts.compressionLevel.map(l => "parquet.compression.codec.zstd.level" -> l.toString) ++
+      opts.columnDictionary.map { case (c, on) => s"parquet.enable.dictionary#$c" -> on.toString }
+    // one part per batch, named by (partition, seq), so parts sort in the
+    // source's order and an ORDER BY result stays in order
     val started = System.nanoTime()
-    configured(if (split) df.write else df.coalesce(1).write).parquet(stagingDir.toString)
+    EncoderPool.write(if (split) df else df.coalesce(1), staging, options,
+      opts.batchRows, emptyFile = !opts.noEmptyFile)
     val sparkDone = System.nanoTime()
 
-    val parts = Staging.listNames(stagingDir)
+    val parts = Staging.listNames(staging)
       .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .sorted.map(stagingDir.resolve)
+      .sortBy(EncoderPool.partOrder).map(staging.resolve)
     // one footer pass over the parts: every row group, in output order
     val groups: Seq[RowGroup] = parts.flatMap { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(PhysicalFormat.inputFile(p))
+      val r = PhysicalFormat.reader(p)
       try r.getRowGroups.asScala.zipWithIndex.map { case (b, i) =>
         RowGroup(p, i, b.getCompressedSize)
       }.toSeq finally r.close()
@@ -206,13 +203,8 @@ object ParquetSink {
       opts.writerVersion, opts.columnDictionary)
     var bytes = 0L
     def finalFile(bin: Seq[RowGroup], n: Int): Path = {
-      val slices =
-        if (bin.nonEmpty) sliced(bin)
-        else Seq(PhysicalFormat.Slice(parts.headOption.getOrElse {
-          val dir = staging.resolve("empty")
-          configured(df.limit(0).coalesce(1).write).parquet(dir.toString)
-          dir.resolve(Staging.listNames(dir).filter(_.endsWith(".parquet")).min)
-        }, 0 until 0))
+      // an empty bin is the schema-only file: the pipeline's zero-row part
+      val slices = if (bin.nonEmpty) sliced(bin) else Seq(PhysicalFormat.Slice(parts.head, 0 until 0))
       val file = slices match {
         case Seq(s) if !retype && s.rowGroups.size == groupCount.getOrElse(s.file, 0) => s.file
         case _ =>

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.TimeUnit
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.column.{ColumnDescriptor, ParquetProperties}
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
@@ -115,7 +116,7 @@ object PhysicalFormat {
       retype: MessageType => MessageType, enc: Encoding = Encoding()): Unit = {
     require(slices.nonEmpty, "assemble needs at least one input file")
     val inputs = slices.map(_.file)
-    val readers = inputs.map(p => ParquetFileReader.open(inputFile(p)))
+    val readers = inputs.map(reader)
     try {
       val meta = readers.head.getFileMetaData
       val src = meta.getSchema
@@ -237,6 +238,15 @@ object PhysicalFormat {
     }
   }
 
+  /** Reader options over a plain configuration: parquet-mr's default
+    * builds a Hadoop `Configuration` per open, which parses Hadoop's
+    * default XML resources each time (~10 ms, more than the footer read). */
+  private val ReadOptions =
+    ParquetReadOptions.builder(new org.apache.parquet.conf.PlainParquetConfiguration()).build()
+
+  /** A reader of the local parquet file `p` ([[inputFile]]). */
+  private[sources] def reader(p: Path): ParquetFileReader = ParquetFileReader.open(inputFile(p), ReadOptions)
+
   private def properties(enc: Encoding): ParquetProperties = {
     val b = ParquetProperties.builder().withWriterVersion(
       if (enc.writerVersion == "v1") ParquetProperties.WriterVersion.PARQUET_1_0
@@ -247,7 +257,7 @@ object PhysicalFormat {
   }
 
   private def zstdConf(enc: Encoding): Configuration = {
-    val conf = new Configuration()
+    val conf = new Configuration(false)
     enc.compressionLevel.foreach(l =>
       conf.setInt("parquet.compression.codec.zstd.level", l))
     conf
@@ -288,9 +298,8 @@ object PhysicalFormat {
     * takes its schema from one footer, not from a Spark inference job. */
   def readSparkCompatible(spark: org.apache.spark.sql.SparkSession,
       file: Path): org.apache.spark.sql.DataFrame = {
-    val conf = new Configuration()
     val hPath = new org.apache.hadoop.fs.Path(file.toString)
-    val fs = hPath.getFileSystem(conf)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // resolve the argument the way spark.read would: a glob expands to
     // its matches, a directory to its visible files, a file to itself —
     // split fidelity output (`out_01.par` siblings), a directory holding
@@ -307,7 +316,7 @@ object PhysicalFormat {
     }.map(p => Paths.get(p.toUri))
     if (candidates.isEmpty) return spark.read.parquet(file.toString)
     def timeUnitsOf(p: Path): Map[String, String] = {
-      val fr = ParquetFileReader.open(inputFile(p))
+      val fr = reader(p)
       val schema = try fr.getFileMetaData.getSchema finally fr.close()
       schema.getFields.asScala.collect {
         case f if f.isPrimitive &&

@@ -1351,7 +1351,7 @@ object SnapshotLog {
     * membership truth, so a rebase landing at a later version keeps the
     * original prefix — [[commit]]'s own discipline). */
   private def stageFrame(df: DataFrame, dir: Path, nameV: Int,
-      statCols: Set[String], colMap: Map[String, String] = Map.empty)
+      statCols: Set[String], colMap: Map[String, String])
       : (Seq[String],
         Map[String, Map[String, ColEnv]], Map[String, FileMeta],
         Map[String, Map[String, Long]]) = {
@@ -1424,9 +1424,9 @@ object SnapshotLog {
       outputStats: Map[String, Map[String, ColEnv]],
       outputMeta: Map[String, FileMeta], opName: String,
       conflictWithAdded: (Seq[String], LogState) => Boolean = (_, _) => false,
-      beforeAttempt: Int => Unit = _ => (),
+      beforeAttempt: Int => Unit,
       outputPart: Map[String, Map[String, Option[String]]] = Map.empty,
-      outputNulls: Map[String, Map[String, Long]] = Map.empty)
+      outputNulls: Map[String, Map[String, Long]])
       : Int = {
     val maxRetries = 8
     var tries = 0
@@ -2128,8 +2128,8 @@ object SnapshotLog {
 
   private def readFiles(spark: SparkSession, dir: Path,
       files: Seq[String], dvs: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      colMap: Map[String, String] = Map.empty)
+      schema: Option[org.apache.spark.sql.types.StructType],
+      colMap: Map[String, String])
       : DataFrame = {
     import org.apache.spark.sql.functions._
     if (dvs.isEmpty) {
@@ -2497,7 +2497,7 @@ object SnapshotLog {
   private def liveWithPos(spark: SparkSession, dir: Path,
       files: Seq[String], dvs: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
-      colMap: Map[String, String] = Map.empty): DataFrame = {
+      colMap: Map[String, String]): DataFrame = {
     import org.apache.spark.sql.functions._
     val reader = schema.fold(spark.read)(s =>
       spark.read.schema(physSchemaOf(s, colMap)))
@@ -3208,12 +3208,10 @@ object SnapshotLog {
       meta: Map[String, FileMeta],
       partCols: Seq[String],
       part: Map[String, Map[String, Option[String]]],
-      nulls: Map[String, Map[String, Long]] = Map.empty,
-      colMap: Map[String, String] = Map.empty,
-      physUsed: Seq[String] = Seq.empty)
+      nulls: Map[String, Map[String, Long]],
+      colMap: Map[String, String],
+      physUsed: Seq[String])
       : Option[org.json4s.JsonAST.JObject] = {
-    import org.json4s._
-    import org.json4s.JsonDSL._
     if (v <= 1 || checkpointEvery <= 1 || v % checkpointEvery == 0) return None
     val base = try stateOf(dir, v - 1) catch { case _: Exception => return None }
     if (base.schemaJson != schemaJson) return None
@@ -3332,7 +3330,6 @@ object SnapshotLog {
       : Boolean = {
     import org.json4s._
     import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
     // stats render as {file: {col: [min, max]}} — absent entirely when no
     // column qualified, so pre-stats manifests and stats-free commits
     // stay byte-shape-identical to the original format; txn renders only

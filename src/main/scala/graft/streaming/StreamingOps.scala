@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.Relational
+import graft.sources.Staging
 
 /** Structured Streaming realizations of the engine's aggregation surface.
   *
@@ -77,13 +78,9 @@ object StreamingOps {
       // silently "pass" the bench. Stage the actual parquet files either way.
       val src = java.nio.file.Paths.get(s"$d/events.parquet")
       if (java.nio.file.Files.isDirectory(src)) {
-        import scala.jdk.CollectionConverters._
-        val it = java.nio.file.Files.list(src)
-        try it.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .foreach(p => java.nio.file.Files.copy(p, stage.resolve(p.getFileName)))
-        finally it.close()
-        require(java.nio.file.Files.list(stage).count() > 0,
+        Staging.listNames(src).filter(_.endsWith(".parquet"))
+          .foreach(n => java.nio.file.Files.copy(src.resolve(n), stage.resolve(n)))
+        require(Staging.listNames(stage).nonEmpty,
           s"no parquet part files found under $src")
       } else {
         java.nio.file.Files.copy(src, stage.resolve("events.parquet"))
@@ -125,15 +122,9 @@ object StreamingOps {
       // throwing NotDirectoryException (round-17 ADVICE: the previous
       // unconditional Files.list silently narrowed the contract)
       if (!java.nio.file.Files.isDirectory(p)) dir
-      else {
-        val l = java.nio.file.Files.list(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          l.iterator().asScala.map(_.toString)
-            .filter(_.endsWith(".parquet")).minOption
-            .getOrElse(sys.error(s"no parquet feed files under $dir"))
-        } finally l.close()
-      }
+      else Staging.listNames(p).map(p.resolve(_).toString)
+        .filter(_.endsWith(".parquet")).minOption
+        .getOrElse(sys.error(s"no parquet feed files under $dir"))
     }
     val feedSchema =
       org.apache.spark.sql.GraftBridge.parquetSchemaOf(spark, firstFile)
@@ -495,14 +486,9 @@ object StreamingOps {
       srcDir: java.nio.file.Path)(df: DataFrame, name: String): Unit = {
     val tmp = scratch.resolve(s"tmp-$name")
     df.coalesce(1).write.parquet(tmp.toString)
-    import scala.jdk.CollectionConverters._
-    val listing = java.nio.file.Files.list(tmp)
-    val part =
-      try listing.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally listing.close()
+    val part = tmp.resolve(Staging.listNames(tmp).find(_.endsWith(".parquet")).get)
     java.nio.file.Files.move(part, srcDir.resolve(s"$name.parquet"))
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    Staging.deleteRecursively(tmp)
   }
 
   def q46StreamRestart(s: SparkSession, d: String): DataFrame =

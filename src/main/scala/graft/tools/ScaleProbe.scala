@@ -438,27 +438,22 @@ object ScaleProbe {
       // (round 15: pointer JSON + its parquet sidecar), paid once per
       // checkpointInterval versions
       val logd = dir.resolve("_graft_log")
-      val manifestSizes = {
-        val st = java.nio.file.Files.list(logd)
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala.filter(_.getFileName.toString.endsWith(".json"))
-            .map { p =>
-              // top-level member test via the parser, not a substring —
-              // a stats column literally named 'base' must not
-              // misclassify a checkpoint as a delta (advisor note)
-              val parsed = org.json4s.jackson.JsonMethods.parse(
-                java.nio.file.Files.readString(p))
-              val isDelta = (parsed \ "base").isInstanceOf[org.json4s.JInt]
-              val sidecarBytes = (parsed \ "ckpt") match {
-                case org.json4s.JString(n) =>
-                  java.nio.file.Files.size(logd.resolve(n))
-                case _ => 0L
-              }
-              (isDelta, java.nio.file.Files.size(p) + sidecarBytes)
-            }.toVector
-        } finally st.close()
-      }
+      val manifestSizes =
+        graft.sources.Staging.listNames(logd).filter(_.endsWith(".json"))
+          .map(logd.resolve).map { p =>
+            // top-level member test via the parser, not a substring —
+            // a stats column literally named 'base' must not
+            // misclassify a checkpoint as a delta (advisor note)
+            val parsed = org.json4s.jackson.JsonMethods.parse(
+              java.nio.file.Files.readString(p))
+            val isDelta = (parsed \ "base").isInstanceOf[org.json4s.JInt]
+            val sidecarBytes = (parsed \ "ckpt") match {
+              case org.json4s.JString(n) =>
+                java.nio.file.Files.size(logd.resolve(n))
+              case _ => 0L
+            }
+            (isDelta, java.nio.file.Files.size(p) + sidecarBytes)
+          }
       val deltaBytes = manifestSizes.collect { case (true, n) => n }
       val ckptBytes = manifestSizes.collect { case (false, n) => n }
       Map("lake_delete_mor" -> tDel, "lake_update_mor" -> tUpd,

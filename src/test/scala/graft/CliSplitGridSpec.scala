@@ -151,6 +151,39 @@ class CliSplitGridSpec extends AnyFunSuite {
     }
   }
 
+  test("one-row-group source: row groups are [B, …, B, N mod B] in source order, split or not") {
+    import spark.implicits._
+    // a tables-dir file of N rows in ONE row group: one reading task, its
+    // batches spread over the encoder pool
+    val tables = tmp()
+    val n = 1037
+    new scala.util.Random(11).shuffle((0 until n).toVector).toDF("v").coalesce(1)
+      .write.parquet(tables.resolve("src.parquet").toString)
+    val srcGroups = Files.list(tables.resolve("src.parquet")).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).map(rowGroupRows).toSeq
+    assert(srcGroups == Seq(Seq(n.toLong)), s"fixture must be one row group: $srcGroups")
+    val expected = spark.read.parquet(tables.resolve("src.parquet").toString)
+      .coalesce(1).collect().map(_.get(0)).toSeq
+    for (split <- Seq(Seq.empty[String], Seq("--row-groups-per-file", "3"),
+        Seq("--file-size-threshold", "1B"))) {
+      val dir = tmp()
+      val (_, conf) = Cli.parse(Seq("query", "--tables-dir", tables.toString,
+        "--batch-size-row", "100") ++ split ++ Seq(dir.resolve("o.par").toString,
+        "SELECT * FROM src"))
+      val written = Cli.runQuery(conf, Some(spark))
+      val groups = written.sortBy(_.getFileName.toString).flatMap(rowGroupRows)
+      assert(groups == Seq.fill(n / 100)(100L) :+ (n % 100).toLong, s"$split: $groups")
+      assert(firstColumnInNameOrder(written) == expected, s"$split: values out of source order")
+    }
+  }
+
+  private def rowGroupRows(p: Path): Seq[Long] = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.toString), new org.apache.hadoop.conf.Configuration()))
+    try r.getRowGroups.asScala.map(_.getRowCount).toSeq finally r.close()
+  }
+
   test("-v logs one sink line: batch, bytes per row, files, row groups, bytes, phase times") {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}

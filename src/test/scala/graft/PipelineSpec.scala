@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextHash
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, Multimodal, PipelineExt, Similarity}
 
 /** Training-pipeline operator specs: LSH recall against brute force,
   * fingerprint golden values, multimodal stub-decode parity. */
@@ -355,5 +355,18 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(found == truth,
       s"missing: ${truth.diff(found).take(5)}; extra: ${found.diff(truth).take(5)}")
+  }
+
+  test("an observation whose frame never ran fails within the bound instead of hanging") {
+    import scala.concurrent.duration._
+    val obs = org.apache.spark.sql.Observation()
+    val observed = spark.range(10).observe(obs, count(lit(1)).as("n"))
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](PipelineExt.observedLong(obs, "n", 300.millis))
+    assert((System.nanoTime() - t0) / 1e9 < 30, "the wait must end at its bound")
+    assert(e.getMessage.contains(obs.name) && e.getMessage.contains("'n'"), e.getMessage)
+    // once the frame runs, the same observation answers
+    observed.collect()
+    assert(PipelineExt.observedLong(obs, "n") == 10L)
   }
 }

@@ -104,4 +104,11 @@ class SessionSpec extends AnyFunSuite {
     assert(offenders(Seq("src/main"), pruneVariant).isEmpty,
       "prune through SnapshotLog.prunedFiles / readPruned with a constraint list")
   }
+
+  test("lint: directory listings go through Staging.listNames (a closed stream)") {
+    val lister = ("Files" + "\\.list\\(").r
+    assert(offenders(Seq("src/main"), lister, "graft/sources/Staging.scala").isEmpty,
+      "list directories with graft.sources.Staging.listNames: a Files.list stream " +
+        "holds a directory file descriptor until it is closed")
+  }
 }

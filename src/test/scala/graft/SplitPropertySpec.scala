@@ -88,6 +88,24 @@ class SplitPropertySpec extends AnyFunSuite {
     assert(holds(Layout(400, 10, 1, 3000L)))
     assert(holds(Layout(400, 10, 3, 1L << 20)))
   }
+
+  test("an ORDER BY over a several-partition source keeps its order across files") {
+    import org.apache.spark.sql.functions.col
+    // four range partitions, each sorted: four reading tasks feed the pool
+    val sorted = spark.range(0, 1000, 1, 4).select(((col("id") * 7919) % 1000).as("v"))
+      .repartitionByRange(4, col("v").desc).sortWithinPartitions(col("v").desc)
+    assert(sorted.rdd.getNumPartitions == 4)
+    for (split <- Seq(0, 3)) {
+      val dir = Files.createTempDirectory("graft-split-order")
+      val written = ParquetSink.write(sorted, dir.resolve("o.par").toString,
+        ParquetSink.Options(batchRows = 50, rowGroupsPerFile = split))
+      assert(split == 0 || written.size > 1, s"split=$split: expected several files")
+      val values = written.flatMap(f =>
+        spark.read.parquet(f.toString).collect().map(_.getLong(0)).toSeq)
+      assert(values == (999L to 0L by -1L), s"split=$split: rows out of ORDER BY order")
+      assert(written.flatMap(blocks).map(_.getRowCount).forall(_ <= 50))
+    }
+  }
 }
 
 object SplitPropertySpec {

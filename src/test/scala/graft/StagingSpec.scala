@@ -48,6 +48,58 @@ class StagingSpec extends AnyFunSuite {
     assert(entries(dir).isEmpty, s"the failed write left ${entries(dir)} beside its destination")
   }
 
+  /** `e` and its causes, outermost first. */
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(20).toSeq
+
+  /** A frame over `parts` partitions whose source throws at id 4100, past
+    * the third 500-row batch of whichever partition holds it. */
+  private def failingSource(parts: Int) = {
+    val boom = org.apache.spark.sql.functions.udf { (id: Long) =>
+      if (id == 4100L) throw new IllegalStateException("injected source failure") else id
+    }.asNondeterministic()
+    spark.range(0, 10000, 1, parts).select(boom(col("id")).as("id"))
+  }
+
+  private def failedWith(e: Throwable): Boolean =
+    causes(e).exists(c => String.valueOf(c.getMessage).contains("injected source failure"))
+
+  test("a source that throws mid-stream fails the pipelined write with its cause, leaving nothing") {
+    for (parts <- Seq(1, 4); split <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("graft-staging-source")
+      val t0 = System.nanoTime()
+      val e = intercept[Exception](ParquetSink.write(failingSource(parts),
+        dir.resolve("out.par").toString,
+        ParquetSink.Options(batchRows = 500, rowGroupsPerFile = if (split) 2 else 0)))
+      assert(failedWith(e), s"parts=$parts split=$split: lost the cause: $e")
+      assert((System.nanoTime() - t0) / 1e9 < 60, s"parts=$parts split=$split: slow to fail")
+      assert(entries(dir).isEmpty,
+        s"parts=$parts split=$split: the failed write left ${entries(dir)}")
+    }
+  }
+
+  test("a failed --incremental-column pull leaves the state file and output dir untouched") {
+    val dir = Files.createTempDirectory("graft-staging-inc")
+    val tables = Files.createDirectories(dir.resolve("tables"))
+    ParquetSink.write(spark.range(0, 10000, 1, 1).toDF("id"), tables.resolve("t.parquet").toString)
+    val state = dir.resolve("state")
+    Files.writeString(state, "100")
+    val stamp = Files.getLastModifiedTime(state)
+    for (split <- Seq(Seq.empty[String], Seq("--row-groups-per-file", "2"))) {
+      val out = Files.createDirectories(dir.resolve(s"out${split.size}"))
+      val (_, conf) = graft.cli.Cli.parse(Seq("query", "--tables-dir", tables.toString,
+        "--batch-size-row", "500", "--incremental-column", "id",
+        "--state-path", state.toString) ++ split ++ Seq(out.resolve("t.par").toString,
+        "SELECT id, CASE WHEN id = 4100 THEN raise_error('injected source failure') " +
+          "ELSE id END AS v FROM t"))
+      val e = intercept[Exception](graft.cli.Cli.runQuery(conf, Some(spark)))
+      assert(failedWith(e), s"$split: lost the cause: $e")
+      assert(Files.readString(state) == "100" && Files.getLastModifiedTime(state) == stamp,
+        s"$split: the state file moved")
+      assert(entries(out).isEmpty, s"$split: the failed pull left ${entries(out)}")
+    }
+  }
+
   test("a failed Compact.compact leaves no staging dir") {
     val dir = Files.createTempDirectory("graft-staging-compact")
     val in = Files.createDirectories(dir.resolve("in"))
