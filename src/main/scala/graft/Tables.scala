@@ -12,79 +12,11 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Per-JVM parquet SCHEMA cache for the warehouse tables (round 16).
-    *
-    * `spark.read.parquet(path)` runs footer-based schema inference on
-    * every call — measured ~90–160 ms per call on this machine vs ~8 ms
-    * with an explicit schema (graft.tools.FloorProbe), and the bench
-    * constructs each table scan fresh per warm/timed execution, so
-    * inference alone re-ran thousands of times per suite. The cache
-    * holds STRUCTURE only (StructType — never rows, files, or results):
-    * every execution still lists, scans, and computes from the parquet
-    * inputs, which is exactly what a production deployment does by
-    * reading the schema from its metastore/manifest instead of
-    * re-deriving it from footers per query. Keyed on the path + a
-    * RECURSIVE (path, mtime, size) fingerprint of every file under it
-    * (round 17: a nested part-file overwritten in place — same name,
-    * new bytes — now misses the cache too; the former one-level
-    * java.io.File listing could serve a stale schema for partitioned
-    * dirs and degenerated to path-only keys on non-`file:` URIs) + the
-    * reader confs that change what inference returns. The fingerprint
-    * goes through the Hadoop FileSystem API, so any storage the session
-    * can read (file:, hdfs:, s3a:) keys correctly — FileStatus carries
-    * real mtime/len on object stores as well. Bounded: the cache clears
-    * itself past [[SchemaCacheCap]] entries (per-run scratch artifacts
-    * would otherwise grow it monotonically for the JVM's life). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private val SchemaCacheCap = 2048
-
-  private def schemaKey(spark: SparkSession, path: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fp = new StringBuilder(path).append('|')
-    try {
-      val st = fs.getFileStatus(hp)
-      if (st.isDirectory) {
-        // recursive file listing: (relative path, mtime, len) per file,
-        // sorted for determinism
-        val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-        val it = fs.listFiles(hp, true)
-        while (it.hasNext) {
-          val f = it.next()
-          entries += s"${f.getPath.toUri.getPath}:${f.getModificationTime}:${f.getLen}"
-        }
-        fp.append(entries.sorted.mkString(","))
-      } else fp.append(st.getModificationTime).append(':').append(st.getLen)
-    } catch {
-      // missing path: key still forms; the compute's spark.read.parquet
-      // raises the canonical error and computeIfAbsent caches nothing
-      case _: java.io.FileNotFoundException => fp.append("missing")
-    }
-    // every conf that changes what parquet schema inference returns
-    Seq("spark.sql.legacy.parquet.nanosAsLong",
-      "spark.sql.parquet.inferTimestampNTZ.enabled",
-      "spark.sql.parquet.binaryAsString",
-      "spark.sql.parquet.int96AsTimestamp",
-      "spark.sql.caseSensitive")
-      .foreach(c => fp.append('|')
-        .append(spark.conf.getOption(c).getOrElse("")))
-    fp.result()
-  }
-
-  /** Schema-cached parquet read for any STABLE artifact path (warehouse
-    * tables, persisted index artifacts). The recursive fingerprint key
-    * makes it correct for mutable paths too — any file change, nested
-    * or not, misses — it just stops saving anything there. */
-  def cachedParquet(spark: SparkSession, path: String): DataFrame = {
-    if (schemaCache.size > SchemaCacheCap) schemaCache.clear()
-    val schema = schemaCache.computeIfAbsent(schemaKey(spark, path),
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
-  }
-
+  /** The table `name`, its schema read from one footer
+    * ([[graft.sources.FooterSchema]]) instead of Spark's inference job:
+    * the bench builds each scan anew per run. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    cachedParquet(spark, s"$dir/$name.parquet")
+    graft.sources.FooterSchema.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = t(s, d, "nation")

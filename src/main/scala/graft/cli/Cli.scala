@@ -47,10 +47,6 @@ object Cli {
       noEmptyFile: Boolean = false,
       avoidDecimal: Boolean = false,
       preferVarbinary: Boolean = false,
-      /** --sequential-fetching: parsed and recorded, changes nothing —
-        * the parquet sink always overlaps fetching with k encoders
-        * (`sources.EncoderPool`) */
-      sequentialFetching: Boolean = false,
       /** partitioned (parallel) JDBC read: N concurrent result-set cursors
         * over disjoint ranges of this numeric column — the beyond-reference
         * scale path promised by SURVEY §4.2 (vs the reference's single
@@ -135,7 +131,9 @@ object Cli {
         case "--no-physical-fidelity" :: t => c = c.copy(physicalFidelity = false); t
         case "--avoid-decimal" :: t => c = c.copy(avoidDecimal = true); t
         case "--prefer-varbinary" :: t => c = c.copy(preferVarbinary = true); t
-        case "--sequential-fetching" :: t => c = c.copy(sequentialFetching = true); t
+        // accepted so reference command lines parse; the parquet sink
+        // always overlaps fetching with k encoders (`sources.EncoderPool`)
+        case "--sequential-fetching" :: t => t
         case "--jdbc-partition-column" :: v :: t => c = c.copy(jdbcPartitionColumn = Some(v)); t
         case "--jdbc-num-partitions" :: v :: t => c = c.copy(jdbcNumPartitions = Some(v.toInt)); t
         case "--jdbc-bounds" :: v :: t => c = c.copy(jdbcBounds = Some(parseBounds(v))); t

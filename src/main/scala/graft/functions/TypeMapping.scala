@@ -64,7 +64,7 @@ object TypeMapping {
   val TimestampNanosKey = "graft.timestamp.nanos" // epoch-nanos long
   /** declared-precision physical unit (timestamp_precision.rs:17-31):
     * "millis" for p≤3, "micros" for p≤6 — ParquetSink picks the parquet
-    * physical unit from it (per-file, see ParquetSink.Options.timestampUnit) */
+    * physical unit from it (per-file, see ParquetSink.allTimestampsMillis) */
   val TimestampUnitKey = "graft.timestamp.unit"
   val FixedLenKey = "graft.binary.fixedLength" // BINARY(n) declared width
   val TextLimitKey = "graft.text.limit"        // clamped variadic byte length

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.sources.{JdbcSink, ParquetSink, Staging}
+import graft.sources.{FooterSchema, JdbcSink, ParquetSink, Staging}
 
 /** End-to-end ETL-path queries: these run the actual sink/reverse-path
   * machinery inside the correctness gate, then read the produced artifacts
@@ -212,7 +212,7 @@ object EtlQueries {
     val files = graft.sources.Compact.compact(s,
       dir.resolve("small").toString, dir.resolve("big").toString,
       targetBytes = targetBytes)
-    materializedThenClean(Scans.parquetNoInfer(s, files.map(_.toString): _*)
+    materializedThenClean(FooterSchema.read(s, files.map(_.toString): _*)
       .agg(count(lit(1)).as("n_rows"),
         sum(Relational.dec2(col("l_extendedprice"))).cast("double").as("total_price"),
         lit(files.size < nFragments && files.nonEmpty).as("compacted_ok")), dir)
@@ -709,8 +709,8 @@ object EtlQueries {
     // are cut-invariant (base + delta covers every row wherever the cut
     // lands), so only the pushdown shape depends on this choice.
     val evAll = events(s, d) // also sets the parquet reader confs
-    val legacyNanos = graft.Tables.cachedParquet(s, s"$d/events.parquet")
-      .schema("ts").dataType == org.apache.spark.sql.types.LongType
+    val legacyNanos = FooterSchema.of(s, s"$d/events.parquet")("ts").dataType ==
+      org.apache.spark.sql.types.LongType
     val ev = evAll.select(col("event_type"), col("value"), col("ts"), col("ts_ns"))
     // model-sized driver scalar (two longs) — do NOT copy this pattern
     // for row data; it only bounds the synthetic base/delta split
@@ -726,7 +726,7 @@ object EtlQueries {
     e17Partial(ev.filter(basePred)).write.parquet(snap)
     // "today": only the delta slice is aggregated; the merge re-aggregates
     // the union of two partial tables — no base row is read again
-    val merged = e17Merge(Scans.parquetNoInfer(s, snap)
+    val merged = e17Merge(FooterSchema.read(s, snap)
       .unionByName(e17Partial(ev.filter(deltaPred))))
     val plan = merged.queryExecution.executedPlan.toString
     // matches GreaterThan(ts… and GreaterThan(ts_ns… alike
@@ -891,7 +891,7 @@ object EtlQueries {
           .option("query",
             s"""SELECT "id", "cust", "price" FROM orders_inc$where""").load()
         pull("").write.mode("overwrite").parquet(lake)
-        val wm = Scans.parquetNoInfer(s, lake).agg(max(col("id"))).head.getLong(0)
+        val wm = FooterSchema.read(s, lake).agg(max(col("id"))).head.getLong(0)
 
         JdbcSink.insert(all.filter(col("id") > wm), url, "orders_inc",
           batchRows = 500)
@@ -904,7 +904,7 @@ object EtlQueries {
 
         // eager checkpoint so the temp lake can be deleted on exit
         CacheScope.localCheckpoint(
-          Scans.parquetNoInfer(s, lake)
+          FooterSchema.read(s, lake)
             .select(col("id"), col("cust"), Relational.dec2(col("price")).as("p"))
             .agg(count(lit(1)).as("n_rows"),
               countDistinct(col("cust")).as("n_custs"),

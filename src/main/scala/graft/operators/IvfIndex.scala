@@ -116,7 +116,7 @@ object IvfIndex {
 
   /** Load the K-row centroid model from a built index. */
   def loadModel(s: SparkSession, dir: Path): Array[Array[Double]] =
-    graft.Tables.cachedParquet(s, dir.resolve("centroids").toString)
+    graft.sources.FooterSchema.read(s, dir.resolve("centroids").toString)
       .orderBy(col("c")).collect()
       .map(_.getSeq[Double](1).toArray)
 
@@ -124,6 +124,6 @@ object IvfIndex {
     * partition column, so the IN-filter prunes at planning time and the
     * scan touches just those directories. */
   def lists(s: SparkSession, dir: Path, clusters: Seq[Int]): DataFrame =
-    graft.Tables.cachedParquet(s, dir.resolve("lists").toString)
+    graft.sources.FooterSchema.read(s, dir.resolve("lists").toString)
       .filter(col("c").isin(clusters: _*))
 }

@@ -94,7 +94,7 @@ object LshIndex {
 
   /** The persisted signature table: (vec_id, embedding, n2, sig). */
   def signatures(s: SparkSession, dir: Path): DataFrame =
-    graft.Tables.cachedParquet(s, dir.resolve("signatures").toString)
+    graft.sources.FooterSchema.read(s, dir.resolve("signatures").toString)
 
   /** The persisted BUCKETED band table at `dir`, registered in the session
     * catalog (idempotent; name keyed on the location so a different corpus

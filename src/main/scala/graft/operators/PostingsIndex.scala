@@ -87,7 +87,7 @@ object PostingsIndex {
     * audit PartitionFilters on it. */
   private[graft] def lists(s: SparkSession, dir: Path, terms: Seq[String]): DataFrame = {
     val buckets = terms.map(bucketOf).distinct
-    graft.Tables.cachedParquet(s, dir.resolve("postings").toString)
+    graft.sources.FooterSchema.read(s, dir.resolve("postings").toString)
       .filter(col("b").isin(buckets: _*) && col("tok").isin(terms: _*))
   }
 
@@ -99,7 +99,7 @@ object PostingsIndex {
     // model-sized broadcast row (|terms| + 1 source rows)
     val dfAggs = terms.map(t =>
       sum(when(col("tok") === t, lit(1L)).otherwise(lit(0L))).as(s"df_$t"))
-    val statsWide = graft.Tables.cachedParquet(s, dir.resolve("stats").toString)
+    val statsWide = graft.sources.FooterSchema.read(s, dir.resolve("stats").toString)
       .crossJoin(l.select(col("tok")))
       .groupBy(col("nd"), col("tt"))
       .agg(dfAggs.head, dfAggs.tail: _*)
@@ -111,7 +111,7 @@ object PostingsIndex {
         s"((22000000 * tf_$t * tt) div (10*tt*tf_$t + 3*tt + 9*len*nd)) " +
         "div 1000000")
     }.reduce(_ + _)
-    cand.join(graft.Tables.cachedParquet(s, dir.resolve("docmeta").toString), "doc_id")
+    cand.join(graft.sources.FooterSchema.read(s, dir.resolve("docmeta").toString), "doc_id")
       .crossJoin(broadcast(statsWide))
       .select(col("doc_id"), termScore.as("score"))
       .filter(col("score") > 0)

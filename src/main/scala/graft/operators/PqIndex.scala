@@ -123,19 +123,19 @@ object PqIndex {
   /** The flat [m][c][dim] codebook array (M·Ks·SubDim doubles) — the
     * model shape [[graft.functions.PqKernels.pqLut]] consumes. */
   def loadBooksFlat(s: SparkSession, dir: Path): Seq[Double] =
-    graft.Tables.cachedParquet(s, dir.resolve("codebooks").toString)
+    graft.sources.FooterSchema.read(s, dir.resolve("codebooks").toString)
       .orderBy(col("m"), col("c")).collect()
       .flatMap(_.getSeq[Double](2)).toSeq
 
   /** The nested [m][c] codebook model — the shape [[codeCol]] consumes
     * (used by IvfPqIndex to re-encode under the SAME trained books). */
   def loadBooks(s: SparkSession, dir: Path): Array[Array[Array[Double]]] = {
-    val rows = graft.Tables.cachedParquet(s, dir.resolve("codebooks").toString)
+    val rows = graft.sources.FooterSchema.read(s, dir.resolve("codebooks").toString)
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray)).toMap
     Array.tabulate(M)(m => Array.tabulate(Ks)(c => rows((m, c))))
   }
 
   /** The persisted code table: (vec_id, code array<tinyint>). */
   def codes(s: SparkSession, dir: Path): DataFrame =
-    graft.Tables.cachedParquet(s, dir.resolve("codes").toString)
+    graft.sources.FooterSchema.read(s, dir.resolve("codes").toString)
 }

@@ -31,43 +31,4 @@ object Scans {
   def wide(s: SparkSession, df: DataFrame, key: Column): DataFrame =
     if (df.rdd.getNumPartitions < targetWidth(s)) df.repartition(targetWidth(s), key)
     else df
-
-  /** Read-back of a just-written, UNPARTITIONED parquet artifact without
-    * the Spark-job-backed schema inference pass (round 16): the schema
-    * comes from ONE footer read on the driver
-    * ([[org.apache.spark.sql.GraftBridge.parquetSchemaOf]], ~2 ms vs
-    * ~100 ms measured for inference) — exact for Spark-written files,
-    * whose footers carry the original StructType. NOT for
-    * partitionBy-written directories (an explicit schema would have to
-    * include the partition columns the footer doesn't carry) nor for
-    * the encoding-fidelity gates, whose point is driving the standard
-    * inference path over re-encoded physical types. */
-  /** A/B toggle (round-17 drift adjudication): `SPARK_GRAFT_NO_INFER=false`
-    * restores the Spark-job-backed inference read at every parquetNoInfer
-    * call site, so the round-16 no-infer claims can be A/B'd under
-    * driver conditions with everything else held constant. */
-  private[graft] val noInferEnabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_NO_INFER", "true").toBoolean
-
-  def parquetNoInfer(s: SparkSession, paths: String*): DataFrame = {
-    if (!noInferEnabled) return s.read.parquet(paths: _*)
-    // PRECONDITION: every path carries one identical schema — true for
-    // the engine-written artifacts this serves (one frame shape per
-    // write); paths.head's footer speaks for all of them.
-    val first = {
-      val p0 = java.nio.file.Paths.get(paths.head)
-      if (java.nio.file.Files.isDirectory(p0)) {
-        graft.sources.Staging.listNames(p0)
-          // skip _metadata/_SUCCESS AND hidden dotfiles — parity with
-          // SnapshotLog.sniffParquet (a stray ._foo.parquet must never
-          // be the schema source)
-          .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-          .map(p0.resolve(_).toString)
-          .minOption
-          .getOrElse(sys.error(s"no parquet files under ${paths.head}"))
-      } else paths.head.toString
-    }
-    s.read.schema(org.apache.spark.sql.GraftBridge.parquetSchemaOf(s, first))
-      .parquet(paths: _*)
-  }
 }

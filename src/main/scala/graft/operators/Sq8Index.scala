@@ -76,13 +76,13 @@ object Sq8Index {
   /** The persisted (lo, step) dequantization bounds — one row, 2×[[Dim]]
     * doubles: model-sized driver metadata, like the IVF centroids. */
   def bounds(s: SparkSession, dir: Path): (Seq[Double], Seq[Double]) = {
-    val r = graft.Tables.cachedParquet(s, dir.resolve("bounds").toString).head
+    val r = graft.sources.FooterSchema.read(s, dir.resolve("bounds").toString).head
     (r.getSeq[Double](0), r.getSeq[Double](1))
   }
 
   /** The persisted code table: (vec_id, code). */
   def codes(s: SparkSession, dir: Path): DataFrame =
-    graft.Tables.cachedParquet(s, dir.resolve("codes").toString)
+    graft.sources.FooterSchema.read(s, dir.resolve("codes").toString)
 
   // ------------------------------------------------- snapshot-logged form
   // Round 14 (judge #8): the MAINTAINED index and the PERSISTED artifact
@@ -122,7 +122,7 @@ object Sq8Index {
   /** The logged index's frozen (lo, step) quantizer bounds. */
   def loggedBounds(s: SparkSession, logDir: Path)
       : (Seq[Double], Seq[Double]) = {
-    val r = graft.Tables.cachedParquet(s, logDir.resolve("bounds").toString).head
+    val r = graft.sources.FooterSchema.read(s, logDir.resolve("bounds").toString).head
     (r.getSeq[Double](0), r.getSeq[Double](1))
   }
 

@@ -29,7 +29,7 @@ object Compact {
     val dest = Paths.get(outDir)
     Staging(dest.toAbsolutePath.getParent, ".graft-compact-") { staging =>
       val out = staging.resolve("out")
-      graft.operators.Scans.parquetNoInfer(spark, inDir)
+      FooterSchema.read(spark, inDir)
         .repartition(nFiles)
         .write.mode("overwrite")
         .option("compression", compression)

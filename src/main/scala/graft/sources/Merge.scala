@@ -75,6 +75,6 @@ object Merge {
       key: String, outPath: String,
       seqCol: Option[String] = None): DataFrame = {
     merge(base, changes, key, seqCol).write.mode("overwrite").parquet(outPath)
-    graft.operators.Scans.parquetNoInfer(s, outPath)
+    FooterSchema.read(s, outPath)
   }
 }

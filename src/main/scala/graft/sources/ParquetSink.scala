@@ -78,15 +78,6 @@ object ParquetSink {
         * with a predicate on these columns prune whole partitions. Mutually
         * exclusive with exact-file naming/splitting. */
       partitionByCols: Seq[String] = Seq.empty,
-      /** parquet TIMESTAMP physical unit (reference
-        * timestamp_precision.rs:17-31 writes MILLIS for p≤3, MICROS for
-        * p≤6): "micros" | "millis" | "auto". The unit is per-FILE in
-        * Spark's writer (`spark.sql.parquet.outputTimestampType`), not
-        * per-column like the reference's — "auto" picks MILLIS exactly
-        * when every timestamp column is tagged `graft.timestamp.unit =
-        * millis` by TypeMapping (i.e. every declared precision ≤ 3),
-        * falling back to MICROS on any mix. */
-      timestampUnit: String = "auto",
       /** the [[PhysicalFormat]] fidelity pass (FLBA(n) + parquet TIME
         * annotations, reference parity). TRADE-OFF, pinned in FooterSpec:
         * Spark's own reader rejects TIME-annotated columns
@@ -98,7 +89,10 @@ object ParquetSink {
       physicalFidelity: Boolean = true)
 
   /** True when every timestamp column in `schema` is millis-tagged (declared
-    * precision ≤ 3) — and there is at least one timestamp column. */
+    * precision ≤ 3) — and there is at least one timestamp column. The sink
+    * then writes TIMESTAMP(MILLIS), else TIMESTAMP(MICROS): the reference
+    * (timestamp_precision.rs:17-31) picks the unit per column, Spark's
+    * writer (`spark.sql.parquet.outputTimestampType`) only per file. */
   def allTimestampsMillis(schema: org.apache.spark.sql.types.StructType): Boolean = {
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     val ts = schema.fields.filter(f =>
@@ -111,14 +105,9 @@ object ParquetSink {
   /** Write `df` to `outPath` (a file path like `out.par`, or `-` for
     * stdout). Returns the list of files written, in order. */
   def write(df: DataFrame, outPath: String, opts: Options = Options()): Seq[Path] = {
-    val wantMillis = opts.timestampUnit match {
-      case "millis" => true
-      case "auto" => allTimestampsMillis(df.schema)
-      case _ => false
-    }
     // never write deprecated INT96 (Spark's legacy default for TimestampType)
     // — the reference always writes annotated INT64 (timestamp_precision.rs)
-    val unit = if (wantMillis) "TIMESTAMP_MILLIS" else "TIMESTAMP_MICROS"
+    val unit = if (allTimestampsMillis(df.schema)) "TIMESTAMP_MILLIS" else "TIMESTAMP_MICROS"
     val conf = df.sparkSession.conf
     val prevUnit = conf.getOption("spark.sql.parquet.outputTimestampType")
     conf.set("spark.sql.parquet.outputTimestampType", unit)

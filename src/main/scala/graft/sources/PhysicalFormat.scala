@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.column.{ColumnDescriptor, ParquetProperties}
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, FileMetaData}
 import org.apache.parquet.hadoop.{CodecFactory, ColumnChunkPageWriteStore, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, LocalOutputFile, SeekableInputStream}
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
@@ -51,8 +51,6 @@ object PhysicalFormat {
     schema.fields.exists(f =>
       f.metadata.contains(TypeMapping.FixedLenKey) ||
         f.metadata.contains(TypeMapping.TimeUnitKey))
-
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** parquet-mr's dictionary cap (`parquet.dictionary.page.size`, 1 MiB by
     * default) for every column chunk the CLI sink encodes: its Spark writer
@@ -170,7 +168,7 @@ object PhysicalFormat {
         }
         writer.end(
           if (target == src) meta.getKeyValueMetaData
-          else (meta.getKeyValueMetaData.asScala - SparkSchemaKey).asJava)
+          else (meta.getKeyValueMetaData.asScala - FooterSchema.SparkSchemaKey).asJava)
       } catch {
         case e: Throwable =>
           writer.close()
@@ -303,54 +301,53 @@ object PhysicalFormat {
     // resolve the argument the way spark.read would: a glob expands to
     // its matches, a directory to its visible files, a file to itself —
     // split fidelity output (`out_01.par` siblings), a directory holding
-    // it, or a glob over it must all strip per-file, not crash in
-    // ParquetFileReader.open
-    val matched = Option(fs.globStatus(hPath)).map(_.toSeq).getOrElse(Seq.empty)
-    val candidates: Seq[Path] = matched.flatMap { st =>
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).toSeq
-          .filter(c => c.isFile && !c.getPath.getName.startsWith("_") &&
-            !c.getPath.getName.startsWith("."))
-          .map(_.getPath)
-      else Seq(st.getPath)
-    }.map(p => Paths.get(p.toUri))
+    // it, or a glob over it must all strip per-file
+    val candidates: Seq[Path] = Option(fs.globStatus(hPath)).toSeq.flatten.flatMap { st =>
+      val p = Paths.get(st.getPath.toUri)
+      if (st.isDirectory) FooterSchema.visible(p).filter(Files.isRegularFile(_))
+      else Seq(p)
+    }
     if (candidates.isEmpty) return spark.read.parquet(file.toString)
-    def timeUnitsOf(p: Path): Map[String, String] = {
-      val fr = reader(p)
-      val schema = try fr.getFileMetaData.getSchema finally fr.close()
-      schema.getFields.asScala.collect {
+    // one footer open per member gives its TIME columns; the first
+    // member's footer also gives the schema of the read, since the members
+    // share one schema (once stripped), as Spark's own inference assumes
+    val inspected = candidates.map { p =>
+      val meta = FooterSchema.footer(p).getFileMetaData
+      val units = meta.getSchema.getFields.asScala.collect {
         case f if f.isPrimitive &&
             f.getLogicalTypeAnnotation.isInstanceOf[LogicalTypeAnnotation.TimeLogicalTypeAnnotation] =>
           val u = f.getLogicalTypeAnnotation
             .asInstanceOf[LogicalTypeAnnotation.TimeLogicalTypeAnnotation].getUnit
           f.getName -> u.toString.toLowerCase
       }.toMap
+      (p, meta, units)
     }
-    val inspected = candidates.map(p => (p, timeUnitsOf(p)))
-    // one footer read instead of Spark's schema-inference job: the members
-    // share one schema (once stripped), as Spark's own inference assumes
-    def readAs(schemaOf: String, paths: String*) = spark.read
-      .schema(org.apache.spark.sql.GraftBridge.parquetSchemaOf(spark, schemaOf))
-      .parquet(paths: _*)
-    if (inspected.forall(_._2.isEmpty))
-      return readAs(candidates.head.toString, file.toString)
+    def stripTime(units: Map[String, String])(src: MessageType) =
+      new MessageType(src.getName, src.getFields.asScala.toSeq.map { f =>
+        if (units.contains(f.getName))
+          Types.primitive(f.asPrimitiveType().getPrimitiveTypeName,
+            f.getRepetition).named(f.getName)
+        else f
+      }.asJava)
+    val (_, headMeta, headUnits) = inspected.head
+    // a stripped copy's footer drops Spark's stored row schema (assemble)
+    val schema = FooterSchema.sparkSchema(spark,
+      if (headUnits.isEmpty) headMeta
+      else new FileMetaData(stripTime(headUnits)(headMeta.getSchema),
+        (headMeta.getKeyValueMetaData.asScala - FooterSchema.SparkSchemaKey).asJava,
+        headMeta.getCreatedBy))
+    if (inspected.forall(_._3.isEmpty))
+      return spark.read.schema(schema).parquet(file.toString)
     // strip each TIME-bearing member into its cached copy; untouched
     // members read in place. Copies must outlive this call (Spark reads
     // lazily); deleteOnExit removes them when the JVM ends.
-    val readPaths = inspected.map { case (p, units) =>
-      if (units.isEmpty) p.toString
-      else strippedCopy(p, src => new MessageType(src.getName,
-        src.getFields.asScala.toSeq.map { f =>
-          if (units.contains(f.getName))
-            Types.primitive(f.asPrimitiveType().getPrimitiveTypeName,
-              f.getRepetition).named(f.getName)
-          else f
-        }.asJava)).toString
+    val readPaths = inspected.map { case (p, _, units) =>
+      if (units.isEmpty) p.toString else strippedCopy(p, stripTime(units)).toString
     }
     // splits of one logical output share a schema, so the unit map is the
     // union (identical per column across members)
-    val timeUnits = inspected.flatMap(_._2).toMap
-    val raw = readAs(readPaths.head, readPaths: _*)
+    val timeUnits = inspected.flatMap(_._3).toMap
+    val raw = spark.read.schema(schema).parquet(readPaths: _*)
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.MetadataBuilder
     raw.select(raw.schema.fieldNames.toIndexedSeq.map { n =>

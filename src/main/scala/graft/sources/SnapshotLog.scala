@@ -225,31 +225,10 @@ object SnapshotLog {
     spark.read.schema(dvSchema)
       .parquet(names.map(f => dataDir(dir).resolve(f).toString): _*)
 
-  /** Read an engine-written (unpartitioned) staging artifact without the
-    * inference job: the schema comes from one direct footer read of the
-    * first part file (exact — the files carry Spark's schema metadata). */
-  private def sniffParquet(spark: SparkSession, p: Path): DataFrame = {
-    val first =
-      if (Files.isDirectory(p)) listNames(p)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("_") &&
-          !n.startsWith(".")).sorted.headOption
-        .map(p.resolve).getOrElse(
-          throw new IllegalStateException(s"no parquet files under $p"))
-      else p
-    spark.read.schema(org.apache.spark.sql.GraftBridge
-        .parquetSchemaOf(spark, first.toString))
-      .parquet(p.toString)
-  }
-
   /** Total row count straight off a parquet footer — the zero-job way to
     * answer "did this staging write produce any rows". */
-  private def footerRowCount(p: Path): Long = {
-    val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toString), harvestConf))
-    try fr.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally fr.close()
-  }
+  private def footerRowCount(p: Path): Long =
+    FooterSchema.footer(p).getBlocks.asScala.map(_.getRowCount).sum
   private def manifestPath(dir: Path, v: Int) =
     logDir(dir).resolve(f"v$v%05d.json")
 
@@ -1076,26 +1055,6 @@ object SnapshotLog {
     }
   }
 
-  /** Footer harvest at commit time: per-file [[FileMeta]] (size from the
-    * filesystem entry the writer just moved, rows from the footer's block
-    * counts) plus the envelope per requested column — ONE footer open
-    * serves both, and both land in the manifest so later layout decisions
-    * ([[binPack]], [[metadataCount]]) never go back to the storage layer.
-    *
-    * Envelope rules: INT32/INT64 physical columns (long, int, date-days,
-    * TIMESTAMP micros, unscaled small decimals) produce [[IntEnv]];
-    * STRING-annotated BINARY columns produce [[StrEnv]] with
-    * outward-rounded truncation (see [[ColEnv]]). A column gets an
-    * envelope only if EVERY row group carries non-null statistics for it;
-    * anything partial would make pruning unsound, so it is dropped and
-    * the file simply always reads. */
-  /** One shared read-only Hadoop conf for footer harvests: constructing
-    * a Configuration parses the default XML resources (~tens of ms), and
-    * round 14 opens a footer for EVERY staged file (meta harvest), not
-    * just stats-column commits — per-file construction was measurable on
-    * multi-commit gates. */
-  private lazy val harvestConf = new org.apache.hadoop.conf.Configuration()
-
   /** Footer-harvest CONCURRENCY (round 15, judge #3): the per-commit
     * stats+meta harvest opened each staged file's footer sequentially on
     * the driver — O(|new files|) blocking metadata reads per commit, the
@@ -1205,16 +1164,23 @@ object SnapshotLog {
     }
   }
 
+  /** Footer harvest at commit time: per-file [[FileMeta]] (size from the
+    * filesystem entry the writer just moved, rows from the footer's block
+    * counts) plus the envelope per requested column — ONE footer open
+    * serves both, and both land in the manifest so later layout decisions
+    * ([[binPack]], [[metadataCount]]) never go back to the storage layer.
+    *
+    * Envelope rules: INT32/INT64 physical columns (long, int, date-days,
+    * TIMESTAMP micros, unscaled small decimals) produce [[IntEnv]];
+    * STRING-annotated BINARY columns produce [[StrEnv]] with
+    * outward-rounded truncation (see [[ColEnv]]). A column gets an
+    * envelope only if EVERY row group carries non-null statistics for it;
+    * anything partial would make pruning unsound, so it is dropped and
+    * the file simply always reads. */
   private def harvestFile(p: Path, cols: Set[String]): FileHarvest = {
-    val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toString), harvestConf))
-    try {
-      val blocks = fr.getFooter.getBlocks.asScala.toSeq
-      val meta = FileMeta(Files.size(p), blocks.map(_.getRowCount).sum)
-      FileHarvest(meta, fileStatsOf(blocks, cols),
-        fileNullsOf(blocks, cols))
-    } finally fr.close()
+    val blocks = FooterSchema.footer(p).getBlocks.asScala.toSeq
+    val meta = FileMeta(Files.size(p), blocks.map(_.getRowCount).sum)
+    FileHarvest(meta, fileStatsOf(blocks, cols), fileNullsOf(blocks, cols))
   }
 
   /** Per-column NULL COUNT of a file, for each requested column whose
@@ -1928,7 +1894,7 @@ object SnapshotLog {
           else kept.unionByName(adds.toDF("f", "kind", "size", "rows"))
         case _ => (j \ "ckpt") match {
           case JString(n) =>
-            sniffParquet(spark, logDir(dir).resolve(n))
+            FooterSchema.read(spark, logDir(dir).resolve(n).toString)
               .select(col("f"), col("kind"), col("size"), col("rows"))
           case _ =>
             val st = stateOf(dir, v)
@@ -2458,7 +2424,7 @@ object SnapshotLog {
     Staging(dataDir(dir), ".upd-") { staging =>
       // the ONLY base-table scan: matched rows with their row identity
       staged.write.mode("overwrite").parquet(staging.resolve("m").toString)
-      val matched = sniffParquet(spark, staging.resolve("m"))
+      val matched = FooterSchema.read(spark, staging.resolve("m").toString)
       if (matched.isEmpty) vRead // no matches → no-op, no version
       else {
         // local split of just-matched rows: DV (old identities die) ...

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.Relational
-import graft.sources.Staging
+import graft.sources.{FooterSchema, Staging}
 
 /** Structured Streaming realizations of the engine's aggregation surface.
   *
@@ -110,24 +110,10 @@ object StreamingOps {
     * per micro-batch. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     graft.Session.pin(spark)
-    // one direct footer read instead of spark.read.parquet inference —
     // the feed's files share one schema by construction (copies of one
-    // source file, or stageFeed writes of one frame shape), and the
-    // Spark-job-backed inference path costs ~100 ms per stream
-    // definition (GraftBridge.parquetSchemaOf scaladoc)
-    val firstFile = {
-      val p = java.nio.file.Paths.get(dir)
-      // a single parquet FILE is a valid feed path too (driver testdata
-      // ships events.parquet as one file) — sniff it directly instead of
-      // throwing NotDirectoryException (round-17 ADVICE: the previous
-      // unconditional Files.list silently narrowed the contract)
-      if (!java.nio.file.Files.isDirectory(p)) dir
-      else Staging.listNames(p).map(p.resolve(_).toString)
-        .filter(_.endsWith(".parquet")).minOption
-        .getOrElse(sys.error(s"no parquet feed files under $dir"))
-    }
-    val feedSchema =
-      org.apache.spark.sql.GraftBridge.parquetSchemaOf(spark, firstFile)
+    // source file, or stageFeed writes of one frame shape); a single
+    // parquet FILE is a valid feed path too
+    val feedSchema = FooterSchema.of(spark, dir)
     graft.Tables.normalizeEventTs(
       spark.readStream.schema(feedSchema).parquet(dir))
   }
@@ -396,7 +382,7 @@ object StreamingOps {
           .start()
         try q.processAllAvailable() finally q.stop()
         graft.operators.CacheScope.localCheckpoint(
-          graft.operators.Scans.parquetNoInfer(ns, outDir.toString).filter(col("user_id") >= 0))
+          FooterSchema.read(ns, outDir.toString).filter(col("user_id") >= 0))
       }
     }.orderBy(col("user_id"), col("start_us"))
 
@@ -522,7 +508,7 @@ object StreamingOps {
           eventSchema), "h3")
         runOnce() // phase 2: a NEW query resumes the same checkpoint
         graft.operators.CacheScope.localCheckpoint(
-          graft.operators.Scans.parquetNoInfer(ns, outDir.toString)
+          FooterSchema.read(ns, outDir.toString)
             .filter(col("event_type") =!= "flush"))
       }
     }.orderBy(col("bucket_us"), col("event_type"))
@@ -567,7 +553,7 @@ object StreamingOps {
         .writeStream
         .option("checkpointLocation", cpDir.toString)
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          val cur = current.map(p => graft.operators.Scans.parquetNoInfer(s, p)).getOrElse(base)
+          val cur = current.map(p => FooterSchema.read(s, p)).getOrElse(base)
           val gen = snapRoot.resolve(s"gen-$id").toString
           graft.sources.Merge.mergeToParquet(s, cur, batch, "c_custkey", gen)
           current = Some(gen)
@@ -582,7 +568,7 @@ object StreamingOps {
         q.processAllAvailable()
       } finally q.stop()
       graft.operators.CacheScope.localCheckpoint(
-        current.map(p => graft.operators.Scans.parquetNoInfer(s, p)).getOrElse(base)
+        current.map(p => FooterSchema.read(s, p)).getOrElse(base)
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("c_custkey")).as("n_keys"),
             sum(Relational.dec2(col("c_acctbal"))).cast("double").as("total_bal")))

@@ -89,41 +89,15 @@ object GraftBridge {
       classicDf.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
-  /** One-footer schema sniff on the DRIVER (round 16): Spark's
-    * `spark.read.parquet(path)` inference reads footers through a Spark
-    * JOB even for a single file (~90–160 ms measured via
-    * graft.tools.FloorProbe, vs ~2 ms for a direct footer read). For
-    * paths whose files share one schema by construction (staged stream
-    * feeds), reading the first footer directly answers the same
-    * question without scheduling anything. Prefers the Spark schema
-    * JSON Spark-written files carry in their footer metadata (exact
-    * original StructType); falls back to the same parquet→Catalyst
-    * converter inference uses, built from the session's SQLConf so the
-    * nanos-as-long / NTZ-inference knobs behave identically. Bridged
-    * here because `sessionState` and the converter are `private[sql]`. */
-  def parquetSchemaOf(spark: SparkSession, file: String): types.StructType = {
-    val hconf =
-      spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
-    val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file), hconf),
-      org.apache.parquet.ParquetReadOptions.builder()
-        .withMetadataFilter(org.apache.parquet.format.converter
-          .ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        .build())
-    try {
-      val fmd = fr.getFooter.getFileMetaData
-      Option(fmd.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata")) match {
-        case Some(json) =>
-          types.DataType.fromJson(json).asInstanceOf[types.StructType]
-        case None =>
-          new execution.datasources.parquet.ParquetToSparkSchemaConverter(
-            spark.asInstanceOf[classic.SparkSession].sessionState.conf)
-            .convert(fmd.getSchema)
-      }
-    } finally fr.close()
-  }
+  /** A parquet footer's schema through the session's parquet-to-Catalyst
+    * converter, the one Spark's schema inference uses, so the reader policy
+    * (`nanosAsLong`, NTZ inference) applies alike. Bridged because
+    * `sessionState` and the converter are `private[sql]`. */
+  def convertParquetSchema(spark: SparkSession,
+      footer: org.apache.parquet.hadoop.metadata.FileMetaData): types.StructType =
+    new execution.datasources.parquet.ParquetToSparkSchemaConverter(
+      spark.asInstanceOf[classic.SparkSession].sessionState.conf)
+      .convert(footer.getSchema)
 
   /** Apply an extensions installer's function registrations to a LIVE
     * session (normally done at build time via `spark.sql.extensions`).

@@ -111,4 +111,15 @@ class SessionSpec extends AnyFunSuite {
       "list directories with graft.sources.Staging.listNames: a Files.list stream " +
         "holds a directory file descriptor until it is closed")
   }
+
+  test("lint: one parquet footer open (PhysicalFormat.reader), no inference switch") {
+    val open = ("ParquetFileReader" + "\\.open\\(").r
+    val opens = Seq("src/main").map(Paths.get(_)).flatMap(scalaFiles)
+      .flatMap(f => open.findAllIn(Files.readString(f)).map(_ => f.toString))
+    assert(opens.size == 1 && opens.head.endsWith("graft/sources/PhysicalFormat.scala"),
+      s"open parquet footers through graft.sources.FooterSchema.footer: $opens")
+    val gone = ("SPARK_GRAFT_" + "NO_INFER|parquet" + "NoInfer|sniff" + "Parquet").r
+    assert(offenders(Seq("src/main"), gone).isEmpty,
+      "read parquet without inference through graft.sources.FooterSchema")
+  }
 }
