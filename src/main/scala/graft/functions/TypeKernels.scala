@@ -24,6 +24,19 @@ object TypeKernels {
         lit("re-run with a larger --column-length-limit"))))
       .otherwise(c)
 
+  /** Fixed BINARY(n) semantics (reference binary.rs:32-89): each value is
+    * zero-padded to n bytes, and a longer value is a contract violation
+    * and errors. The sink pads before its encoder writes the column as
+    * FIXED_LEN_BYTE_ARRAY(n): parquet-mr's FLBA dictionary and delta
+    * writers take a value of any length and would corrupt the file. The
+    * result is null exactly where `c` is; the closing `coalesce` tells the
+    * planner so, and a NOT NULL column stays a required parquet column. */
+  def padFixedBinary(c: Column, name: String, n: Int): Column =
+    coalesce(when(octet_length(c) > n,
+      raise_error(concat(lit(s"fixed BINARY($n) column '$name' received "),
+        octet_length(c).cast("string"), lit(" bytes"))))
+      .otherwise(rpad(c, n, Array[Byte](0))), c)
+
   /** Lossy UTF-8 sanitation (reference text.rs:148-163): decoding invalid
     * bytes yields U+FFFD replacement chars rather than failing the fetch
     * (JVM String REPLACE mode == Rust from_utf8_lossy; Spark's builtin

@@ -29,10 +29,14 @@ import scala.collection.mutable.ArrayBuffer
   *    (k = the session's parallelism), shared by every reading task, and
   *    is written as its own one-row-group part
   *    `part-<partition>-<seq>.parquet`. The encoder is the writer Spark's
-  *    `ParquetFileFormat.prepareWrite` returns, configured exactly as
-  *    `df.write.options(options).parquet(dir)` would be, so codec, level,
-  *    writer version, dictionary settings, timestamp type and Spark's
-  *    footer key-value metadata are the ones `df.write` gives.
+  *    `ParquetFileFormat.prepareWrite` returns for `options`, so codec,
+  *    level, writer version, dictionary settings and Spark's footer
+  *    key-value metadata are the ones `df.write.options(options)` gives.
+  *    The options are then set on the write's job over the entries
+  *    `prepareWrite` takes from the session, so a caller picks the
+  *    timestamp type and the write support (the sink's fidelity writer,
+  *    [[PhysicalFormat.FidelityWriteSupport]]) without touching the shared
+  *    session conf.
   *  - Backpressure: the pool holds k slots, one per encoder; a reader with
   *    a full batch blocks until a slot frees. At most k batches wait or
   *    encode per JVM, plus the one each reading task is filling: k + 1
@@ -83,7 +87,9 @@ object EncoderPool {
 
   /** Write `df` into `dir` as one-row-group parts of at most `batchRows`
     * rows, named so that sorting by (partition, seq) gives source order.
-    * `options` are `df.write` options (codec, `parquet.*` keys). When the
+    * `options` are `df.write` options (codec, `parquet.*` keys) and Hadoop
+    * entries that override `prepareWrite`'s (`parquet.write.support.class`,
+    * `spark.sql.parquet.outputTimestampType`). When the
     * result has no rows and `emptyFile` is set, one zero-row part is
     * written (the schema-only file). Logs one INFO line (visible with
     * `-v`): batches, encoders, and the seconds readers spent blocked on
@@ -96,6 +102,7 @@ object EncoderPool {
     val schema = df.schema
     val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(options))
     val factory = new ParquetFileFormat().prepareWrite(spark, job, CaseInsensitiveMap(options), schema)
+    options.foreach { case (k, v) => job.getConfiguration.set(k, v) }
     val conf = sc.broadcast(new SerializableConfiguration(job.getConfiguration))
     val k = sc.defaultParallelism
     val blocked = sc.longAccumulator("graft.parquetSink.readerBlockedNanos")

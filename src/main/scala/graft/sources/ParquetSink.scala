@@ -1,7 +1,9 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.spark.sql.DataFrame
+import graft.functions.{TypeKernels, TypeMapping}
 import scala.jdk.CollectionConverters._
 
 /** Parquet sink with the reference CLI's output contract.
@@ -28,23 +30,26 @@ import scala.jdk.CollectionConverters._
   * safety). At most k batches wait or encode per JVM, plus the one each
   * reading task fills: about k+1 batches of memory for a one-partition
   * source. The source's partitioning is kept and parts sort by (partition,
-  * batch), so an ORDER BY result lands in order. The post-pass runs on the
-  * driver with no Spark job. It reads the parts' footers once and bins
-  * their row groups with the reference's rule: a file ends after the row
-  * group that makes it hold `--row-groups-per-file` row groups or reach
-  * `--file-size-threshold` compressed bytes. A bin that is one whole part
-  * needing no fidelity retype is RENAMED; any other final file is written
-  * once by [[PhysicalFormat.assembleSlices]], which appends the bin's row
-  * groups as raw column chunks and re-encodes only BINARY → FLBA(n)
-  * columns. Output files therefore keep the parts' row groups, codec,
-  * level, writer version, dictionary choices, page indexes and footer
-  * key-value metadata. One deviation remains: every task's last row group
-  * may hold less than a batch, where the reference's single fetch loop
-  * leaves only the result's last batch short, so a source with several
-  * partitions can give more files than the reference. The non-split
-  * single-file mode and stdout read through one task (`coalesce(1)`), like
-  * the reference's single fetch loop, and still encode on k cores; an
-  * empty result's schema-only file is the encoder's zero-row part.
+  * batch), so an ORDER BY result lands in order. The encoder writes the
+  * fidelity types itself ([[PhysicalFormat.FidelityWriteSupport]]:
+  * FLBA(n) with values padded to n before it, TIME annotations), so every
+  * part already has its final column types. The post-pass runs on the
+  * driver with no Spark job and only cuts files. It reads the parts'
+  * footers once and bins their row groups with the reference's rule: a
+  * file ends after the row group that makes it hold `--row-groups-per-file`
+  * row groups or reach `--file-size-threshold` compressed bytes. A bin that
+  * is one whole part is RENAMED; any other final file is written once by
+  * [[PhysicalFormat.assembleSlices]], which appends the bin's row groups as
+  * raw column chunks. Output files therefore keep the parts' row groups,
+  * codec, level, writer version, dictionary choices, page indexes and
+  * footer key-value metadata. One deviation remains: every task's last row
+  * group may hold less than a batch, where the reference's single fetch
+  * loop leaves only the result's last batch short, so a source with
+  * several partitions can give more files than the reference. The
+  * non-split single-file mode and stdout read through one task
+  * (`coalesce(1)`), like the reference's single fetch loop, and still
+  * encode on k cores; an empty result's schema-only file is the encoder's
+  * zero-row part.
   *
   * Every file write logs one INFO line (visible with `-v`) with what the
   * reference logs: batch rows, estimated bytes per row, files, row groups
@@ -73,14 +78,9 @@ object ParquetSink {
         * only through the dictionary switch, and only the v1 writer honors
         * it (v2 always picks delta encodings) */
       columnDictionary: Map[String, Boolean] = Map.empty,
-      /** hive-style partition columns (beyond-reference, the 100 TB layout
-        * knob): output becomes a directory tree `col=value/…` and scans
-        * with a predicate on these columns prune whole partitions. Mutually
-        * exclusive with exact-file naming/splitting. */
-      partitionByCols: Seq[String] = Seq.empty,
-      /** the [[PhysicalFormat]] fidelity pass (FLBA(n) + parquet TIME
-        * annotations, reference parity). TRADE-OFF, pinned in FooterSpec:
-        * Spark's own reader rejects TIME-annotated columns
+      /** [[PhysicalFormat]] fidelity: the encoder writes FLBA(n) and parquet
+        * TIME annotations (reference parity). TRADE-OFF, pinned in
+        * FooterSpec: Spark's own reader rejects TIME-annotated columns
         * (PARQUET_TYPE_ILLEGAL) — exactly as it rejects the reference's
         * output — while DuckDB reads them as first-class TIME. Turn OFF
         * (CLI `--no-physical-fidelity`) when downstream is Spark: values
@@ -98,41 +98,17 @@ object ParquetSink {
     val ts = schema.fields.filter(f =>
       f.dataType == TimestampType || f.dataType == TimestampNTZType)
     ts.nonEmpty && ts.forall(f =>
-      f.metadata.contains(graft.functions.TypeMapping.TimestampUnitKey) &&
-        f.metadata.getString(graft.functions.TypeMapping.TimestampUnitKey) == "millis")
+      f.metadata.contains(TypeMapping.TimestampUnitKey) &&
+        f.metadata.getString(TypeMapping.TimestampUnitKey) == "millis")
   }
 
   /** Write `df` to `outPath` (a file path like `out.par`, or `-` for
     * stdout). Returns the list of files written, in order. */
   def write(df: DataFrame, outPath: String, opts: Options = Options()): Seq[Path] = {
-    // never write deprecated INT96 (Spark's legacy default for TimestampType)
-    // — the reference always writes annotated INT64 (timestamp_precision.rs)
-    val unit = if (allTimestampsMillis(df.schema)) "TIMESTAMP_MILLIS" else "TIMESTAMP_MICROS"
-    val conf = df.sparkSession.conf
-    val prevUnit = conf.getOption("spark.sql.parquet.outputTimestampType")
-    conf.set("spark.sql.parquet.outputTimestampType", unit)
-    try writeInner(df, outPath, opts)
-    finally prevUnit match {
-      case Some(v) => conf.set("spark.sql.parquet.outputTimestampType", v)
-      case None => conf.unset("spark.sql.parquet.outputTimestampType")
-    }
-  }
-
-  private def writeInner(df: DataFrame, outPath: String, opts: Options): Seq[Path] = {
     val split = opts.rowGroupsPerFile > 0 || opts.fileSizeThresholdBytes > 0
     require(outPath != "-" || !split,
       "splitting into multiple files is not possible with stdout output" +
         " (reference main.rs:295-311)")
-    if (opts.partitionByCols.nonEmpty) {
-      require(!split && outPath != "-",
-        "partitioned output is a directory tree; splitting/stdout do not apply")
-      df.write.mode("overwrite")
-        .option("compression", opts.compression)
-        .partitionBy(opts.partitionByCols: _*)
-        .parquet(outPath)
-      return Seq(Paths.get(outPath))
-    }
-
     // stage NEXT TO the destination, not in java.io.tmpdir: the post-pass
     // promotes files with Files.move, which is only a metadata rename when
     // source and target share a filesystem — a /tmp staging dir would turn
@@ -146,19 +122,34 @@ object ParquetSink {
   /** The sink's write and post-pass inside its staging dir `staging`. */
   private def writeStaged(df: DataFrame, outPath: String, opts: Options,
       split: Boolean, staging: Path): Seq[Path] = {
+    val fidelity = opts.physicalFidelity && PhysicalFormat.needed(df.schema)
     val options = Map(
       "compression" -> opts.compression,
       // PARQUET_2_0 writer parity by default (reference parquet_writer.rs:45-47)
       "parquet.writer.version" -> opts.writerVersion,
       // one fetch batch == one row group, whatever its bytes
       "parquet.block.row.count.limit" -> opts.batchRows.toString,
-      "parquet.dictionary.page.size" -> PhysicalFormat.DictionaryPageSize.toString) ++
+      "parquet.dictionary.page.size" -> PhysicalFormat.DictionaryPageSize.toString,
+      // never write deprecated INT96 (Spark's legacy default for
+      // TimestampType) — the reference always writes annotated INT64
+      // (timestamp_precision.rs); set on this write's job, not the session
+      "spark.sql.parquet.outputTimestampType" ->
+        (if (allTimestampsMillis(df.schema)) "TIMESTAMP_MILLIS" else "TIMESTAMP_MICROS")) ++
       opts.compressionLevel.map(l => "parquet.compression.codec.zstd.level" -> l.toString) ++
-      opts.columnDictionary.map { case (c, on) => s"parquet.enable.dictionary#$c" -> on.toString }
+      opts.columnDictionary.map { case (c, on) => s"parquet.enable.dictionary#$c" -> on.toString } ++
+      Option.when(fidelity)(
+        ParquetOutputFormat.WRITE_SUPPORT_CLASS -> classOf[PhysicalFormat.FidelityWriteSupport].getName)
+    // fixed BINARY(n) values reach the FLBA(n) writer padded to n
+    val source = if (!fidelity) df else df.select(df.schema.fields.toIndexedSeq.map { f =>
+      val c = GraftLakeRelation.quoted(f.name)
+      if (!f.metadata.contains(TypeMapping.FixedLenKey)) c
+      else TypeKernels.padFixedBinary(c, f.name,
+        f.metadata.getLong(TypeMapping.FixedLenKey).toInt).as(f.name, f.metadata)
+    }: _*)
     // one part per batch, named by (partition, seq), so parts sort in the
     // source's order and an ORDER BY result stays in order
     val started = System.nanoTime()
-    EncoderPool.write(if (split) df else df.coalesce(1), staging, options,
+    EncoderPool.write(if (split) source else source.coalesce(1), staging, options,
       opts.batchRows, emptyFile = !opts.noEmptyFile)
     val sparkDone = System.nanoTime()
 
@@ -183,23 +174,17 @@ object ParquetSink {
 
     // one pass per FINAL file, after the parallel write and before the
     // destination rename — so a crash mid-pass never leaves a half-written
-    // file at the destination path: the bin's row groups are appended as
-    // raw column chunks under the fidelity footer (FLBA(n) / TIME
-    // annotations — see [[PhysicalFormat]]); a bin that is one whole part
-    // needing no retype is renamed
-    val retype = opts.physicalFidelity && PhysicalFormat.needed(df.schema)
-    val encoding = PhysicalFormat.Encoding(opts.compression, opts.compressionLevel,
-      opts.writerVersion, opts.columnDictionary)
+    // file at the destination path: a bin that is one whole part is
+    // renamed, any other is its row groups appended as raw column chunks
     var bytes = 0L
     def finalFile(bin: Seq[RowGroup], n: Int): Path = {
       // an empty bin is the schema-only file: the pipeline's zero-row part
       val slices = if (bin.nonEmpty) sliced(bin) else Seq(PhysicalFormat.Slice(parts.head, 0 until 0))
       val file = slices match {
-        case Seq(s) if !retype && s.rowGroups.size == groupCount.getOrElse(s.file, 0) => s.file
+        case Seq(s) if s.rowGroups.size == groupCount.getOrElse(s.file, 0) => s.file
         case _ =>
           val out = staging.resolve(s"final-$n.parquet")
-          PhysicalFormat.assembleSlices(slices, out,
-            if (retype) PhysicalFormat.targetType(_, df.schema) else identity, encoding)
+          PhysicalFormat.assembleSlices(slices, out, identity)
           out
       }
       bytes += Files.size(file)

@@ -4,24 +4,24 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.concurrent.TimeUnit
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.ParquetReadOptions
-import org.apache.parquet.column.{ColumnDescriptor, ParquetProperties}
-import org.apache.parquet.column.impl.ColumnReadStoreImpl
-import org.apache.parquet.hadoop.metadata.{CompressionCodecName, FileMetaData}
-import org.apache.parquet.hadoop.{CodecFactory, ColumnChunkPageWriteStore, ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.FileMetaData
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.io.{DelegatingSeekableInputStream, InputFile, LocalOutputFile, SeekableInputStream}
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.functions.TypeMapping
 import scala.jdk.CollectionConverters._
 
-/** Physical-format fidelity pass for the two parquet annotations Spark's
-  * writer cannot emit (closing the last two signed-off deviations):
+/** Physical-format fidelity for the two parquet types Spark's writer does
+  * not choose on its own (closing the last two signed-off deviations):
   *
   *  - BINARY(n) → FIXED_LEN_BYTE_ARRAY(n) (reference binary.rs:32-89).
-  *    Spark writes BinaryType as BYTE_ARRAY only; columns tagged
-  *    `graft.binary.fixedLength` are rewritten to physical FLBA(n), values
+  *    Spark declares BinaryType as BYTE_ARRAY; columns tagged
+  *    `graft.binary.fixedLength` are written as physical FLBA(n), values
   *    zero-padded to the declared width (ODBC fixed BINARY semantics: the
   *    driver pads to n — a longer value is a contract violation and errors).
   *  - TIME columns → parquet TIME(MILLIS|MICROS|NANOS, utc=false) logical
@@ -30,19 +30,18 @@ import scala.jdk.CollectionConverters._
   *    so the values travel as ints tagged `graft.time.unit`; the annotation
   *    makes the FILE self-describing for non-graft readers.
   *
-  * Mechanics: [[assembleSlices]] writes one file from row-group ranges of N
-  * Spark-written files ([[assemble]]: their whole files) under a target
-  * MessageType, row group by row group, at the column-chunk level.
-  * A column whose physical type stays (every TIME annotate or strip, every
-  * untagged column) is copied as its raw compressed chunk — pages,
-  * dictionary, statistics, column and offset index — so only the footer
-  * changes. Only a BINARY → FLBA(n) column is decoded and re-encoded, one
-  * chunk at a time. The output keeps the inputs' row groups exactly (one
-  * per fetch batch, like the reference's writer), their codec, encodings
-  * and footer key-value metadata. The sink runs it once per FINAL output
-  * file, cutting a split file's row groups from the parts in the same
-  * pass; graft's own read paths run it to strip TIME annotations
-  * ([[readSparkCompatible]]).
+  * Like the reference's per-column strategy, the type is chosen once, by
+  * the encoder: the CLI sink writes every part through
+  * [[FidelityWriteSupport]], which declares [[targetType]] in place of
+  * Spark's own schema. [[assembleSlices]] only cuts and copies: it writes
+  * one file from row-group ranges of N parquet files ([[assemble]]: their
+  * whole files), appending every column chunk raw — pages, dictionary,
+  * statistics, column and offset index — under a footer whose annotations
+  * may change but whose physical types may not. The output keeps the
+  * inputs' row groups exactly (one per fetch batch, like the reference's
+  * writer), their codec, encodings and footer key-value metadata. The sink
+  * runs it for each final file that is not one whole part; graft's own
+  * read paths run it to strip TIME annotations ([[readSparkCompatible]]).
   */
 object PhysicalFormat {
 
@@ -53,9 +52,9 @@ object PhysicalFormat {
         f.metadata.contains(TypeMapping.TimeUnitKey))
 
   /** parquet-mr's dictionary cap (`parquet.dictionary.page.size`, 1 MiB by
-    * default) for every column chunk the CLI sink encodes: its Spark writer
-    * and [[assemble]]'s BINARY(n) → FLBA re-encode alike. parquet-mr keeps
-    * a dictionary only when dictionary + ids are smaller than the plain
+    * default) for every column chunk the CLI sink's encoder writes, FLBA(n)
+    * and TIME columns included (the post-pass re-encodes none). parquet-mr
+    * keeps a dictionary only when dictionary + ids are smaller than the plain
     * bytes of the chunk's first page, and a page holds at most 20,000 rows
     * (its default row-count limit). A 128 KiB dictionary of ≤ 8-byte values
     * plus its ids always exceeds that, so for int, long, double, date,
@@ -69,24 +68,39 @@ object PhysicalFormat {
     * 64 KiB cap would drop at +15% bytes). */
   val DictionaryPageSize: Int = 128 * 1024
 
-  /** Writer settings for the chunks [[assemble]] re-encodes; raw-copied
-    * chunks keep whatever their input file had. */
-  final case class Encoding(
-      compression: String = "zstd",
-      compressionLevel: Option[Int] = None,
-      writerVersion: String = "v2",
-      columnDictionary: Map[String, Boolean] = Map.empty)
+  /** Spark's parquet write support, declaring the fidelity types itself:
+    * the file schema is [[targetType]] of Spark's own, over the row schema
+    * `prepareWrite` put in the conf (its `graft.*` tags included), and
+    * Spark's value writers fill it. A TIME value is the same INT32/INT64;
+    * a BINARY(n) value must arrive padded to n
+    * ([[graft.functions.TypeKernels.padFixedBinary]]). A retyped footer
+    * drops Spark's stored row schema: it describes the untyped columns,
+    * and Spark would read a TIME column through it as plain ints instead
+    * of rejecting it (the interop contract FooterSpec pins). The sink
+    * selects it through `parquet.write.support.class`. */
+  final class FidelityWriteSupport extends ParquetWriteSupport {
+    override def init(conf: Configuration): WriteSupport.WriteContext = {
+      val own = super.init(conf)
+      val target = targetType(own.getSchema,
+        DataType.fromJson(conf.get(ParquetWriteSupport.SPARK_ROW_SCHEMA)).asInstanceOf[StructType])
+      if (target == own.getSchema) own
+      else new WriteSupport.WriteContext(target,
+        (own.getExtraMetaData.asScala.toMap - FooterSchema.SparkSchemaKey).asJava)
+    }
+  }
 
-  /** Rewrite `file` in place so tagged columns carry the faithful physical
-    * type / logical annotation. No-op when [[needed]] is false. Row groups,
-    * encodings and footer metadata are kept ([[assemble]]). */
+  /** Rewrite `file` in place so TIME-tagged columns carry the parquet TIME
+    * annotation: a footer-only change, every chunk copied raw
+    * ([[assemble]]). No-op when [[needed]] is false. Nothing is
+    * re-encoded, so the encoding arguments are not read; a column tagged
+    * BINARY(n) fails here, since only the sink's encoder writes FLBA(n)
+    * ([[FidelityWriteSupport]]). */
   def rewrite(file: Path, schema: StructType, compression: String,
       compressionLevel: Option[Int], writerVersion: String,
       columnDictionary: Map[String, Boolean] = Map.empty): Unit = {
     if (!needed(schema)) return
     val tmp = file.resolveSibling("." + file.getFileName.toString + ".fidelity")
-    assemble(Seq(file), tmp, targetType(_, schema),
-      Encoding(compression, compressionLevel, writerVersion, columnDictionary))
+    assemble(Seq(file), tmp, targetType(_, schema))
     Files.move(tmp, file, StandardCopyOption.REPLACE_EXISTING)
   }
 
@@ -96,22 +110,19 @@ object PhysicalFormat {
 
   /** Concatenate every row group of `inputs` into `dest`
     * ([[assembleSlices]]). */
-  def assemble(inputs: Seq[Path], dest: Path, retype: MessageType => MessageType,
-      enc: Encoding = Encoding()): Unit =
-    assembleSlices(inputs.map(Slice(_)), dest, retype, enc)
+  def assemble(inputs: Seq[Path], dest: Path, retype: MessageType => MessageType): Unit =
+    assembleSlices(inputs.map(Slice(_)), dest, retype)
 
   /** Concatenate the sliced row groups of `slices`, in order (one schema,
     * flat primitive columns — the CLI's schema surface, SURVEY §1.1) into
-    * `dest` under `retype(input schema)`. A column whose physical type is
-    * unchanged is appended as its raw chunk; BYTE_ARRAY →
-    * FIXED_LEN_BYTE_ARRAY(n) is re-encoded with values zero-padded to n, a
-    * longer value an error. The footer carries the first input's key-value
-    * metadata — less Spark's stored row schema when the footer is retyped:
-    * that schema describes the inputs, and Spark would read a TIME column
-    * through it as plain ints instead of rejecting it (the interop contract
-    * FooterSpec pins). */
+    * `dest` under `retype(input schema)`. Every column chunk is appended
+    * raw — pages, dictionary, statistics, column and offset index — so
+    * `retype` may change annotations only; a change of physical type is an
+    * error. The footer carries the first input's key-value metadata, less
+    * Spark's stored row schema when the footer is retyped
+    * ([[FidelityWriteSupport]] says why). */
   def assembleSlices(slices: Seq[Slice], dest: Path,
-      retype: MessageType => MessageType, enc: Encoding = Encoding()): Unit = {
+      retype: MessageType => MessageType): Unit = {
     require(slices.nonEmpty, "assemble needs at least one input file")
     val inputs = slices.map(_.file)
     val readers = inputs.map(reader)
@@ -123,103 +134,42 @@ object PhysicalFormat {
           s"$p has a different schema than ${inputs.head}")
       }
       val target = retype(src)
-      val retyped = src.getColumns.asScala.zip(target.getColumns.asScala).collect {
-        case (s, t) if s.getPrimitiveType.getPrimitiveTypeName !=
-            t.getPrimitiveType.getPrimitiveTypeName =>
-          require(s.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.BINARY &&
-            t.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY,
-            s"cannot retype ${s.getPrimitiveType} to ${t.getPrimitiveType}")
-          s.getPath.toSeq -> t
-      }.toMap
-      val props = properties(enc)
+      src.getColumns.asScala.zip(target.getColumns.asScala).foreach { case (s, t) =>
+        val (from, to) = (s.getPrimitiveType, t.getPrimitiveType)
+        require(from.getPrimitiveTypeName == to.getPrimitiveTypeName &&
+          from.getTypeLength == to.getTypeLength,
+          s"cannot retype $from to $to: assemble copies column chunks raw")
+      }
       // row groups arrive whole, so the writer's row-group size and padding
       // never apply
       val writer = new ParquetFileWriter(new LocalOutputFile(dest), target,
         ParquetFileWriter.Mode.OVERWRITE, ParquetProperties.DEFAULT_PAGE_SIZE.toLong, 0,
-        null, props)
-      val codecs = new CodecFactory(zstdConf(enc), props.getPageSizeThreshold)
+        null, ParquetProperties.builder().build())
       try {
         writer.start()
         readers.zip(slices).foreach { case (r, slice) =>
-          if (retyped.nonEmpty)
-            r.setRequestedSchema(new MessageType(src.getName,
-              src.getFields.asScala.filter(f => retyped.contains(Seq(f.getName))).asJava))
           val stream = inputFile(slice.file).newStream()
-          try r.getRowGroups.asScala.zipWithIndex.filter(g => slice.rowGroups.contains(g._2))
-              .foreach { case (block, bi) =>
-            lazy val decoded = new ColumnReadStoreImpl(r.readRowGroup(bi), NoConverter,
-              src, r.getFileMetaData.getCreatedBy)
+          try r.getRowGroups.asScala.zipWithIndex
+              .collect { case (block, i) if slice.rowGroups.contains(i) => block }.foreach { block =>
             writer.startBlock(block.getRowCount)
             block.getColumns.asScala.foreach { chunk =>
-              val path = chunk.getPath.toArray
-              retyped.get(path.toSeq) match {
-                case None =>
-                  writer.appendColumnChunk(target.getColumnDescription(path), stream,
-                    chunk, r.readBloomFilter(chunk), r.readColumnIndex(chunk),
-                    r.readOffsetIndex(chunk))
-                case Some(t) =>
-                  padChunk(decoded.getColumnReader(src.getColumnDescription(path)),
-                    t, block.getRowCount, codecs.getCompressor(codec(enc.compression)),
-                    props, writer)
-              }
+              writer.appendColumnChunk(target.getColumnDescription(chunk.getPath.toArray),
+                stream, chunk, r.readBloomFilter(chunk), r.readColumnIndex(chunk),
+                r.readOffsetIndex(chunk))
             }
             writer.endBlock()
           } finally stream.close()
         }
         writer.end(
           if (target == src) meta.getKeyValueMetaData
-          else (meta.getKeyValueMetaData.asScala - FooterSchema.SparkSchemaKey).asJava)
+          else (meta.getKeyValueMetaData.asScala.toMap - FooterSchema.SparkSchemaKey).asJava)
       } catch {
         case e: Throwable =>
           writer.close()
           Files.deleteIfExists(dest)
           throw e
-      } finally codecs.release()
+      }
     } finally readers.foreach(_.close())
-  }
-
-  /** Re-encode one BYTE_ARRAY chunk as FIXED_LEN_BYTE_ARRAY(n) into the
-    * writer's open row group, zero-padding each value to n. */
-  private def padChunk(reader: org.apache.parquet.column.ColumnReader,
-      target: ColumnDescriptor, rows: Long,
-      compressor: CodecFactory.BytesCompressor, props: ParquetProperties,
-      writer: ParquetFileWriter): Unit = {
-    val prim = target.getPrimitiveType
-    val schema = new MessageType("chunk", prim)
-    val pageStore = new ColumnChunkPageWriteStore(compressor, schema,
-      props.getAllocator, props.getColumnIndexTruncateLength,
-      props.getPageWriteChecksumEnabled)
-    val columns = props.newColumnWriteStore(schema, pageStore)
-    val out = columns.getColumnWriter(target)
-    val width = prim.getTypeLength
-    val maxDef = target.getMaxDefinitionLevel
-    var i = 0L
-    while (i < rows) {
-      val d = reader.getCurrentDefinitionLevel
-      if (d == maxDef) {
-        val raw = reader.getBinary.getBytes
-        require(raw.length <= width,
-          s"fixed BINARY($width) column '${prim.getName}' received ${raw.length} bytes")
-        out.write(Binary.fromConstantByteArray(
-          if (raw.length == width) raw else java.util.Arrays.copyOf(raw, width)), 0, d)
-      } else out.writeNull(0, d)
-      reader.consume()
-      columns.endRecord()
-      i += 1
-    }
-    columns.flush()
-    pageStore.flushToFileWriter(writer)
-    columns.close()
-    pageStore.close()
-  }
-
-  /** The column reader needs a record converter to exist; the assembler
-    * pulls values straight from the reader and never materializes. */
-  private object NoConverter extends GroupConverter {
-    private val primitive = new PrimitiveConverter {}
-    def getConverter(fieldIndex: Int): Converter = primitive
-    def start(): Unit = ()
-    def end(): Unit = ()
   }
 
   /** A local file as a parquet InputFile whose stream reads through a
@@ -244,22 +194,6 @@ object PhysicalFormat {
 
   /** A reader of the local parquet file `p` ([[inputFile]]). */
   private[sources] def reader(p: Path): ParquetFileReader = ParquetFileReader.open(inputFile(p), ReadOptions)
-
-  private def properties(enc: Encoding): ParquetProperties = {
-    val b = ParquetProperties.builder().withWriterVersion(
-      if (enc.writerVersion == "v1") ParquetProperties.WriterVersion.PARQUET_1_0
-      else ParquetProperties.WriterVersion.PARQUET_2_0)
-      .withDictionaryPageSize(DictionaryPageSize)
-    enc.columnDictionary.foreach { case (c, on) => b.withDictionaryEncoding(c, on) }
-    b.build()
-  }
-
-  private def zstdConf(enc: Encoding): Configuration = {
-    val conf = new Configuration(false)
-    enc.compressionLevel.foreach(l =>
-      conf.setInt("parquet.compression.codec.zstd.level", l))
-    conf
-  }
 
   /** One TIME-stripped copy per source file, keyed by absolute path and
     * replaced (the old copy deleted) when the source's length or mtime
@@ -383,21 +317,5 @@ object PhysicalFormat {
       }
     }
     new MessageType(src.getName, fields.asJava)
-  }
-
-  /** Spark's parquet codec vocabulary, mapped 1:1 — an unknown name is an
-    * ERROR, never a silent substitution (a re-encoded chunk must carry
-    * exactly the codec the caller asked the sink for). */
-  private def codec(name: String): CompressionCodecName = name.toLowerCase match {
-    case "zstd" => CompressionCodecName.ZSTD
-    case "snappy" => CompressionCodecName.SNAPPY
-    case "gzip" => CompressionCodecName.GZIP
-    case "lz4" => CompressionCodecName.LZ4
-    case "lz4raw" | "lz4_raw" => CompressionCodecName.LZ4_RAW
-    case "brotli" => CompressionCodecName.BROTLI
-    case "lzo" => CompressionCodecName.LZO
-    case "none" | "uncompressed" => CompressionCodecName.UNCOMPRESSED
-    case other => throw new IllegalArgumentException(
-      s"unsupported compression codec for the fidelity re-encode: $other")
   }
 }

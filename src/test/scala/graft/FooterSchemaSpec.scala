@@ -110,11 +110,17 @@ class FooterSchemaSpec extends AnyFunSuite {
   test("a footer without Spark's row schema converts under the pinned nanosAsLong policy") {
     import spark.implicits._
     withDir { root =>
+      // the sink's encoder writes key as FLBA(4)
       val src = root.resolve("src.parquet")
-      writeOnePart(Seq((1L, 1700000000123456789L, Array[Byte](1, 2)), (2L, 5L, Array[Byte](3)))
-        .toDF("id", "ns", "key"), src)
-      // retype: ns becomes TIMESTAMP(NANOS), key FLBA(4); the footer drops
-      // Spark's stored row schema
+      val fixed4 = new org.apache.spark.sql.types.MetadataBuilder()
+        .putLong(graft.functions.TypeMapping.FixedLenKey, 4L).build()
+      ParquetSink.write(Seq((1L, 1700000000123456789L, Array[Byte](1, 2)), (2L, 5L, Array[Byte](3)))
+        .toDF("id", "ns", "key").select(col("id"), col("ns"), col("key").as("key", fixed4)),
+        src.toString)
+      assert(FooterSchema.footer(src).getFileMetaData.getSchema.getType(Seq("key"): _*)
+        .asPrimitiveType().getPrimitiveTypeName == PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY)
+      // retype: ns becomes TIMESTAMP(NANOS); the footer drops Spark's
+      // stored row schema
       val dest = root.resolve("retyped.parquet")
       PhysicalFormat.assemble(Seq(src), dest, m => new MessageType(m.getName,
         m.getFields.asScala.toSeq.map { f =>
@@ -122,8 +128,6 @@ class FooterSchemaSpec extends AnyFunSuite {
             case "ns" => Types.primitive(PrimitiveTypeName.INT64, f.getRepetition)
               .as(LogicalTypeAnnotation.timestampType(true,
                 LogicalTypeAnnotation.TimeUnit.NANOS)).named("ns")
-            case "key" => Types.primitive(PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY,
-              f.getRepetition).length(4).named("key")
             case _ => f
           }
         }.asJava))

@@ -84,6 +84,34 @@ class FooterSpec extends AnyFunSuite {
       .forall(_ != "TIMESTAMP_MILLIS"))
   }
 
+  test("the sink sets its timestamp unit on the write's job, not on the session") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.functions.TypeMapping
+    val key = "spark.sql.parquet.outputTimestampType"
+    // the session conf as a task of the write sees it
+    val seen = udf(() => org.apache.spark.sql.internal.SQLConf.get.getConfString(key, "unset"))
+      .asNondeterministic()
+    val millis = new MetadataBuilder().putString(TypeMapping.TimestampUnitKey, "millis").build()
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(java.sql.Timestamp.valueOf("2024-01-02 03:04:05.678")))),
+      StructType(Seq(StructField("ts", TimestampType, nullable = true, millis))))
+      .select(col("ts"), seen().as("seen"))
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "INT96")
+    try {
+      val out = Files.createTempDirectory("graft-footer").resolve("unit.par")
+      ParquetSink.write(df, out.toString, ParquetSink.Options())
+      assert(primitive(out, "ts").getLogicalTypeAnnotation.toString.contains("MILLIS"))
+      val during = spark.read.parquet(out.toString).collect().map(_.getString(1)).toSeq
+      assert(during == Seq("INT96"), s"the write changed the session's $key: $during")
+      assert(spark.conf.get(key) == "INT96")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("decimal physical encodings: INT32 (p<=9), INT64 (p<=18), FLBA i128 (p<=38)") {
     // backs k1_decimal_cast's kernel claim (reference decimal.rs:42-124 split)
     val out = Files.createTempDirectory("graft-footer").resolve("dec.par")
@@ -98,7 +126,7 @@ class FooterSpec extends AnyFunSuite {
   }
 
   test("BINARY(n) writes physical FIXED_LEN_BYTE_ARRAY(n), zero-padded (binary.rs:32-89)") {
-    // the PhysicalFormat fidelity pass closes the former deviation: a
+    // the sink's fidelity encoder closes the former deviation: a
     // FixedLenKey-tagged BinaryType column lands as physical FLBA(n) like
     // the reference; --prefer-varbinary (untagged) keeps BYTE_ARRAY
     import org.apache.spark.sql.Row
@@ -116,7 +144,7 @@ class FooterSpec extends AnyFunSuite {
     val p = primitive(out, "b")
     assert(p.getPrimitiveTypeName.toString == "FIXED_LEN_BYTE_ARRAY")
     assert(p.getTypeLength == 5)
-    // values survive the re-encode; short values are zero-padded to width
+    // values survive the encoder; short values are zero-padded to width
     // (ODBC fixed-BINARY semantics) — Spark reads FLBA back as BinaryType
     val back = spark.read.parquet(out.toString).collect()
       .map(_.getAs[Array[Byte]]("b").toSeq).sortBy(_.mkString)
@@ -395,7 +423,11 @@ class FooterSpec extends AnyFunSuite {
     val parts = Files.list(partsDir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sorted
     val out = Files.createTempDirectory("graft-footer-asm").resolve("one.parquet")
-    PhysicalFormat.assemble(parts, out, PhysicalFormat.targetType(_, df.schema))
+    // the TIME retype only: assemble copies chunks raw, and FLBA(n) is the
+    // encoder's to write
+    val timeOnly = org.apache.spark.sql.types.StructType(df.schema.map(f =>
+      if (f.name == "b") f.copy(metadata = org.apache.spark.sql.types.Metadata.empty) else f))
+    PhysicalFormat.assemble(parts, out, PhysicalFormat.targetType(_, timeOnly))
     assert(rowGroups(out) == parts.flatMap(rowGroups))
     assert(rowGroups(out).size > parts.size, "each part should hold several row groups")
 

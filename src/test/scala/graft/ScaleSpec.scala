@@ -98,8 +98,7 @@ class ScaleSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-part").resolve("orders_by_year")
     val withYear = Tables.orders(spark, sf)
       .withColumn("o_year", year(col("o_orderdate")))
-    graft.sources.ParquetSink.write(withYear, out.toString,
-      graft.sources.ParquetSink.Options(partitionByCols = Seq("o_year")))
+    withYear.write.partitionBy("o_year").parquet(out.toString)
     val scan = spark.read.parquet(out.toString).filter(col("o_year") === 1997)
     val plan = scan.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(o_year"),

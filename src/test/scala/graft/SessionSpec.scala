@@ -122,4 +122,15 @@ class SessionSpec extends AnyFunSuite {
     assert(offenders(Seq("src/main"), gone).isEmpty,
       "read parquet without inference through graft.sources.FooterSchema")
   }
+
+  test("lint: one parquet encoder (the sink's writer), one sink write path") {
+    // a second encoder: a hand-built column writer or a decode for re-encoding
+    val encoder = ("ColumnChunkPage" + "WriteStore|ColumnReadStore" + "Impl|newColumn" + "WriteStore").r
+    assert(offenders(Seq("src/main"), encoder).isEmpty,
+      "write parquet values through the sink's encoder (EncoderPool); the post-pass only copies chunks")
+    val sink = Paths.get("src/main/scala/graft/sources/ParquetSink.scala")
+    assert(Files.isRegularFile(sink), "run from the repository root")
+    assert(!Files.readString(sink).contains("." + "write."),
+      "ParquetSink writes through EncoderPool, not a DataFrameWriter")
+  }
 }

@@ -82,6 +82,59 @@ class SplitPropertySpec extends AnyFunSuite {
     assert(result.passed, result.status.toString)
   }
 
+  /** `rows` rows of an id, a BINARY(8) column of 0..8-byte values (every
+    * tenth NULL) and a TIME(3) column, tagged as the type mapping tags
+    * them. */
+  private def fidelityFrame(rows: Int) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.functions.TypeMapping
+    def field(name: String, t: TypeMapping.SqlType) =
+      TypeMapping.field(TypeMapping.SourceColumn(name, t), TypeMapping.MappingOptions())
+    spark.createDataFrame(spark.sparkContext.parallelize((0 until rows).map { i =>
+      Row(i.toLong, if (i % 10 == 9) null else Array.tabulate[Byte](i % 9)(j => (i + j + 1).toByte),
+        Int.box((i * 7919) % 86400000))
+    }, 3), StructType(Seq(StructField("id", LongType, nullable = false),
+      field("b", TypeMapping.SqlBinary(8)), field("t", TypeMapping.SqlTime(3)))))
+  }
+
+  private def fidelityHolds(l: Layout): Boolean = {
+    val dir = Files.createTempDirectory("graft-split-fidelity")
+    val written = ParquetSink.write(fidelityFrame(l.rows), dir.resolve("out.par").toString,
+      ParquetSink.Options(batchRows = l.batchRows, rowGroupsPerFile = l.rowGroupsPerFile,
+        fileSizeThresholdBytes = l.fileSizeThreshold))
+    written.foreach { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString), new Configuration()))
+      val schema = try r.getFileMetaData.getSchema finally r.close()
+      val b = schema.getType(Seq("b"): _*).asPrimitiveType()
+      assert(b.getPrimitiveTypeName.toString == "FIXED_LEN_BYTE_ARRAY" && b.getTypeLength == 8,
+        s"$l: $f declares $b")
+      assert(schema.getType(Seq("t"): _*).getLogicalTypeAnnotation.toString == "TIME(MILLIS,false)",
+        s"$l: $f declares ${schema.getType(Seq("t"): _*)}")
+    }
+    val back = graft.sources.PhysicalFormat.readSparkCompatible(spark, dir).collect()
+      .map(r => r.getLong(0) -> r).toMap
+    assert(back.size == l.rows, s"$l: ${back.size} rows read back")
+    (0 until l.rows).foreach { i =>
+      val r = back(i.toLong)
+      val expected =
+        if (i % 10 == 9) null else Array.tabulate[Byte](8)(j => if (j < i % 9) (i + j + 1).toByte else 0).toSeq
+      assert(Option(r.getAs[Array[Byte]](1)).map(_.toSeq).orNull == expected, s"$l: row $i")
+      assert(r.getInt(2) == (i * 7919) % 86400000, s"$l: row $i")
+    }
+    true
+  }
+
+  test("fidelity types are the encoder's in every file of generated layouts") {
+    val params = Test.Parameters.default
+      .withInitialSeed(Seed(20261020L))
+      .withMinSuccessfulTests(8)
+      .withWorkers(1)
+    val result = Test.check(params, Prop.forAllNoShrink(layouts)(fidelityHolds))
+    assert(result.passed, result.status.toString)
+  }
+
   test("row-groups-per-file caps a file when a size threshold is also set") {
     // one row group per file under a threshold that would hold seven, and
     // three per file under one that would hold them all

@@ -37,7 +37,7 @@ class StagingSpec extends AnyFunSuite {
   test("a failed non-split ParquetSink write leaves no staging dir and no destination file") {
     import spark.implicits._
     // fidelity on: the fixed BINARY(4) column gets a 5-byte value, which
-    // the FLBA(4) re-encode of the post-pass rejects
+    // the sink rejects before its FLBA(4) encoder
     val tooLong = Seq((1L, Array[Byte](1, 2, 3, 4, 5))).toDF("id", "b")
       .select(col("id"), col("b").as("b",
         new MetadataBuilder().putLong(TypeMapping.FixedLenKey, 4L).build()))
